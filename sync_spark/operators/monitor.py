@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 from datetime import date, datetime
-from typing import Mapping, Optional
+from typing import Mapping, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -151,6 +151,41 @@ def jst_daily_stats(log: DataFrame) -> DataFrame:
     )
 
 
+def write_apply_stats(batch_dir: str, rows: Sequence[tuple]) -> None:
+    """THE writer of the apply-stats format: one ``table=/batch_id=``
+    dir of ``(op, n)`` rows, or ``(op, n, src_batches)`` rows for a
+    compacted dir, as ONE parquet file written driver-side with
+    pyarrow. The rows are a handful of counters the caller already
+    holds, so a Spark write (createDataFrame → parquet: a Python worker
+    round trip and a job) would cost far more than the data.
+
+    The dir is staged under a dot-name, which Spark listings ignore,
+    and swapped in whole, so re-writing a batch's dir — a crash replay,
+    possibly over a dir an older writer filled with differently named
+    part files — replaces its content and can never double-count."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sync_spark.sources.bucketed import _swap_dir
+
+    fields = [("op", pa.string()), ("n", pa.int64()), ("src_batches", pa.int64())]
+    width = len(rows[0]) if rows else 2
+    table = pa.table(
+        {
+            name: pa.array([r[i] for r in rows], type=typ)
+            for i, (name, typ) in enumerate(fields[:width])
+        }
+    )
+    parent, base = os.path.split(batch_dir)
+    stage = os.path.join(parent, f".stage_{base}")
+    shutil.rmtree(stage, ignore_errors=True)
+    os.makedirs(stage)
+    pq.write_table(table, os.path.join(stage, "part-00000.parquet"))
+    _swap_dir(stage, batch_dir)
+
+
 def apply_stats_totals(spark: SparkSession, stats_path: str) -> DataFrame:
     """A6 rollup over the pipeline's per-batch apply counters
     (CdcPipeline stats_path): totals per table per op across all
@@ -222,7 +257,7 @@ def compact_apply_stats(
     {table: folded_dir_count}."""
     import shutil
 
-    from sync_spark.sources.bucketed import _swap_dir, recover_interrupted_swaps
+    from sync_spark.sources.bucketed import recover_interrupted_swaps
 
     out = {}
     if not os.path.isdir(stats_path):
@@ -297,17 +332,14 @@ def compact_apply_stats(
             )
             .collect()
         )
-        stage = os.path.join(troot, f".stats_compact_{below_batch_id}")
         final = os.path.join(troot, f"batch_id=c{below_batch_id:010d}")
-        spark.createDataFrame(
-            [(r["op"], r["n"], r["src_batches"]) for r in rows],
-            "op string, n long, src_batches long",
-        ).coalesce(1).write.mode("overwrite").parquet(stage)
-        # park-then-replace (never delete-then-rename): an existing
-        # target can only arise from unusual manual states given the
-        # self-fold skip above, but if it does, a crash mid-replace
-        # must not lose the folded history
-        _swap_dir(stage, final)
+        # staged, then park-then-replace (never delete-then-rename): an
+        # existing target can only arise from unusual manual states
+        # given the self-fold skip above, but if it does, a crash
+        # mid-replace must not lose the folded history
+        write_apply_stats(
+            final, [(r["op"], r["n"], r["src_batches"]) for r in rows]
+        )
         for entry in folded:
             # a re-run with the SAME cutoff folds the existing c<N>
             # dir into itself — the freshly renamed output must not be

@@ -1115,8 +1115,8 @@ def run_merge_sql(
     whose extra rows produce no action (matched duplicates under an
     insert-only MERGE; duplicates failing a conditional DELETE with
     no UPDATE arm) are deterministic and allowed. The guard is
-    IN-PLAN (an assert on the merge's own touched-keys aggregate, so
-    it costs zero extra jobs) and raises when a returned frame is
+    IN-PLAN (an assert on the per-key aggregate the change set is
+    rebuilt from, so it costs no extra job) and raises when a returned frame is
     evaluated; ``eager_guard=True`` additionally pre-checks with one
     driver-side job and raises ``ValueError`` before returning.
     UPDATE/INSERT arms require the source to carry every target
@@ -1207,11 +1207,10 @@ def run_merge_sql(
         ({"delete"} if del_cond is not None else set())
         | ({"upsert"} if (spec.has_update or spec.has_insert) else set())
     )
-    # SQL:2003 duplicate-key guard, ZERO extra scheduler waves (r8;
-    # r7 still paid one eager collect per statement): the merge needs
-    # the distinct change-key set anyway (anti-join `touched`), so the
-    # guard rides THAT aggregate — a per-key action count with an
-    # in-plan assert_true. The invariant (per ADVICE r7): a key
+    # SQL:2003 duplicate-key guard, riding the per-key aggregate the
+    # change set is rebuilt from (r8; r7 still paid one eager collect
+    # per statement): a per-key action count with an in-plan
+    # assert_true. The invariant (per ADVICE r7): a key
     # producing >= 2 change ACTIONS raises (its apply order would be
     # non-deterministic); duplicate source keys whose extra rows
     # produce <= 1 action (e.g. matched dups under an insert-only
@@ -1222,9 +1221,8 @@ def run_merge_sql(
     # ValueError at the cost of one aggregation job.
     # the aggregate also CARRIES the action row (guard guarantees
     # exactly one per surviving key, so first() is deterministic
-    # everywhere the result is observable), letting the whole merge
-    # evaluate the source join exactly once: upserts and the touched
-    # key set both read this one shuffle (AQE exchange reuse)
+    # everywhere the result is observable), so the merge kernel reads
+    # the change set THROUGH the guard
     non_keys = [c for c in changes.columns if c not in keys]
     key_stats = changes.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("__n"),
@@ -1250,21 +1248,17 @@ def run_merge_sql(
                 f"MERGE source has duplicate keys (e.g. "
                 f"{[dup[0][k] for k in keys]}): non-deterministic per SQL:2003"
             )
-    # guard guarantees <= 1 action per key, so compaction is a no-op:
-    # skip its window sort, rebuild the (already unique) change set
-    # from the guarded aggregate, and hand the kernel its key set
-    # getField, not the string path f"__row.{c}": a column name
-    # containing a dot would misresolve as a nested path (r8 review;
-    # merge.compact_latest_per_key uses the same dot-safe form)
+    # rebuild the (guarded, already unique) change set from the
+    # aggregate; getField, not the string path f"__row.{c}": a column
+    # name containing a dot would misresolve as a nested path (r8
+    # review; merge._unpack uses the same dot-safe form)
     changes_unique = guarded.select(
         *[
             (F.col(c) if c in keys else F.col("__row").getField(c).alias(c))
             for c in changes.columns
         ]
     )
-    new_state = mg.apply_changes(
-        target, changes_unique, keys, compact=False, touched=guarded.select(*keys)
-    )
+    new_state = mg.apply_changes(target, changes_unique, keys)
     # affected counts, lazily, THROUGH the guard (collecting only the
     # counts of a duplicate-key merge must raise too)
     affected = (

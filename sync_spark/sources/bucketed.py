@@ -194,6 +194,15 @@ def check_meta(path: str, keys: Sequence[str], n_buckets: int) -> bool:
     return meta["n_buckets"] == n_buckets and meta["key_cols"] == list(keys)
 
 
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """A zero-row frame of ``schema`` built in the JVM, for schema-only
+    writes: ``createDataFrame([], schema)`` goes through ``parallelize``
+    and so pays a Python worker's start-up on its first action."""
+    return spark.range(0, 0, 1, 1).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
+
+
 def write_bucketed(
     df: DataFrame,
     path: str,
@@ -384,7 +393,7 @@ def overwrite_buckets(
             dst = os.path.join(path, f"{BUCKET_COL}={b}")
             if not os.path.exists(src):
                 # bucket emptied by deletes: stage a schema-only dir
-                spark.createDataFrame([], schema).write.mode("overwrite").parquet(src)
+                empty_frame(spark, schema).write.mode("overwrite").parquet(src)
             _swap_dir(src, dst)
     finally:
         if os.path.exists(stage):
@@ -432,18 +441,21 @@ def _literal_bucket_ids(
         memo_key = None  # unhashable literal (e.g. array key) — skip memo
     if memo_key is not None and memo_key in _literal_bucket_memo:
         return _literal_bucket_memo[memo_key]
-    # one local expression evaluation (createDataFrame of k tuples),
-    # not a table job
-    kv_df = spark.createDataFrame(
+    # one local expression evaluation, not a table job: the key tuples
+    # travel as an Arrow-backed local relation (decoded in the JVM — no
+    # Python worker; data, not literals, so the projection's generated
+    # code is reused across calls), and the ids are deduped here rather
+    # than by a distinct shuffle
+    from sync_spark.operators.localrel import arrow_local_frame
+
+    kv_df = arrow_local_frame(
+        spark,
         [tuple(kv) for kv in key_values],
         ", ".join(f"{k} {key_types[k]}" for k in keys),
     )
-    buckets = [
-        r.b
-        for r in kv_df.select(
-            bucket_expr(keys, n_buckets).alias("b")
-        ).distinct().collect()
-    ]
+    buckets = sorted(
+        {r.b for r in kv_df.select(bucket_expr(keys, n_buckets).alias("b")).collect()}
+    )
     if memo_key is not None:
         if len(_literal_bucket_memo) > 256:
             _literal_bucket_memo.clear()

@@ -8,8 +8,8 @@ Reference parity map:
 - change-stream tail → ``readStream`` on the envelope log; resume
   tokens (T3) → ``checkpointLocation``;
 - per-event apply with latest-wins ordering (T4/W2) →
-  latest-per-key compaction + ``apply_changes`` MERGE per micro-batch,
-  idempotent so at-least-once delivery yields effectively-once;
+  ``apply_changes`` MERGE per micro-batch (the latest change per key
+  wins), idempotent so at-least-once delivery yields effectively-once;
 - **incremental apply cost** — the reference applies row-wise against
   an indexed store (mongodb.go:1184-1235 BulkWrite upsert/delete,
   mysql.go:524-692 UPDATE/DELETE by PK), i.e. O(batch) per batch, not
@@ -31,9 +31,21 @@ over the persisted batch (per-table × per-op counts + touched bucket
 sets via collect_set), and every skip/DLQ/stats decision branches off
 that single collected result — not 2 probe jobs × N tables (the
 round-1 anti-pattern; at the reference's 500-table scale that was
-~1000 scheduler round-trips per trigger). Per non-idle table the only
-further jobs are the merge's staged write (+ a DLQ write when bad
-rows exist).
+~1000 scheduler round-trips per trigger). The per-batch job ledger
+(Spark jobs under the stream's job group, one non-idle table):
+
+- batch summary: 3 (the one aggregate's collect over the persisted
+  batch, as AQE runs it);
+- DLQ write: 1, only when the table has bad rows;
+- apply stats: 0 — the counters come from the summary and are written
+  driver-side with pyarrow (``monitor.write_apply_stats``);
+- schema check: 1 footer read, once per table per pipeline instance;
+- MERGE: 2 — ``apply_changes`` is one per-key argmin over the touched
+  buckets ∪ the changes (one shuffle), then the staged bucket write.
+
+The batch stays persisted: without it every consumer (summary, DLQ,
+MERGE) re-scans the source, and the stream's own ``numInputRows``
+counts each re-scan.
 
 On a deployment with a table format the same ``apply_changes`` plan
 feeds Delta/Iceberg ``MERGE INTO``; the bucketed store is the
@@ -53,10 +65,12 @@ from pyspark.sql import types as T
 
 from sync_spark.functions.security import apply_security_rules
 from sync_spark.operators.merge import DELETE_OP, OP_COL, apply_changes
+from sync_spark.operators.monitor import write_apply_stats
 from sync_spark.sources.bucketed import (
     bucket_expr_vals,
     bucketize_in_place,
     check_meta,
+    empty_frame,
     is_bucketed,
     overwrite_buckets,
     read_buckets,
@@ -432,18 +446,10 @@ class CdcPipeline:
                     continue
                 if self.stats_path is not None:
                     # apply counters come straight from the collected
-                    # summary — a driver-local 2-column frame, not
-                    # another aggregation job over the batch
-                    stats = self.spark.createDataFrame(
+                    # summary, written driver-side: no Spark job
+                    write_apply_stats(
+                        f"{self.stats_path}/table={t.source_table}/batch_id={batch_id}",
                         [(r["op"], r["n"]) for r in applied],
-                        "op string, n long",
-                    )
-                    (
-                        stats.coalesce(1)
-                        .write.mode("overwrite")
-                        .parquet(
-                            f"{self.stats_path}/table={t.source_table}/batch_id={batch_id}"
-                        )
                     )
                 if not applied:
                     continue  # e.g. only ignored deletes: target untouched
@@ -468,7 +474,7 @@ class CdcPipeline:
                     # target instead of dying on PATH_NOT_FOUND at
                     # every checkpoint replay
                     write_bucketed(
-                        self.spark.createDataFrame([], stored_schema),
+                        empty_frame(self.spark, stored_schema),
                         t.target_path,
                         t.key_cols,
                         self.n_buckets,
@@ -597,7 +603,7 @@ class CdcPipeline:
         # bootstrap: first events for a never-snapshotted table
         delta_snapshot_if_empty(
             self.spark,
-            self.spark.createDataFrame([], stored_schema),
+            empty_frame(self.spark, stored_schema),
             t.target_path,
             t.key_cols,
             self.n_buckets,

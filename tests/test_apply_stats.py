@@ -186,3 +186,104 @@ def test_cli_compact_stats_verb(spark, tmp_path, capsys):
     } == before == {("users", "insert"): (6, 3)}
     entries = sorted(os.listdir(f"{stats}/table=users"))
     assert entries == ["batch_id=3", "batch_id=c0000000003"]
+
+
+def test_one_batch_job_budget_and_stats_readback(spark, tmp_path):
+    """One 500-event micro-batch into one bucketed table, DLQ and stats
+    on, runs at most 7 Spark jobs under the stream's job group (batch
+    summary 3, DLQ write 1, the once-per-table schema check 1, MERGE
+    shuffle + staged write 2; the stats write runs none), reports
+    numInputRows == 500, and its stats rows read back equal to the
+    summary's applied counts."""
+    from sync_spark.sources.bucketed import read_target
+
+    tgt = str(tmp_path / "t")
+    snapshot_if_empty(
+        spark,
+        spark.createDataFrame([Row(id=i, v=f"s{i}") for i in range(2000)], SCHEMA),
+        tgt,
+        key_cols=["id"],
+    )
+    events, want = [], {}
+    for seq in range(1, 501):
+        key = None if seq % 50 == 7 else (seq * 7) % 3000  # 10 null-key events
+        op = "delete" if seq % 5 == 0 else ("insert" if key is not None and key >= 2000 else "update")
+        events.append(
+            {
+                "op": op,
+                "seq": seq,
+                "ts": "2024-01-01T00:00:00Z",
+                "source_table": "users",
+                "key_json": json.dumps({"id": key}),
+                "after_json": None if op == "delete" else json.dumps({"id": key, "v": f"x{seq}"}),
+            }
+        )
+        if key is not None:
+            want[op] = want.get(op, 0) + 1
+    write_event_batch(str(tmp_path / "ev"), events, 1)
+
+    seen = {}
+
+    class Recorded(CdcPipeline):
+        def _batch_summary(self, batch):
+            seen["summary"] = super()._batch_summary(batch)
+            return seen["summary"]
+
+        def _apply_batch(self, batch, batch_id):
+            super()._apply_batch(batch, batch_id)
+            seen["group"] = self.spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+            seen["batch_id"] = batch_id
+
+    query = Recorded(
+        spark,
+        SyncSpec(task_id=1, type="parquet"),
+        [TableTarget("users", tgt, SCHEMA, ["id"])],
+        event_log_dir=str(tmp_path / "ev"),
+        checkpoint_dir=str(tmp_path / "ck"),
+        dlq_path=str(tmp_path / "dlq"),
+        stats_path=str(tmp_path / "stats"),
+    ).start(trigger_once=True)
+    query.awaitTermination()
+
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(seen["group"])
+    assert 0 < len(jobs) <= 7, f"{len(jobs)} jobs in one micro-batch"
+    progress = [p for p in query.recentProgress if p["numInputRows"]]
+    assert [p["numInputRows"] for p in progress] == [500]
+
+    summary = {r["op"]: r["n"] for r in seen["summary"] if not r["bad"]}
+    assert summary == want
+    stats = spark.read.parquet(
+        str(tmp_path / "stats" / "table=users" / f"batch_id={seen['batch_id']}")
+    )
+    assert {r.op: r.n for r in stats.collect()} == summary
+    assert spark.read.parquet(str(tmp_path / "dlq")).count() == 10
+    state = {i: f"s{i}" for i in range(2000)}
+    for e in events:
+        key = json.loads(e["key_json"])["id"]
+        if key is None:
+            continue
+        if e["op"] == "delete":
+            state.pop(key, None)
+        else:
+            state[key] = f"x{e['seq']}"
+    assert {r.id: r.v for r in read_target(spark, tgt).collect()} == state
+
+
+def test_stats_rewrite_replaces_spark_written_dir(spark, tmp_path):
+    """Re-writing a batch's stats dir with the driver-side writer — a
+    crash replay over a dir an older Spark writer produced, whose part
+    files are named differently — replaces the dir's content, so the
+    totals never double-count."""
+    from sync_spark.operators.monitor import write_apply_stats
+
+    stats = str(tmp_path / "stats")
+    batch_dir = f"{stats}/table=users/batch_id=0"
+    spark.createDataFrame([("insert", 3), ("delete", 1)], "op string, n long").coalesce(
+        1
+    ).write.mode("overwrite").parquet(batch_dir)
+    write_apply_stats(batch_dir, [("insert", 3), ("delete", 1)])
+    totals = {
+        (r.table, r.op): (r.total, r.n_batches)
+        for r in apply_stats_totals(spark, stats).collect()
+    }
+    assert totals == {("users", "delete"): (1, 1), ("users", "insert"): (3, 1)}

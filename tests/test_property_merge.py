@@ -8,6 +8,7 @@ from __future__ import annotations
 import random as _random
 from datetime import date, timedelta
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
@@ -68,6 +69,95 @@ def test_merge_equals_sequential_fold(spark, initial, events, shuffle_seed):
     merged = apply_changes(target, changes, keys=["id"])
     got = {r.id: r.v for r in merged.collect()}
     assert got == state
+
+
+def _fold_oracle(initial: dict, events: list) -> dict:
+    """Sequential apply of ``(key, op, value, seq)`` events in the
+    merge's order: NULL-seq events first (they lose to every sequenced
+    change), then ascending seq, and on a seq tie op DESCENDING, so the
+    lexicographically-least op — a delete beside an insert — lands
+    last and wins."""
+    by_op = sorted(events, key=lambda e: e[1], reverse=True)
+    state = dict(initial)
+    for k, op, v, _ in sorted(by_op, key=lambda e: (e[3] is not None, e[3] or 0)):
+        if op == "delete":
+            state.pop(k, None)
+        else:
+            state[k] = v
+    return state
+
+
+# (initial target, events as (key, op, value, seq)) — the corners the
+# random fold above never draws: NULL seq, seq ties, and the
+# delete + upsert pair a primary-key change becomes
+EDGE_CASES = {
+    "null_seq_upsert_beats_stored_row": ({1: 10, 2: 20}, [(1, "upsert", 99, None)]),
+    "null_seq_delete_drops_stored_row": ({1: 10, 2: 20}, [(1, "delete", None, None)]),
+    "null_seq_loses_to_sequenced_change": (
+        {1: 10},
+        [(1, "upsert", 5, None), (1, "upsert", 7, 3), (1, "delete", None, None)],
+    ),
+    "delete_and_reinsert_at_same_seq_delete_wins": (
+        {1: 10, 2: 20},
+        [(1, "delete", None, 5), (1, "insert", 11, 5), (3, "insert", 30, 6), (3, "delete", None, 6)],
+    ),
+    "delete_then_reinsert_at_later_seq": (
+        {1: 10},
+        [(1, "delete", None, 5), (1, "insert", 11, 6)],
+    ),
+    # key 1 moves to key 4 (and key 2 onto the stored key 3) at one
+    # seq: the old key's synthesized delete and the new key's upsert
+    "pk_change": (
+        {1: 10, 2: 20, 3: 30},
+        [(1, "delete", None, 4), (4, "upsert", 10, 4), (2, "delete", None, 5), (3, "upsert", 20, 5)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(EDGE_CASES))
+def test_merge_edge_cases_equal_fold(spark, case):
+    initial, events = EDGE_CASES[case]
+    target = spark.createDataFrame(
+        [Row(id=k, v=v) for k, v in initial.items()], TARGET_SCHEMA
+    )
+    changes = spark.createDataFrame(
+        [Row(id=k, v=v, op=op, seq=seq) for k, op, v, seq in events], SCHEMA
+    )
+    merged = apply_changes(target, changes, keys=["id"])
+    assert {r.id: r.v for r in merged.collect()} == _fold_oracle(initial, events)
+
+
+def test_pk_change_from_envelope_equals_fold(spark):
+    """A primary-key change as the envelope carries it (one update
+    whose before_key_json names the old key) moves the row through
+    changes_for_table's synthesized delete."""
+    import json
+
+    from sync_spark.sources.cdc import ENVELOPE_SCHEMA, changes_for_table
+
+    def ev(op, seq, key, v=None, before=None):
+        return Row(
+            op=op, seq=seq, ts=None, source_table="t",
+            key_json=json.dumps({"id": key}),
+            after_json=None if op == "delete" else json.dumps({"id": key, "v": v}),
+            before_key_json=None if before is None else json.dumps({"id": before}),
+            secured=None,
+        )
+
+    envelope = spark.createDataFrame(
+        [ev("update", 1, 4, 10, before=1), ev("update", 2, 2, 21), ev("update", 3, 5, 21, before=2)],
+        ENVELOPE_SCHEMA,
+    )
+    target = spark.createDataFrame(
+        [Row(id=k, v=v) for k, v in {1: 10, 2: 20, 3: 30}.items()], TARGET_SCHEMA
+    )
+    changes = changes_for_table(envelope, "t", TARGET_SCHEMA, ["id"])
+    merged = apply_changes(target, changes, keys=["id"])
+    assert {r.id: r.v for r in merged.collect()} == _fold_oracle(
+        {1: 10, 2: 20, 3: 30},
+        [(1, "delete", None, 1), (4, "update", 10, 1), (2, "update", 21, 2),
+         (2, "delete", None, 3), (5, "update", 21, 3)],
+    )
 
 
 @given(

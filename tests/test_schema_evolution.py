@@ -83,7 +83,7 @@ def test_apply_changes_missing_key_column_raises(spark):
         "name string, score double, op string, seq long",
     )
     with pytest.raises(ValueError, match="missing keys \\['id'\\]"):
-        apply_changes(target, keyless, keys=["id"], evolve_schema=True, compact=False)
+        apply_changes(target, keyless, keys=["id"], evolve_schema=True)
 
 
 def test_apply_changes_replace_semantics_nulls_missing_columns(spark):
