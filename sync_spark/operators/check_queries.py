@@ -77,10 +77,12 @@ FROM ({tq.D_JACCARD_SQL}) exact_pairs
 def chk_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash contract: pairs are ordered and unique, and the
     REPORTED hamming equals an independent popcount(xor) of the two
-    signatures and is within the max_hamming=3 bound."""
-    d = tq._t(spark, sf_dir, "documents")
-    pairs = dedup.simhash_near_pairs(d, "text", "doc_id", max_hamming=3)
-    sig = dedup.simhash(d, "text", "doc_id")
+    signatures and is within the max_hamming=3 bound. The pairs come
+    from dedup.simhash_pairs_cached — the operator d_simhash_pairs
+    ships — and the signatures from the independent Column-built
+    dedup.simhash."""
+    pairs = tq.d_simhash_pairs(spark, sf_dir)
+    sig = dedup.simhash(tq._t(spark, sf_dir, "documents"), "text", "doc_id")
     v = (
         pairs.join(
             sig.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sig_a")), "id_a"

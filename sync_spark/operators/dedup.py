@@ -18,11 +18,22 @@ Scale design (the whole point of these operators):
 - SimHash: 64-bit signature via per-bit weighted votes; near-dup
   candidates by pigeonhole on 4×16-bit chunks (hamming ≤3 ⇒ at least
   one chunk equal), verified by exact hamming distance.
+- winnowing (MOSS) pairs and benchmark decontamination, exact or
+  through a broadcast Bloom bitmap.
 
-All JVM-side Column expressions; no Python UDFs anywhere.
+Each operator has ONE implementation, the form its registry row runs.
+The pair and decontamination kernels are one ``spark.sql`` statement
+over a temp view (the persisted shingle table, or the caller's
+frames): a Column chain of the same plan costs tenths of a second of
+py4j/analysis per call at bench scale. Per-row kernels that also
+serve streaming frames (``winnow_fps_columns``) and the token-level
+operators stay Column expressions. No Python UDFs anywhere.
 """
 
 from __future__ import annotations
+
+import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -96,9 +107,8 @@ def kernel_spread_width(df: DataFrame, min_partitions: int = 0) -> int:
 
 
 def gram_array(toks: Column, k: int) -> Column:
-    """Word k-gram array from a MATERIALIZED token-array Column — the
-    ONE copy of the clamped+filtered index construction shared by the
-    shingle and winnowing paths. The clamp+filter guards the
+    """Word k-gram array from a MATERIALIZED token-array Column (the
+    shingle path). The clamp+filter guards the
     descending-sequence hazard: for a doc shorter than k tokens a
     bare sequence(1, size-k+1) would generate DESCENDING indices and
     element_at(toks, 0) throws; a guarding CASE branch is not
@@ -185,29 +195,51 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     spread_width: int | None = None,
 ) -> DataFrame:
-    """PPJoin pairs through ONE spark.sql analysis pass (r11, guide
-    §4/§1.4 — query-construction latency is pure Python/py4j
-    overhead): the persisted shingle table registers as a temp view
-    and the whole downstream (prefix index, candidate aggregate,
-    two-tier verification) runs as one SQL statement
-    (``ngram_jaccard_pairs_sql``), replacing the ~40-call Column
-    chain that cost ~0.3s of construction per call at bench scale.
-    Algorithm documentation and the agreement-pinned reference chain
-    live in ``ngram_jaccard_pairs_frames``. ``spread_width``: see
-    _doc_shingles — pass the file-stat width so the shingle build
-    skips its plan probes; callers sharing one bench session should
-    pass the SAME value so the shingle cache stays plan-equal."""
+    """EXACT Jaccard ≥ threshold pairs over word n-gram shingle sets —
+    a prefix-filtered inverted index (PPJoin-style; Xiao et al.,
+    "Efficient Similarity Joins for Near Duplicate Detection", WWW'08
+    — public algorithm); see ``ngram_jaccard_pairs_sql``. The persisted
+    shingle table registers as a temp view and the prefix index,
+    candidate aggregate and two-tier verification run as ONE
+    spark.sql analysis pass (r11, guide §4/§1.4: the equivalent
+    ~40-call Column chain cost ~0.3s of construction per call at bench
+    scale). ``spread_width``: see _doc_shingles — pass the file-stat
+    width so the shingle build skips its plan probes; callers sharing
+    one bench session should pass the SAME value so the shingle cache
+    stays plan-equal."""
     docs = _doc_shingles_cached(df, text_col, id_col, n, spread_width)
     docs.createOrReplaceTempView("__njp_docs")
     return df.sparkSession.sql(ngram_jaccard_pairs_sql("__njp_docs", threshold))
 
 
 def ngram_jaccard_pairs_sql(docs_view: str, threshold: float = 0.8) -> str:
-    """SQL-text twin of ``ngram_jaccard_pairs_frames``' downstream
-    over a (doc_id, sh SORTED, n_sh) shingle view — identical prefix
-    slice, size-ratio + positional-suffix pruning, and two-tier
-    (hashed-long, then exact-string) verification; agreement is
-    pytest-pinned and must stay in lockstep with the frames form."""
+    """PPJoin pairs over a (doc_id, sh SORTED, n_sh) shingle view.
+
+    Exactness: sets are sorted in one global order and only the first
+    ``|s| - ceil(t·|s|) + 1`` shingles are indexed. Two sets with
+    Jaccard ≥ t share ≥ ceil(t·max(|A|,|B|)) elements, so their sorted
+    prefixes share one — no qualifying pair is lost. The size-ratio
+    filter (t·|B| ≤ |A| ≤ |B|/t) is implied by J ≥ t. Work is
+    Σ|prefix-posting|² on rare shingles, never n².
+
+    The index keys on xxhash64(shingle) (r12, guide §2.3: 8-byte
+    exchange rows). A collision can only ADD a candidate; the exact
+    verification decides (sf1: 250,600 pairs bit-equal, 5.1s → 4.5s).
+
+    Positional-suffix bound (r11, guide §3): per candidate pair, keep
+    the match count and the positions Pa, Pb of the LARGEST matched
+    prefix shingle. Every common element ≤ it is a prefix∩prefix
+    match, so |A∩B| ≤ cnt + min(n_a − Pa − 1, n_b − Pb − 1), and
+    J ≥ t needs |A∩B| ≥ t·(n_a+n_b)/(1+t). Pairs that can't reach it
+    drop EXACTLY (the epsilon keeps borderline ones). sf0.1: 80,381
+    candidates → ~1.3k verified.
+
+    Two-tier verify (r7): string array_intersect is interpreted and
+    boxes strings (~2.5s of 3.2s at sf0.1). Tier 1 intersects
+    xxhash64'd LONG arrays; collisions over-count, so it keeps a
+    superset (bar a ~n²/2⁶⁴ collision inside the true intersection).
+    Tier 2 computes the exact string intersection on the survivors,
+    so the emitted jaccard never involves hashes."""
     t = f"{threshold!r}D"
     t1 = f"{(1.0 + threshold)!r}D"
     return f"""
@@ -251,164 +283,6 @@ SELECT id_a, id_b, jaccard FROM (
 """
 
 
-def ngram_jaccard_pairs_frames(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """EXACT Jaccard ≥ threshold pairs — prefix-filtered inverted
-    index (PPJoin-style; Xiao et al., "Efficient Similarity Joins for
-    Near Duplicate Detection", WWW'08 — public algorithm). Reference
-    DataFrame form of ``ngram_jaccard_pairs`` (the hot path runs the
-    SQL twin); kept for the lockstep agreement test.
-
-    Exactness argument: sort every shingle set in one global
-    (lexicographic) order and index only its first
-    ``|s| - ceil(t·|s|) + 1`` shingles. Two sets with Jaccard ≥ t
-    overlap in ≥ ceil(t·max(|A|,|B|)) elements, so their sorted
-    prefixes must share at least one — every qualifying pair survives
-    candidate generation. A size-ratio filter (|A| ≥ t·|B|) prunes
-    further, also implied by J ≥ t. Exact Jaccard is then computed
-    only on candidates via array_intersect.
-
-    At scale this turns Σ|posting|² on ubiquitous shingles into
-    Σ|prefix-posting|² on rare ones — the candidate join stays
-    band-partitioned and never approaches n²."""
-    # cached shingle table: feeds the prefix index AND both sides of
-    # the verification join (see _doc_shingles_cached for why the
-    # cache barrier must come first)
-    docs = _doc_shingles_cached(df, text_col, id_col, n)
-    prefix_len = (F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1).cast("int")
-    prefix = docs.select(
-        "doc_id",
-        "n_sh",
-        # sh is persisted pre-sorted (see _doc_shingles); pos is
-        # 0-based within the full sorted array (a prefix slice starts
-        # at element 1)
-        F.posexplode(F.slice("sh", 1, F.greatest(prefix_len, F.lit(1)))).alias(
-            "pos", "shingle"
-        ),
-        # r12 (guide §2.3 — shuffle fewer bytes): the candidate join
-        # keys on xxhash64(shingle), not the 3-word string, so the
-        # prefix-index exchange carries 8-byte longs. String equality
-        # implies hash equality, so every true pair still collides; a
-        # cross-shingle collision can only ADD a candidate (and only
-        # loosen the COUNT/MAX(pos) HAVING bound), and the unchanged
-        # two-tier EXACT verification decides membership — emitted
-        # pairs are identical (sf1 A/B: 250,600 pairs bit-equal,
-        # ~5.1s → ~4.5s; the byte win grows with corpus scale).
-    ).select("doc_id", "n_sh", "pos", F.xxhash64("shingle").alias("shingle_h"))
-    a, b = prefix.alias("a"), prefix.alias("b")
-    # r11 (guide §3 — reduce the join input before the expensive
-    # stage): complete the PPJoin pruning with the positional suffix
-    # bound. The candidate aggregate (same shuffle the old .distinct()
-    # paid) counts the matched prefix shingles per pair and keeps the
-    # positions of the LARGEST matched shingle (sorted arrays: the max
-    # shingle attains max pos on both sides simultaneously). With all
-    # sets sorted in one global order, every common element ≤ that
-    # shingle must itself be a prefix∩prefix match (it sorts before a
-    # prefix member on both sides, hence sits in both prefixes), so
-    #   |A∩B| ≤ cnt + min(n_a − Pa − 1, n_b − Pb − 1).
-    # J ≥ t needs |A∩B| ≥ t·(n_a+n_b)/(1+t); pairs whose bound can't
-    # reach that are dropped EXACTLY — the epsilon keeps borderline
-    # pairs, which tier-1/tier-2 verification then decides. sf0.1:
-    # 80381 candidate pairs → ~1.3k enter verification; verification
-    # cost ∝ candidates.
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.shingle_h") == F.col("b.shingle_h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            # size-ratio pruning: J ≥ t ⇒ t·|B| ≤ |A| ≤ |B|/t
-            & (F.col("a.n_sh").cast("double") >= F.lit(threshold) * F.col("b.n_sh"))
-            & (F.col("b.n_sh").cast("double") >= F.lit(threshold) * F.col("a.n_sh")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("a.n_sh").alias("bn_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("b.n_sh").alias("bn_b"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.max(F.col("a.pos")).alias("pa"),
-            F.max(F.col("b.pos")).alias("pb"),
-        )
-        .filter(
-            (
-                F.col("cnt")
-                + F.least(
-                    F.col("bn_a") - F.col("pa") - 1, F.col("bn_b") - F.col("pb") - 1
-                )
-            ).cast("double")
-            >= F.lit(threshold)
-            * (F.col("bn_a") + F.col("bn_b")).cast("double")
-            / F.lit(1.0 + threshold)
-            - F.lit(1e-9)
-        )
-        .select("id_a", "id_b")
-    )
-    # verification in two tiers (r7): string array_intersect runs
-    # interpreted with per-call set building and string boxing — at
-    # sf0.1 it was ~2.5s of the query's 3.2s on 80k candidates that
-    # reduce to 256 pairs. Tier 1 intersects xxhash64'd LONG arrays
-    # (primitive sets, no boxing) — a cross-set collision makes the
-    # hashed intersection OVER-count, so thresholding it keeps a
-    # superset of the true pairs modulo one exception: a collision
-    # BETWEEN two shingles already inside the true intersection
-    # UNDER-counts it by one (probability ~n²/2⁶⁴ per pair —
-    # negligible, but the superset property is not strict).
-    # Tier 2 then computes the EXACT
-    # string intersection on the survivors only; the emitted jaccard
-    # never involves hashes, so oracle bit-exactness is untouched.
-    hh = F.transform(F.col("sh"), lambda x: F.xxhash64(x))
-    da = docs.select(
-        F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"),
-        F.col("n_sh").alias("n_a"), hh.alias("shh_a"),
-    )
-    db = docs.select(
-        F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"),
-        F.col("n_sh").alias("n_b"), hh.alias("shh_b"),
-    )
-    return (
-        candidates.join(da, "id_a")
-        .join(db, "id_b")
-        .withColumn("ih", F.size(F.array_intersect("shh_a", "shh_b")))
-        .filter(
-            F.col("ih").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("ih")).cast("double")
-            >= threshold
-        )
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, num_hashes: int = 32
-) -> DataFrame:
-    """k seeded xxhash64-min signatures per doc (deterministic).
-    Explode + groupBy form — see minhash_lsh_pairs_sql for the sf1
-    A/B that picked the codegen'd aggregate over the interpreted
-    per-row transform() form (identical values either way)."""
-    docs = _doc_shingles_cached(df, text_col, id_col, n)
-    ex = docs.select("doc_id", F.explode("sh").alias("shingle"))
-    return ex.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    ).select("doc_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("signature"))
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -419,15 +293,13 @@ def minhash_lsh_pairs(
     threshold: float = 0.8,
     spread_width: int | None = None,
 ) -> DataFrame:
-    """MinHash-LSH pairs through ONE spark.sql analysis pass (r11,
-    guide §4/§1.4): the persisted shingle table registers as a temp
-    view and the signature aggregate, banding join and exact-Jaccard
-    verification run as one SQL statement (the 32 per-seed min-agg
-    Columns plus 8 band structs cost ~0.55s of py4j construction per
-    call at bench scale). Algorithm documentation and the
-    agreement-pinned reference chain live in
-    ``minhash_lsh_pairs_frames``. ``spread_width``: see
-    ngram_jaccard_pairs."""
+    """MinHash→LSH candidate generation + exact-Jaccard verification
+    (see ``minhash_lsh_pairs_sql``). The persisted shingle table
+    registers as a temp view and the signature aggregate, banding
+    join and verification run as ONE spark.sql analysis pass (r11,
+    guide §4/§1.4: the 32 per-seed min-agg Columns plus 8 band structs
+    cost ~0.55s of py4j construction per call at bench scale).
+    ``spread_width``: see ngram_jaccard_pairs."""
     assert num_hashes % bands == 0
     docs = _doc_shingles_cached(df, text_col, id_col, n, spread_width)
     docs.createOrReplaceTempView("__mhp_docs")
@@ -442,12 +314,17 @@ def minhash_lsh_pairs_sql(
     bands: int = 8,
     threshold: float = 0.8,
 ) -> str:
-    """SQL-text twin of ``minhash_lsh_pairs_frames``' downstream over
-    a (doc_id, sh, n_sh) shingle view — identical seeded-min
-    signatures, band hashing (xxhash64 over the r signature longs,
-    seed-order preserved), candidate distinct and exact-Jaccard
-    verification; agreement is pytest-pinned and must stay in
-    lockstep with the frames form."""
+    """MinHash-LSH pairs over a (doc_id, sh, n_sh) shingle view:
+    ``num_hashes`` seeded xxhash64 minima per doc, cut into ``bands``
+    bands of r = num_hashes/bands rows (band hash = xxhash64 over the
+    r signature longs, seed order preserved). Docs colliding in ≥1
+    band are candidates — P[collision] = 1-(1-s^r)^b at Jaccard s.
+    Verification recomputes EXACT Jaccard on the candidates, so false
+    positives are filtered and the output carries no similarity
+    estimates. There is deliberately NO hashed pre-filter tier (unlike
+    ngram_jaccard_pairs_sql): banding already yields a near-precise
+    candidate set (256 candidates at sf0.1 where the prefix index
+    passes 80k), so the extra tier would be pure overhead."""
     assert num_hashes % bands == 0
     r = num_hashes // bands
     t = f"{threshold!r}D"
@@ -507,94 +384,12 @@ SELECT id_a, id_b, jaccard FROM (
 """
 
 
-def minhash_lsh_pairs_frames(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """MinHash→LSH candidate generation + exact-Jaccard verification.
-    Reference DataFrame form of ``minhash_lsh_pairs`` (the hot path
-    runs the SQL twin); kept for the lockstep agreement test.
-
-    Bands of r = num_hashes/bands rows; docs colliding in ≥1 band are
-    candidates (P[collision] = 1-(1-s^r)^b). Verification recomputes
-    EXACT Jaccard on candidates only, so false positives are filtered
-    and the output contains no similarity estimates.
-    """
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-    docs_cached = _doc_shingles_cached(df, text_col, id_col, n)
-    # explode + groupBy signatures — lockstep twin of the SQL form's
-    # r12 codegen'd shape (see minhash_lsh_pairs_sql for the sf1 A/B
-    # that reverted the r11 per-row transform() form): identical hash
-    # values and minima
-    ex = docs_cached.select("doc_id", F.explode("sh").alias("shingle"))
-    sig = ex.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    ).select(
-        "doc_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("signature")
-    )
-    band_rows = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.xxhash64(*[F.col("signature")[i * r + j] for j in range(r)]).alias(
-                            "band_hash"
-                        ),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bh"),
-    ).select("doc_id", "bh.band", "bh.band_hash")
-    a, b = band_rows.alias("a"), band_rows.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    # NO hashed pre-filter here, deliberately (unlike
-    # ngram_jaccard_pairs): banding already filters to a near-precise
-    # candidate set (256 candidates at sf0.1 where the prefix index
-    # passes 80k), so the extra tier would be pure overhead
-    da = docs_cached.select(
-        F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("n_sh").alias("n_a")
-    )
-    db = docs_cached.select(
-        F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("n_sh").alias("n_b")
-    )
-    verified = (
-        candidates.join(da, "id_a")
-        .join(db, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified.select("id_a", "id_b", "jaccard")
-
-
 def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 64) -> DataFrame:
     """64-bit SimHash over the token bag: bit_i = sign of Σ ±1 votes
-    from xxhash64(token) bit i. Returned as a signed long.
+    from xxhash64(token) bit i. Returned as a signed long. This
+    Column-built signature is the INDEPENDENT recompute that
+    chk_simhash and the exactness test check ``simhash_pairs_cached``
+    (which builds its signatures in SQL) against.
 
     The hash is materialized ONCE per token before the aggregation
     (an expression inside 64 agg functions is evaluated 64×/row), the
@@ -632,60 +427,43 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 64) -> DataFr
     return agg.select("doc_id", sig.alias("simhash"))
 
 
-def simhash_near_pairs(
-    df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3
+# most-recent persisted simhash chunk relation; same bounded-leak
+# discipline as _live_shingle_cache above
+_live_chunk_cache: list[DataFrame] = []
+
+
+def simhash_pairs_cached(
+    spark,
+    src: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_hamming: int = 3,
+    bits: int = 64,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash: pigeonhole on 4×16-bit chunks (any
-    pair with hamming ≤ 3 must share a chunk), verified by exact
-    popcount of XOR."""
-    sig = simhash(df, text_col, id_col)
-    chunks = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk"),
-                        F.shiftrightunsigned(F.col("simhash"), i * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("chunk_val"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select("doc_id", "simhash", "c.chunk", "c.chunk_val")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    """Near-dup pairs by SimHash, hamming ≤ ``max_hamming`` over the
+    view ``src``. Pigeonhole on 4×16-bit chunks: a pair within hamming
+    3 shares at least one chunk, so the chunk-equality self-join
+    misses no pair and an exact popcount of XOR verifies each
+    candidate — EXACT for max_hamming ≤ 3 (a test checks it against a
+    brute force over all pairs).
 
+    One spark.sql statement builds the chunk relation (a Column chain
+    of the 64-term signature cost ~1.5s of construction, r7), and it
+    is persisted so both self-join sides read it — as one statement
+    Catalyst inlines the CTE into BOTH sides and aggregates the
+    signatures twice per action (r11). persist (not localCheckpoint)
+    keeps the lineage for the lost-executor posture.
 
-def _simhash_chunk_ctes(src: str, id_col: str, text_col: str, bits: int) -> str:
-    """The shared CTE text producing the pigeonhole chunk relation
-    ``__shc`` (doc_id, simhash, chunk, chunk_val) — ONE definition of
-    the lane-packed signature SQL so the full twin and the cached form
-    below cannot drift."""
+    Cache lifetime mirrors _doc_shingles_cached: each call evicts the
+    previous chunk cache (bounded to ONE live entry), so a long-lived
+    session serving varying sources doesn't accumulate persisted chunk
+    relations and driver-side plan references."""
     assert bits % 2 == 0
+    while _live_chunk_cache:
+        try:
+            _live_chunk_cache.pop().unpersist()
+        except Exception:
+            pass  # session already stopped
     lanes = ",\n         ".join(
         f"SUM((shiftright(h, {j * 2}) & 1) + shiftleft(shiftright(h, {j * 2 + 1}) & 1, 32)) AS p{j}"
         for j in range(bits // 2)
@@ -696,7 +474,8 @@ def _simhash_chunk_ctes(src: str, id_col: str, text_col: str, bits: int) -> str:
         for i in range(bits)
     )
     n_chunks = bits // 16
-    return f"""__sht AS (
+    chunks = spark.sql(f"""
+WITH __sht AS (
   SELECT {id_col} AS doc_id, xxhash64(tok) AS h
   FROM {src}
   LATERAL VIEW explode(CASE WHEN length(trim({text_col})) = 0
@@ -715,78 +494,9 @@ def _simhash_chunk_ctes(src: str, id_col: str, text_col: str, bits: int) -> str:
          shiftrightunsigned(simhash, chunk * 16) & 65535 AS chunk_val
   FROM __shs
   LATERAL VIEW explode(sequence(0, {n_chunks - 1})) __shk AS chunk
-)"""
-
-
-def simhash_pairs_sql(
-    src: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    bits: int = 64,
-) -> str:
-    """SQL-text twin of ``simhash`` + ``simhash_near_pairs`` for
-    one-analysis-pass consumers (the DataFrame chain builds the
-    64-term signature expression through ~400 py4j Column calls —
-    measured 1.5s of construction per call at bench scale, the same
-    analysis-cost trap winnow_sql_kernel exists for). Identical
-    lane-packed aggregation, signature reassembly, pigeonhole chunk
-    join, and exact popcount verify; agreement is pytest-pinned.
-
-    NOTE: Catalyst INLINES the ``__shc`` CTE into both sides of the
-    pair self-join, so this single statement computes the signature
-    aggregation twice per action — ``simhash_pairs_cached`` below is
-    the benched form that materializes the chunk relation once."""
-    return f"""
-WITH {_simhash_chunk_ctes(src, id_col, text_col, bits)}, __shp AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         a.simhash AS sh_a, b.simhash AS sh_b
-  FROM __shc a JOIN __shc b
-    ON a.chunk = b.chunk AND a.chunk_val = b.chunk_val AND a.doc_id < b.doc_id
 )
-SELECT id_a, id_b, bit_count(sh_a ^ sh_b) AS hamming
-FROM __shp WHERE bit_count(sh_a ^ sh_b) <= {max_hamming}
-"""
-
-
-# most-recent persisted simhash chunk relation; same bounded-leak
-# discipline as _live_shingle_cache above
-_live_chunk_cache: list[DataFrame] = []
-
-
-def simhash_pairs_cached(
-    spark,
-    src: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    bits: int = 64,
-) -> DataFrame:
-    """One-signature-pass form of ``simhash_pairs_sql`` (r11 opt
-    round): the single-statement twin's chunk CTE is inlined by
-    Catalyst into BOTH sides of the pigeonhole self-join, so each
-    action ran the token explode + 33-lane aggregation + signature
-    reassembly twice. Here the chunk relation (4 rows/doc of four
-    longs — the signature index, tiny next to the corpus text) is
-    built by ONE spark.sql statement (same analysis-cost rationale as
-    the twin) and persisted, so the self-join's two sides read the
-    cache; the join/verify tail is a handful of py4j calls. persist
-    (not localCheckpoint) keeps the lineage for the lost-executor
-    posture. Row equality with the twin is pytest-pinned.
-
-    Cache lifetime mirrors _doc_shingles_cached: each call evicts the
-    previous chunk cache (bounded to ONE live entry), so a long-lived
-    session serving varying sources doesn't accumulate persisted chunk
-    relations and driver-side plan references."""
-    while _live_chunk_cache:
-        try:
-            _live_chunk_cache.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
-    chunks = spark.sql(
-        f"WITH {_simhash_chunk_ctes(src, id_col, text_col, bits)} "
-        "SELECT doc_id, simhash, chunk, chunk_val FROM __shc"
-    ).persist()
+SELECT doc_id, simhash, chunk, chunk_val FROM __shc
+""").persist()
     _live_chunk_cache.append(chunks)
     a, b = chunks.alias("a"), chunks.alias("b")
     cand = (
@@ -830,8 +540,7 @@ def winnow_fingerprint_rows(
     whole-document md5 (``fingerprint``) cannot see.
 
     Shape: the staged-projection per-row kernel
-    (``winnow_fps_columns`` — NOT the single-expression
-    ``winnow_fps_array``, whose cost warning applies) + explode —
+    (``winnow_fps_columns``, linear per document) + explode —
     winnowing is a PER-DOCUMENT computation, so the shuffle-free form
     is the right one: no doc_id shuffle, no window sort,
     embarrassingly parallel at any scale. (An earlier posexplode +
@@ -885,9 +594,28 @@ def kernel_spread_width_from_files(spark, sf_dir: str, table: str = "documents")
     the scan has thousands of splits and this is always 0)."""
     from sync_spark.sources.readers import table_size_bytes
 
-    sc = spark.sparkContext
-    cap = sc.defaultParallelism
-    size = table_size_bytes(sf_dir, table)
+    return _spread_width_for_bytes(spark, table_size_bytes(sf_dir, table))
+
+
+def _frame_spread_hint(df: DataFrame) -> str:
+    """``kernel_spread_hint`` for an operator handed a DataFrame rather
+    than a table name: the same file-stat width, with the bytes summed
+    over the frame's input files (``inputFiles`` reads the scan's file
+    index — no job, no plan probe). A frame with no local files behind
+    it (in-memory rows, remote storage) gets no hint, the
+    unknown-layout rule below."""
+    size = 0
+    for uri in df.inputFiles():
+        parsed = urlparse(uri)
+        if parsed.scheme not in ("", "file"):
+            return ""
+        size += os.path.getsize(unquote(parsed.path))
+    width = _spread_width_for_bytes(df.sparkSession, size or None)
+    return f"/*+ REPARTITION({width}) */" if width else ""
+
+
+def _spread_width_for_bytes(spark, size: int | None) -> int:
+    cap = spark.sparkContext.defaultParallelism
     if size is None:
         # Unknown layout (remote storage, non-.parquet names): NO hint.
         # Assuming "narrow" here would emit an unconditional
@@ -945,9 +673,10 @@ def winnow_sql_kernel(
     {this}, ...`` and reads (``id_col``, fp) rows from
     ``{prefix}fp``, or per-doc fps ARRAYS from ``{prefix}k4``. Pass a
     distinct ``prefix`` to instantiate the kernel twice in one
-    statement (corpus + benchmark sides of a decontamination). Keep in
-    lockstep with winnow_fps_columns (test_plan_quality pins
-    agreement)."""
+    statement (corpus + benchmark sides of a decontamination).
+    Batch SQL runs this form; streaming frames need the Column form
+    (``winnow_fps_columns``), and a test pins the two to equal
+    rows."""
     grams = ", ".join(f"element_at(wtoks, i + {j})" for j in range(k))
     zips = "hs"
     for lvl in range(1, window):
@@ -988,12 +717,12 @@ def winnow_fps_columns(
     out: str = "fps",
 ) -> DataFrame:
     """Per-row winnowing fingerprint set as an ``out`` array column,
-    built through MATERIALIZED projection stages. This is the one
-    linear-cost form: a lambda body re-evaluates its non-argument
-    subexpressions PER ELEMENT, so the one-big-expression variant
-    (``winnow_fps_array``) recomputes the full md5 gram array once per
-    window position — quadratic per document, measured as a hang at
-    sf0.1. Bound attribute references keep it linear, and every op is
+    built through MATERIALIZED projection stages. Staging is what
+    keeps it linear: a lambda body re-evaluates its non-argument
+    subexpressions PER ELEMENT, so a one-big-expression form
+    recomputes the full md5 gram array once per window position —
+    quadratic per document, measured as a hang at sf0.1. Bound
+    attribute references keep it linear, and every op is
     a narrow projection, so the SAME builder serves batch frames and
     STREAMING frames (the curation pipeline's decontamination probe).
 
@@ -1066,59 +795,26 @@ def winnow_pairs(
     min_shared: int = 2,
     max_posting: int = 100,
 ) -> DataFrame:
-    """Local near-dup candidate pairs: documents sharing ≥
-    ``min_shared`` winnowing fingerprints, with the shared count.
-    The MOSS shape: inverted index on fingerprint (boilerplate prints
+    """Local near-dup candidate pairs (id_a < id_b, shared_fps):
+    documents sharing ≥ ``min_shared`` winnowing fingerprints. The
+    MOSS shape: inverted index on fingerprint (boilerplate prints
     appearing in > ``max_posting`` docs dropped — same hot-shingle
     discipline as ngram_jaccard), pairs generated IN-ROW from each
-    posting list (bounded ≤ max_posting, so the per-row expansion is
-    ≤ max_posting²/2 structs) — one shuffle to build postings, one to
-    count pairs, no fingerprint self-join. Σ posting² work, never n²;
-    detects SHARED RUNS (≥ k + window - 1 tokens) rather than
-    whole-document similarity."""
-    fps = winnow_fingerprint_rows(df, text_col, id_col, k=k, window=window)
-    postings = fps.groupBy("fp").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ids")
-    )
-    bounded = postings.filter(
-        (F.size("ids") >= 2) & (F.size("ids") <= max_posting)
-    )
-    # ids is a bound column, so the nested lambda's slice reads the
-    # materialized array — O(posting²) struct builds, nothing more
-    pairs_arr = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, max_posting),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    return (
-        bounded.select(F.explode(pairs_arr).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("shared_fps"))
-        .filter(F.col("shared_fps") >= min_shared)
-    )
+    sorted posting list (bounded ≤ max_posting, so the per-row
+    expansion is ≤ max_posting²/2 structs) — one shuffle to build
+    postings, one to count pairs, no fingerprint self-join. Σ posting²
+    work, never n²; detects SHARED RUNS (≥ k + window - 1 tokens)
+    rather than whole-document similarity.
 
-
-def winnow_pairs_sql(
-    view: str,
-    spread_hint: str = "",
-    k: int = 5,
-    window: int = 4,
-    min_shared: int = 2,
-    max_posting: int = 100,
-) -> str:
-    """SQL-text twin of ``winnow_pairs`` over a registered (doc_id,
-    text) view — identical MOSS shape (winnow_sql_kernel + posting
-    lists + in-row i<j pair expansion), emitted as one statement so a
-    hot consumer pays one analysis pass (test_dedup pins agreement
-    with the DataFrame form). Keep in lockstep with winnow_pairs."""
+    ``df`` registers as a temp view and the pipeline runs as ONE
+    spark.sql analysis pass (the equivalent Column chain spent
+    ~0.3s/query in plan construction plus the optimizer-stats spread
+    probe, r6); a narrow file scan gets the file-stat spread hint."""
+    view = _doc_view(df, id_col, text_col, "__wp_docs")
     kernel = winnow_sql_kernel("doc_id", "text", "__wp_src", k=k, window=window)
-    return f"""
+    return df.sparkSession.sql(f"""
 WITH __wp_src AS (
-  SELECT {spread_hint} doc_id, text FROM {view}
+  SELECT {_frame_spread_hint(df)} doc_id, text FROM {view}
 ), {kernel}, __wp_postings AS (
   SELECT sort_array(collect_list(doc_id)) AS ids FROM __wfp GROUP BY fp
 ), __wp_bounded AS (
@@ -1133,7 +829,16 @@ WITH __wp_src AS (
 )
 SELECT id_a, id_b, CAST(COUNT(*) AS BIGINT) AS shared_fps
 FROM __wp_pairs GROUP BY id_a, id_b HAVING COUNT(*) >= {min_shared}
-"""
+""")
+
+
+def _doc_view(df: DataFrame, id_col: str, text_col: str, name: str) -> str:
+    """Register ``df``'s id/text columns as temp view ``name`` under
+    the (doc_id, text) names the SQL kernels read."""
+    df.select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+    ).createOrReplaceTempView(name)
+    return name
 
 
 def decontaminate(
@@ -1158,42 +863,28 @@ def decontaminate(
     ~1/window of the k-grams); the probe is a broadcast-size join when
     the benchmark is small (the usual case — eval sets are MBs against
     a 100 TB corpus), falling back to a shuffle join on fp otherwise —
-    Spark picks via size estimate, no operator change needed."""
-    hits = decontaminate_hits(corpus, benchmark, text_col, id_col, k=k, window=window)
-    return (
-        corpus.select(F.col(id_col).alias("doc_id"))
-        .join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
-            (F.coalesce(F.col("n_hits"), F.lit(0)) >= min_shared).alias("contaminated"),
-        )
-    )
+    Spark picks via size estimate, no operator change needed.
 
-
-def decontaminate_hits(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    window: int = 4,
-) -> DataFrame:
-    """The collision aggregate behind ``decontaminate``: (doc_id,
-    n_hits) for corpus docs with ≥1 (fingerprint, benchmark-doc)
-    collision ONLY — no join back to the full corpus doc list. A
-    composite that already carries every corpus doc (t_curate_corpus's
-    flags frame) left-joins THIS instead of decontaminate's full
-    output, saving one corpus scan."""
-    cfp = winnow_fingerprint_rows(corpus, text_col, id_col, k=k, window=window)
-    bfp = winnow_fingerprint_rows(benchmark, text_col, id_col, k=k, window=window).select(
-        F.col("fp"), F.col("doc_id").alias("bench_id")
-    )
-    return (
-        cfp.join(bfp, "fp")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    )
+    Shape: both frames register as temp views and the kernels, the
+    collision aggregate and the join back to the corpus doc list run
+    as ONE spark.sql analysis pass (r11, guide §4: two winnow Column
+    chains plus their plan-probe spreads cost ~0.6s of construction
+    per call at bench scale). The corpus kernel gets the file-stat
+    spread hint; the eval side none — benchmark sets are small by
+    definition (the bloom discipline)."""
+    _doc_view(corpus, id_col, text_col, "__dc_corpus")
+    bench = _doc_view(benchmark, id_col, text_col, "__dc_bench")
+    hits = decontaminate_hits_sql("__dc_spread", bench, k=k, window=window)
+    return corpus.sparkSession.sql(f"""
+WITH __dc_spread AS (
+  SELECT {_frame_spread_hint(corpus)} doc_id, text FROM __dc_corpus
+), {hits}
+SELECT d.doc_id,
+       COALESCE(h.n_hits, 0L) AS n_hits,
+       COALESCE(h.n_hits, 0L) >= {min_shared} AS contaminated
+FROM (SELECT doc_id FROM __dc_corpus) d
+LEFT JOIN __dhhits h ON d.doc_id = h.doc_id
+""")
 
 
 def decontaminate_hits_sql(
@@ -1203,16 +894,14 @@ def decontaminate_hits_sql(
     window: int = 4,
     prefix: str = "__dh",
 ) -> str:
-    """CTE-text twin of ``decontaminate_hits`` (r11, guide §4 — the
-    two winnow Column chains plus their optimizer-stats/.rdd spread
-    probes cost ~0.6s of per-call construction at bench scale; the
-    SQL form is one analysis pass and the caller supplies a file-stat
-    REPARTITION hint instead). Emits ``winnow_sql_kernel`` CTEs for
-    both sides plus ``{prefix}hits`` (doc_id, n_hits BIGINT) counting
-    (fingerprint, benchmark-doc) collisions per corpus doc — join
-    multiplicities identical to the DataFrame form (per-doc fps are
-    already distinct from the kernel). Keep in lockstep with
-    decontaminate_hits (agreement-tested)."""
+    """The collision aggregate behind ``decontaminate``, as CTE text:
+    ``winnow_sql_kernel`` CTEs for both sides plus ``{prefix}hits``
+    (doc_id, n_hits BIGINT) counting (fingerprint, benchmark-doc)
+    collisions per corpus doc (per-doc fps are already distinct from
+    the kernel). Corpus docs with ≥1 collision ONLY — no join back to
+    the full corpus doc list: a composite that already carries every
+    corpus doc (t_curate_corpus's flags frame) left-joins THIS instead
+    of decontaminate's full output, saving one corpus scan."""
     ck = winnow_sql_kernel("doc_id", "text", corpus_src, k=k, window=window,
                            prefix=f"{prefix}c")
     bk = winnow_sql_kernel("doc_id", "text", bench_src, k=k, window=window,
@@ -1310,40 +999,13 @@ def span_dedup(
     )
 
 
-def winnow_fps_array(text: F.Column, k: int = 5, window: int = 4) -> F.Column:
-    """Per-ROW winnowing fingerprint set as ONE Column expression —
-    the single-expression twin of ``winnow_fps_columns`` (same
-    k-grams, same 56-bit hash, same short-doc rule; agreement asserted
-    in tests).
-
-    COST WARNING — use ``winnow_fps_columns`` on anything bigger than
-    toy rows: because ``hs`` here is a subexpression and not a bound
-    attribute, the outer transform's lambda re-evaluates the full
-    gram-hash array once PER WINDOW POSITION — quadratic per document
-    (measured as a multi-minute hang on the sf0.1 corpus). This form
-    survives only as the agreement-test reference and for expression
-    positions where a projection stage is impossible."""
-    from sync_spark.functions.text import tokens as _tokens
-    from sync_spark.functions.text import winnow_hash
-
-    toks = _tokens(text)
-    n_grams = F.size(toks) - k + 1
-    hs = F.transform(gram_array(toks, k), winnow_hash)
-    # n_picked is clamped >= 1 already, so a bare sequence is safe
-    # here (no descending-sequence hazard at this site)
-    n_picked = F.greatest(F.size(hs) - window + 1, F.lit(1))
-    picks = F.sequence(F.lit(1), n_picked)
-    wins = F.transform(picks, lambda p: F.array_min(F.slice(hs, p, window)))
-    # empty doc: no grams → empty fingerprint set
-    return F.when(n_grams < 1, F.array().cast("array<bigint>")).otherwise(
-        F.array_distinct(wins)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Bloom-filter decontamination: broadcast-bitmap probe
 # ---------------------------------------------------------------------------
 
+# constants, not options: a bit position IS a 20-bit md5 slice
+# (_bloom_hash_sql), so m is fixed at 2^20, and the DuckDB oracle
+# bakes in k
 BLOOM_M_BITS = 1 << 20  # 1 Mi bits = 128 KB bitmap; 2^20 = one 5-hex-digit slice
 BLOOM_K_HASH = 4
 
@@ -1372,53 +1034,22 @@ def _bloom_hash_sql(h_expr: str, j_expr: str) -> str:
     )
 
 
-def bloom_bitmap(
-    fps: DataFrame,
-    fp_col: str = "fp",
-    m_bits: int = BLOOM_M_BITS,
-    k_hash: int = BLOOM_K_HASH,
-) -> DataFrame:
-    """Fold a fingerprint column into a ONE-ROW Bloom bitmap
+def bloom_bitmap_sql(fp_src: str, fp_col: str = "fp", prefix: str = "__bm") -> str:
+    """CTEs ``{prefix}pos, {prefix}words, {prefix}bitmap`` folding
+    (``fp_col``) rows from ``fp_src`` into a ONE-ROW Bloom bitmap
     (``bloom: map<long,long>`` of word-index → 64-bit word, words with
     no set bits omitted), fully distributed: bit positions explode
     from the fp rows, per-word masks combine with the map-side-partial
     ``bit_or`` aggregate (the word id is the shuffle key — ≤ m/64
     distinct keys, uniform), and the final map assembles via
     map_from_entries(collect_list) in a single-group agg —
-    constant-size (≤ m/64 entries, 128 KB at the default sizing),
-    never data-sized. The sparse-map form skips the dense
-    range-densify join an array bitmap would need (an absent word IS
-    zero, via coalesce at probe time). No driver collect anywhere; the
-    result row is made for ``F.broadcast(...).crossJoin`` probing."""
-    pos = fps.select(F.md5(F.col(fp_col).cast("string")).alias("h")).select(
-        F.expr(
-            f"explode(transform(sequence(0, {k_hash - 1}), "
-            f"j -> {_bloom_hash_sql('h', 'j')}))"
-        ).alias("pos")
-    )
-    word_bits = (
-        pos.select(
-            F.expr("pos DIV 64").alias("word"),
-            F.expr("shiftleft(1L, CAST(pos % 64 AS INT))").alias("mask"),
-        )
-        .groupBy("word")
-        .agg(F.expr("bit_or(mask)").alias("bits"))
-    )
-    return word_bits.groupBy().agg(
-        F.map_from_entries(F.collect_list(F.struct("word", "bits"))).alias("bloom")
-    )
-
-
-def bloom_bitmap_sql(
-    fp_src: str, fp_col: str = "fp", k_hash: int = BLOOM_K_HASH, prefix: str = "__bm"
-) -> str:
-    """SQL-text twin of ``bloom_bitmap`` for one-analysis-pass
-    pipelines: CTEs ``{prefix}pos, {prefix}words, {prefix}bitmap``
-    folding (``fp_col``) rows from ``fp_src`` into the same one-row
-    sparse-map bitmap (word → 64-bit mask). Keep in lockstep with
-    bloom_bitmap (agreement-tested)."""
+    constant-size (≤ m/64 entries, 128 KB), never data-sized. The
+    sparse-map form skips the dense range-densify join an array bitmap
+    would need (an absent word IS zero, via coalesce at probe time).
+    No driver collect anywhere; the row is made for a broadcast
+    cross-join probe."""
     return f"""{prefix}pos AS (
-  SELECT explode(transform(sequence(0, {k_hash - 1}), j -> {_bloom_hash_sql('h', 'j')})) AS pos
+  SELECT explode(transform(sequence(0, {BLOOM_K_HASH - 1}), j -> {_bloom_hash_sql('h', 'j')})) AS pos
   FROM (SELECT md5(CAST({fp_col} AS STRING)) AS h FROM {fp_src})
 ), {prefix}words AS (
   SELECT pos DIV 64 AS word, bit_or(shiftleft(1L, CAST(pos % 64 AS INT))) AS mask
@@ -1428,18 +1059,18 @@ def bloom_bitmap_sql(
 )"""
 
 
-def bloom_probe_nmaybe_sql(fps_col: str, k_hash: int = BLOOM_K_HASH) -> str:
+def bloom_probe_nmaybe_sql(fps_col: str) -> str:
     """SQL text counting how many DISTINCT fingerprints in the
     ``fps_col`` array have every Bloom bit set in the in-scope
-    ``bloom`` map attribute — the probe expression shared by
-    bloom_decontaminate (DataFrame form) and the SQL pipeline twin.
-    One F.expr = one analysis pass (see _bloom_hash_sql); md5 runs
-    exactly ONCE PER FINGERPRINT (the inner forall only slices the
+    ``bloom`` map attribute — bloom_decontaminate's probe. Lambda
+    bodies read only their own args plus the broadcast ``bloom``
+    attribute, so nothing re-evaluates per element; md5 runs exactly
+    ONCE PER FINGERPRINT (the inner forall only slices the
     already-computed digest `h`)."""
     return (
         f"CAST(size(filter("
         f"transform(array_distinct({fps_col}), fp -> md5(CAST(fp AS STRING))), "
-        f"h -> forall(transform(sequence(0, {k_hash - 1}), j -> {_bloom_hash_sql('h', 'j')}), "
+        f"h -> forall(transform(sequence(0, {BLOOM_K_HASH - 1}), j -> {_bloom_hash_sql('h', 'j')}), "
         f"p -> (coalesce(element_at(bloom, p DIV 64), 0L) & shiftleft(1L, CAST(p % 64 AS INT))) != 0"
         f"))) AS BIGINT)"
     )
@@ -1453,9 +1084,6 @@ def bloom_decontaminate(
     k: int = 5,
     window: int = 4,
     min_shared: int = 1,
-    m_bits: int = BLOOM_M_BITS,
-    k_hash: int = BLOOM_K_HASH,
-    spread_width: int | None = None,
 ) -> DataFrame:
     """Benchmark decontamination through a broadcast Bloom filter —
     the 100 TB form of ``decontaminate``: instead of JOINING corpus
@@ -1467,8 +1095,8 @@ def bloom_decontaminate(
     large the eval suite grows. One-sided error only: a shared
     fingerprint ALWAYS hits (no false negatives — the guarantee
     decontamination must not lose); hash collisions can flag extra
-    docs at the documented rate (1−e^{−kn/m})^k, ~1e-5 at the default
-    sizing for 60k benchmark fps — the standard Bloom trade
+    docs at the documented rate (1−e^{−kn/m})^k, ~1e-5 at the fixed
+    sizing (BLOOM_M_BITS, BLOOM_K_HASH) for 60k benchmark fps — the standard Bloom trade
     (conservative: never leaks contamination, occasionally
     over-quarantines).
 
@@ -1481,32 +1109,25 @@ def bloom_decontaminate(
     the DuckDB oracle via position-set membership (bit b set ≡ b ∈
     distinct benchmark positions): the registry query hash-matches
     end to end, no approximation gate needed."""
-    # benchmark-side kernel WITHOUT spread_for_kernel, and WITHOUT a
-    # .distinct() on the fps: eval sets are small by definition (MBs
-    # against the corpus), so the repartition wave costs more than the
-    # single-split kernel it would parallelize, and bit_or is
-    # idempotent — duplicate fingerprints re-set the same bits for
-    # free. The PROBE side below keeps the spread: that's the corpus.
-    bsrc = benchmark.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("__wtext")
-    )
-    bstaged = winnow_fps_columns(bsrc, "__wtext", k=k, window=window, out="__fps")
-    bfp = bstaged.select(F.explode_outer("__fps").alias("fp")).filter(
-        F.col("fp").isNotNull()
-    )
-    bitmap = bloom_bitmap(bfp, "fp", m_bits=m_bits, k_hash=k_hash)
-
-    src = spread_for_kernel(
-        corpus.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__btext")),
-        width=spread_width,
-    )
-    staged = winnow_fps_columns(src, "__btext", k=k, window=window, out="__fps")
-    probed = staged.crossJoin(F.broadcast(bitmap))
-
-    # shared probe text (bloom_probe_nmaybe_sql): map each distinct fp
-    # to its k-position array, keep those with every bit set. Lambda
-    # bodies read only their own args plus the broadcast `bloom`
-    # attribute — nothing re-evaluates per element.
-    return probed.select(
-        "doc_id", F.expr(bloom_probe_nmaybe_sql("__fps", k_hash)).alias("n_maybe")
-    ).withColumn("flagged", F.col("n_maybe") >= min_shared)
+    # no spread on the eval side, and no DISTINCT on its fps: eval
+    # sets are small by definition (MBs against the corpus), so a
+    # repartition wave costs more than the single-split kernel it
+    # would parallelize, and bit_or is idempotent — duplicate
+    # fingerprints re-set the same bits for free. The corpus probe
+    # side gets the file-stat spread hint. One spark.sql analysis
+    # pass (r7): the Column composition measured 0.50s of
+    # construction against 0.35s of execution at sf0.1.
+    _doc_view(corpus, id_col, text_col, "__bd_corpus")
+    bench = _doc_view(benchmark, id_col, text_col, "__bd_bench")
+    ck = winnow_sql_kernel("doc_id", "text", "__bd_spread", k=k, window=window, prefix="__bc")
+    bk = winnow_sql_kernel("doc_id", "text", bench, k=k, window=window, prefix="__bb")
+    return corpus.sparkSession.sql(f"""
+WITH __bd_spread AS (
+  SELECT {_frame_spread_hint(corpus)} doc_id, text FROM __bd_corpus
+), {ck}, {bk}, {bloom_bitmap_sql("__bbfp", "fp")}
+SELECT doc_id, n_maybe, n_maybe >= {min_shared} AS flagged
+FROM (
+  SELECT /*+ BROADCAST(__bmbitmap) */ doc_id,
+         {bloom_probe_nmaybe_sql("fps")} AS n_maybe
+  FROM __bck4 CROSS JOIN __bmbitmap
+)""")

@@ -1,8 +1,8 @@
 """Incremental corpus deduplication against a PERSISTED fingerprint
 index — the production loop batch dedup cannot serve at 100 TB.
 
-The batch operators (dedup.winnow_pairs, dedup.decontaminate) compare
-two frames by recomputing fingerprints on both sides every run. A
+The batch operators (dedup.winnow_pairs, dedup.decontaminate)
+recompute every document's fingerprints on each run. A
 training-data pipeline ingesting a new crawl slice daily cannot
 re-fingerprint the full 100 TB corpus per slice; it needs:
 

@@ -235,13 +235,10 @@ def d_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def d_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs, hamming ≤ 3 (rows-only). One spark.sql
-    analysis pass for the 64-term signature SQL (r7: the DataFrame
-    chain's signature expression cost 1.5s of construction), with the
-    chunk relation persisted so the pigeonhole self-join computes the
-    signatures ONCE per action instead of twice (r11 opt round;
-    dedup.simhash_pairs_sql stays the agreement-tested
-    single-statement twin)."""
+    """SimHash near-dup pairs, hamming ≤ 3 (rows-only; gated by
+    chk_simhash). See dedup.simhash_pairs_cached: one spark.sql pass
+    builds the signatures, and the persisted chunk relation feeds both
+    sides of the pigeonhole self-join."""
     _t(spark, sf_dir, "documents").createOrReplaceTempView("__sh_documents")
     return dedup.simhash_pairs_cached(spark, "__sh_documents")
 
@@ -803,19 +800,13 @@ SELECT doc_id, unnest(fps) AS fp FROM ({_winnow_sql_fragment()})
 
 def d_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local (substring-level) near-dup candidate pairs: documents
-    sharing ≥ 2 winnowing fingerprints — dedup.winnow_pairs' MOSS
-    shape (inverted index, in-row posting-list pair expansion, never
-    an fp self-join) expressed as ONE spark.sql pass: the DataFrame
-    chain spent ~0.3s/query in plan construction plus the
-    optimizer-stats spread probe (r6; a test pins agreement with the
-    operator form)."""
-    d = _t(spark, sf_dir, "documents")
-    hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
-    d.createOrReplaceTempView("__wp_documents")
-    return spark.sql(dedup.winnow_pairs_sql(
-        "__wp_documents", hint, k=_WINNOW_K, window=_WINNOW_W,
+    sharing ≥ 2 winnowing fingerprints (dedup.winnow_pairs — inverted
+    index, in-row posting-list pair expansion, never an fp
+    self-join)."""
+    return dedup.winnow_pairs(
+        _t(spark, sf_dir, "documents"), k=_WINNOW_K, window=_WINNOW_W,
         min_shared=2, max_posting=_WINNOW_MAX_POSTING,
-    ))
+    )
 
 
 D_WINNOW_PAIRS_SQL = f"""
@@ -838,31 +829,12 @@ def d_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination over the synthetic corpus: docs from
     source 'src0' act as the held-out eval set; every other document
     is flagged if it shares a winnowing fingerprint (≥ 8-token
-    verbatim run) with any eval doc. See dedup.decontaminate.
-
-    ONE spark.sql analysis pass (r11, guide §4): the DataFrame
-    composition (two winnow chains + two plan-probe spreads) cost
-    ~0.6s of construction per call at bench scale; the
-    decontaminate_hits_sql twin with the file-stat spread hint is
-    one pass (agreement pytest-pinned). No spread on the eval side —
-    benchmark sets are small by definition (the bloom discipline)."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("__dd_documents")
-    hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
-    hits = dedup.decontaminate_hits_sql(
-        "__dd_corpus", "__dd_bench", k=_WINNOW_K, window=_WINNOW_W
+    verbatim run) with any eval doc. See dedup.decontaminate."""
+    d = _t(spark, sf_dir, "documents")
+    return dedup.decontaminate(
+        d.filter(F.col("source") != "src0"), d.filter(F.col("source") == "src0"),
+        k=_WINNOW_K, window=_WINNOW_W,
     )
-    return spark.sql(f"""
-WITH __dd_corpus AS (
-  SELECT {hint} doc_id, text FROM __dd_documents WHERE source <> 'src0'
-), __dd_bench AS (
-  SELECT doc_id, text FROM __dd_documents WHERE source = 'src0'
-), {hits}
-SELECT d.doc_id,
-       COALESCE(h.n_hits, 0L) AS n_hits,
-       COALESCE(h.n_hits, 0L) >= 1 AS contaminated
-FROM (SELECT doc_id FROM __dd_documents WHERE source <> 'src0') d
-LEFT JOIN __dhhits h ON d.doc_id = h.doc_id
-""")
 
 
 D_DECONTAM_SQL = f"""
@@ -1442,30 +1414,24 @@ def d_survivor_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: pair graph from winnow_pairs (Σ posting² bounded), CC as
     in dedup_clusters, then ONE window argmax per cluster keyed by
     cluster_id. Oracle: recursive-CTE transitive closure over the
-    identical pair set + the same window rule. r7: the pair lineage
-    uses the one-analysis-pass SQL twin (winnow_pairs_sql, the same
-    constants the oracle bakes in) — the DataFrame chain's ~0.3s of
-    construction sat in front of connected_components' EAGER pair
-    materialization on every call."""
+    identical pair set + the same window rule. The pair lineage is
+    one spark.sql pass (dedup.winnow_pairs, r7): a Column chain's
+    ~0.3s of construction sat in front of connected_components' EAGER
+    pair materialization on every call."""
     from pyspark.sql.window import Window
 
     from sync_spark.operators.cluster import connected_components
 
     d = _t(spark, sf_dir, "documents")
-    hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
-    d.createOrReplaceTempView("__sq_documents")
-    pairs = spark.sql(
-        dedup.winnow_pairs_sql(
-            "__sq_documents",
-            hint,
-            k=_WINNOW_K,
-            window=_WINNOW_W,
-            # explicit: the oracle embeds D_WINNOW_PAIRS_SQL which
-            # bakes these constants in — relying on defaults would let
-            # the two pair graphs silently diverge on a constant change
-            min_shared=2,
-            max_posting=_WINNOW_MAX_POSTING,
-        )
+    pairs = dedup.winnow_pairs(
+        d,
+        k=_WINNOW_K,
+        window=_WINNOW_W,
+        # explicit: the oracle embeds D_WINNOW_PAIRS_SQL which bakes
+        # these constants in — relying on defaults would let the two
+        # pair graphs silently diverge on a constant change
+        min_shared=2,
+        max_posting=_WINNOW_MAX_POSTING,
     ).select("id_a", "id_b")
     cc = connected_components(d.select("doc_id"), pairs, id_col="doc_id")
     quality = d.select("doc_id", T.quality_score(F.col("text")).alias("quality"))
@@ -2355,40 +2321,15 @@ FROM t LEFT JOIN s USING (doc_id)
 def d_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination via a broadcast 128 KB Bloom bitmap — the
     shuffle-free 100 TB form of d_decontaminate (same src0-as-eval-set
-    split, same winnowing fingerprints). Deterministic md5 positions
-    make even the Bloom false positives bit-reproducible, so this is
-    a full hash-match query, not an approximation gate.
-
-    Shape (r7): the whole pipeline — both winnow kernels, the bitmap
-    fold, and the broadcast probe — is ONE ``spark.sql`` analysis pass
-    (the DataFrame composition in dedup.bloom_decontaminate measured
-    0.50s of construction against 0.35s of execution at sf0.1 — the
-    same analysis-cost trap winnow_sql_kernel exists for). Agreement
-    with the DataFrame form is pytest-pinned."""
+    split, same winnowing fingerprints; dedup.bloom_decontaminate).
+    Deterministic md5 positions make even the Bloom false positives
+    bit-reproducible, so this is a full hash-match query, not an
+    approximation gate."""
     d = _t(spark, sf_dir, "documents")
-    d.createOrReplaceTempView("__bd_documents")
-    hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
-    ck = dedup.winnow_sql_kernel(
-        "doc_id", "text", "__bd_corpus", k=_WINNOW_K, window=_WINNOW_W, prefix="__bc"
+    return dedup.bloom_decontaminate(
+        d.filter(F.col("source") != "src0"), d.filter(F.col("source") == "src0"),
+        k=_WINNOW_K, window=_WINNOW_W,
     )
-    bk = dedup.winnow_sql_kernel(
-        "doc_id", "text", "__bd_bench", k=_WINNOW_K, window=_WINNOW_W, prefix="__bb"
-    )
-    bm = dedup.bloom_bitmap_sql("__bbfp", "fp")
-    return spark.sql(f"""
-WITH __bd_corpus AS (
-  SELECT {hint} doc_id, text FROM __bd_documents WHERE source <> 'src0'
-), __bd_bench AS (
-  -- no spread on the eval side: benchmark sets are small by
-  -- definition, and bit_or absorbs duplicate fingerprints for free
-  SELECT doc_id, text FROM __bd_documents WHERE source = 'src0'
-), {ck}, {bk}, {bm}
-SELECT doc_id, n_maybe, n_maybe >= 1 AS flagged
-FROM (
-  SELECT /*+ BROADCAST(__bmbitmap) */ doc_id,
-         {dedup.bloom_probe_nmaybe_sql("fps")} AS n_maybe
-  FROM __bck4 CROSS JOIN __bmbitmap
-)""")
 
 
 def _bloom_pos_sql(fp_expr: str, j_expr: str) -> str:

@@ -5,8 +5,6 @@ TestCheckpoint::test_vacuum_base_commit_self_corrects_checkpoint_replay).
 
 from __future__ import annotations
 
-import inspect
-
 import pytest
 
 from sync_spark.operators import dedup
@@ -68,12 +66,3 @@ class TestUnknownLayoutNoHint:
         # the sf0.001 documents table is a single tiny file: the
         # conditional must still fire there (narrow scan, real kernel)
         assert dedup.kernel_spread_width_from_files(spark, sf_small, "documents") >= 2
-
-
-def test_bloom_bitmap_has_no_dead_spread_param():
-    """ADVICE r6 low: bloom_bitmap's spread_width parameter was dead —
-    a caller passing it expected a fanned-out bitmap kernel and
-    silently got nothing. The parameter is gone; only
-    bloom_decontaminate (corpus probe side) takes one."""
-    assert "spread_width" not in inspect.signature(dedup.bloom_bitmap).parameters
-    assert "spread_width" in inspect.signature(dedup.bloom_decontaminate).parameters

@@ -55,8 +55,12 @@ class TestBloomDecontaminate:
 
     def test_bitmap_is_one_bounded_row(self, spark, sf_small):
         _, bench = _split(spark, sf_small)
-        bfp = dedup.winnow_fingerprint_rows(bench, "text", "doc_id")
-        bm = dedup.bloom_bitmap(bfp).collect()
+        dedup.winnow_fingerprint_rows(bench, "text", "doc_id").createOrReplaceTempView(
+            "__bm_test_fps"
+        )
+        bm = spark.sql(
+            f"WITH {dedup.bloom_bitmap_sql('__bm_test_fps')} SELECT bloom FROM __bmbitmap"
+        ).collect()
         assert len(bm) == 1
         words = bm[0]["bloom"]
         assert len(words) <= dedup.BLOOM_M_BITS // 64

@@ -49,108 +49,6 @@ class TestWinnowSqlKernel:
         )
         assert got.count() > 0  # identical docs share every fingerprint
 
-    def test_bloom_sql_pipeline_agrees_with_dataframe_form(self, spark, sf_small):
-        """The one-analysis-pass d_bloom_decontaminate SQL pipeline
-        (winnow kernels + bloom_bitmap_sql + bloom_probe_nmaybe_sql)
-        must produce exactly the DataFrame form's rows — same bitmap,
-        same false positives."""
-        from pyspark.sql import functions as F
-
-        from sync_spark.operators.dedup import bloom_decontaminate
-        from sync_spark.operators.relational import _t
-        from sync_spark.operators.text_queries import d_bloom_decontaminate
-
-        d = _t(spark, sf_small, "documents")
-        want = bloom_decontaminate(
-            d.filter(F.col("source") != "src0"),
-            d.filter(F.col("source") == "src0"),
-            "text", "doc_id", k=5, window=4, min_shared=1,
-        )
-        got = d_bloom_decontaminate(spark, sf_small)
-        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    def test_simhash_pairs_sql_agrees_with_operator(self, spark, sf_small):
-        """simhash_pairs_sql (one-analysis-pass twin) must produce
-        exactly simhash_near_pairs' rows — same lane-packed votes,
-        same signature bits, same pigeonhole candidates."""
-        from sync_spark.operators.dedup import simhash_near_pairs, simhash_pairs_sql
-        from sync_spark.operators.relational import _t
-
-        d = _t(spark, sf_small, "documents")
-        want = sorted(
-            map(tuple, simhash_near_pairs(d, "text", "doc_id", max_hamming=3).collect())
-        )
-        d.createOrReplaceTempView("__sh_agree_docs")
-        got = sorted(
-            map(tuple, spark.sql(simhash_pairs_sql("__sh_agree_docs")).collect())
-        )
-        assert got == want and len(got) > 0
-
-    def test_simhash_pairs_cached_agrees_with_twin(self, spark, sf_small):
-        """simhash_pairs_cached (one-signature-pass benched form) must
-        produce exactly the single-statement twin's rows — the persist
-        changes evaluation count, never values."""
-        from sync_spark.operators.dedup import simhash_pairs_cached, simhash_pairs_sql
-        from sync_spark.operators.relational import _t
-
-        d = _t(spark, sf_small, "documents")
-        d.createOrReplaceTempView("__sh_agree_docs")
-        want = sorted(
-            map(tuple, spark.sql(simhash_pairs_sql("__sh_agree_docs")).collect())
-        )
-        got = sorted(
-            map(
-                tuple,
-                simhash_pairs_cached(spark, "__sh_agree_docs").collect(),
-            )
-        )
-        assert got == want and len(got) > 0
-
-    def test_pair_kernel_sql_twins_agree_with_frames(self, spark, sf_small):
-        """ngram_jaccard_pairs / minhash_lsh_pairs (one-analysis-pass
-        SQL twins) must produce exactly the reference DataFrame
-        chains' rows — same prefix/suffix pruning, same seeded
-        signatures and banding, same jaccard doubles."""
-        from sync_spark.operators import dedup
-        from sync_spark.operators.relational import _t
-
-        d = _t(spark, sf_small, "documents")
-        for sql_fn, frames_fn in [
-            (dedup.ngram_jaccard_pairs, dedup.ngram_jaccard_pairs_frames),
-            (dedup.minhash_lsh_pairs, dedup.minhash_lsh_pairs_frames),
-        ]:
-            got = sorted(map(tuple, sql_fn(d, "text", "doc_id", n=3).collect()))
-            want = sorted(map(tuple, frames_fn(d, "text", "doc_id", n=3).collect()))
-            assert got == want and len(got) > 0
-
-    def test_decontaminate_hits_sql_agrees_with_operator(self, spark, sf_small):
-        """decontaminate_hits_sql (one-analysis-pass twin) must
-        reproduce decontaminate_hits' (doc_id, n_hits) rows exactly —
-        same kernels, same join multiplicities."""
-        from pyspark.sql import functions as F
-
-        from sync_spark.operators import dedup
-        from sync_spark.operators.relational import _t
-
-        d = _t(spark, sf_small, "documents")
-        want = dedup.decontaminate_hits(
-            d.filter(F.col("source") != "src0"),
-            d.filter(F.col("source") == "src0"),
-            "text", "doc_id", k=5, window=4,
-        )
-        d.createOrReplaceTempView("__dh_agree_docs")
-        got = spark.sql(
-            "WITH __dh_c AS (SELECT doc_id, text FROM __dh_agree_docs"
-            " WHERE source <> 'src0'), "
-            "__dh_b AS (SELECT doc_id, text FROM __dh_agree_docs"
-            " WHERE source = 'src0'), "
-            + dedup.decontaminate_hits_sql("__dh_c", "__dh_b", k=5, window=4)
-            + " SELECT doc_id, n_hits FROM __dhhits"
-        )
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        ) and got.count() > 0
-
     def test_incremental_probe_sql_agrees_with_shared_fp_counts(self, spark, sf_small):
         """The d_incremental_probe one-pass SQL must reproduce the
         shared_fp_counts composition it replaced (r11)."""
@@ -184,8 +82,53 @@ class TestWinnowSqlKernel:
             map(tuple, want.collect())
         ) and got.count() > 0
 
+    def test_simhash_pairs_sql_agrees_with_operator(self, spark, sf_small):
+        """The signatures simhash_pairs_cached builds in SQL must equal
+        the Column-built simhash operator's for every document — same
+        lane-packed votes, same signature bits — and the chunk values
+        must reassemble each signature."""
+        from sync_spark.operators import dedup
+        from sync_spark.operators.relational import _t
+
+        d = _t(spark, sf_small, "documents")
+        want = {r.doc_id: r.simhash for r in dedup.simhash(d, "text", "doc_id").collect()}
+        d.createOrReplaceTempView("__sh_sig_docs")
+        dedup.simhash_pairs_cached(spark, "__sh_sig_docs")
+        chunks = dedup._live_chunk_cache[-1].collect()
+        got, parts = {}, {}
+        for r in chunks:
+            got[r.doc_id] = r.simhash
+            parts[r.doc_id] = parts.get(r.doc_id, 0) | (r.chunk_val << (16 * r.chunk))
+        assert got == want and len(got) > 0
+        assert all(parts[i] == got[i] & 0xFFFFFFFFFFFFFFFF for i in got)
+
+    def test_simhash_pairs_cached_agrees_with_twin(self, spark, sf_small):
+        """Pigeonhole on 4×16-bit chunks is EXACT for hamming ≤ 3 (three
+        differing bits leave at least one chunk equal), so the shipped
+        pair set must equal a brute force over ALL document pairs of the
+        independent Column-built signatures."""
+        from sync_spark.operators import dedup
+        from sync_spark.operators.relational import _t
+
+        d = _t(spark, sf_small, "documents")
+        sigs = {r.doc_id: r.simhash for r in dedup.simhash(d, "text", "doc_id").collect()}
+        ids = sorted(sigs)
+        want = set()
+        for i, a in enumerate(ids):
+            for b in ids[i + 1:]:
+                ham = bin((sigs[a] ^ sigs[b]) & 0xFFFFFFFFFFFFFFFF).count("1")
+                if ham <= 3:
+                    want.add((a, b, ham))
+        d.createOrReplaceTempView("__sh_exact_docs")
+        got = {tuple(r) for r in dedup.simhash_pairs_cached(spark, "__sh_exact_docs").collect()}
+        assert got == want and len(got) > 0
+
     def test_winnow_pairs_sql_agrees_with_operator(self, spark):
-        from sync_spark.operators.dedup import winnow_pairs, winnow_pairs_sql
+        """winnow_pairs (one spark.sql statement) must equal pairs
+        counted on the driver from the Column-kernel fingerprints of
+        winnow_fingerprint_rows: postings per fingerprint, postings
+        longer than max_posting dropped, pairs sharing ≥ min_shared."""
+        from sync_spark.operators.dedup import winnow_fingerprint_rows, winnow_pairs
 
         rows = [
             (i, "the quick brown fox jumps over the lazy dog near the river bank " + tail)
@@ -195,9 +138,17 @@ class TestWinnowSqlKernel:
             ]
         ] + [(5, "short"), (6, "")]
         df = spark.createDataFrame(rows, ["doc_id", "text"])
-        df.createOrReplaceTempView("__wp_test_docs")
-        got = spark.sql(winnow_pairs_sql("__wp_test_docs", k=5, window=4,
-                                         min_shared=2, max_posting=100))
-        want = winnow_pairs(df, "text", "doc_id", k=5, window=4,
-                            min_shared=2, max_posting=100)
-        assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
+        postings = {}
+        for r in winnow_fingerprint_rows(df, "text", "doc_id", k=5, window=4).collect():
+            postings.setdefault(r.fp, set()).add(r.doc_id)
+        shared = {}
+        for ids in postings.values():
+            ids = sorted(ids)
+            if 2 <= len(ids) <= 100:
+                for i, a in enumerate(ids):
+                    for b in ids[i + 1:]:
+                        shared[(a, b)] = shared.get((a, b), 0) + 1
+        want = {(a, b, n) for (a, b), n in shared.items() if n >= 2}
+        got = winnow_pairs(df, "text", "doc_id", k=5, window=4,
+                           min_shared=2, max_posting=100)
+        assert {tuple(r) for r in got.collect()} == want and len(want) > 0

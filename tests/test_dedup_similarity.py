@@ -15,9 +15,10 @@ def test_minhash_identical_docs_same_signature(spark):
     df = spark.createDataFrame(
         [Row(doc_id=1, text="a b c d e f g h"), Row(doc_id=2, text="a b c d e f g h")]
     )
-    sig = dedup.minhash_signatures(df, "text", "doc_id").collect()
-    sigs = {r.doc_id: r.signature for r in sig}
-    assert sigs[1] == sigs[2]
+    # identical shingle sets ⇒ identical signatures ⇒ every band
+    # collides, so the pair is found and verified at Jaccard 1.0
+    pairs = dedup.minhash_lsh_pairs(df, "text", "doc_id").collect()
+    assert [tuple(p) for p in pairs] == [(1, 2, 1.0)]
 
 
 def test_minhash_lsh_recall_vs_exact(spark, sf_small):
@@ -45,7 +46,8 @@ def test_simhash_duplicate_is_zero_distance(spark):
             Row(doc_id=3, text="entirely different words about spark engines"),
         ]
     )
-    pairs = dedup.simhash_near_pairs(df, "text", "doc_id", max_hamming=3).collect()
+    df.createOrReplaceTempView("__sh_crafted_docs")
+    pairs = dedup.simhash_pairs_cached(spark, "__sh_crafted_docs", max_hamming=3).collect()
     assert {(p.id_a, p.id_b, p.hamming) for p in pairs} == {(1, 2, 0)}
 
 

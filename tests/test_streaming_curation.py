@@ -156,37 +156,6 @@ def test_matches_batch_oracle(spark, dirs):
     assert expected  # non-degenerate: something survived
 
 
-def test_winnow_fps_array_agrees_with_batch_operator(spark, sf_small):
-    """The window-free per-row fingerprint array (streaming probe)
-    must produce EXACTLY the batch winnowing operator's fingerprint
-    sets — same k-grams, hash, short-doc rule — doc by doc."""
-    from pyspark.sql import functions as F
-
-    from sync_spark.operators.dedup import winnow_fingerprint_rows, winnow_fps_array
-    from sync_spark.sources.readers import read_table
-
-    d = read_table(spark, sf_small, "documents").limit(100)
-    batch = {
-        r.doc_id: set(r.fps)
-        for r in winnow_fingerprint_rows(d, "text", "doc_id")
-        .groupBy("doc_id")
-        .agg(F.collect_set("fp").alias("fps"))
-        .collect()
-    }
-    hof = {
-        r.doc_id: set(r.fps)
-        for r in d.select(
-            "doc_id", winnow_fps_array(F.col("text")).alias("fps")
-        ).collect()
-    }
-    assert set(hof) >= set(batch)
-    for doc_id, fps in batch.items():
-        assert hof[doc_id] == fps, doc_id
-    # docs absent from the batch side (no k-grams) must be empty sets
-    for doc_id in set(hof) - set(batch):
-        assert hof[doc_id] == set()
-
-
 def test_streaming_decontamination_gate(spark, dirs):
     """A streaming doc sharing a verbatim >= k+window-1 token run with
     the benchmark never reaches the curated corpus; clean docs do."""

@@ -140,6 +140,8 @@ def test_winnow_pairs_crafted(spark):
             Row(doc_id=1, text="aa bb " + run + " cc dd"),
             Row(doc_id=2, text="zz " + run + " xx yy ww"),
             Row(doc_id=3, text="totally different words here for contrast pad pad"),
+            Row(doc_id=4, text="short"),  # < k tokens: no fingerprints
+            Row(doc_id=5, text=""),  # empty doc: no fingerprints
         ]
     )
     pairs = winnow_pairs(df, "text", "doc_id", k=5, window=4, min_shared=1).collect()
