@@ -4,8 +4,11 @@
 contention mode, see SCALE.md) and, when N consecutive medians read
 below --gate, run the artifact commands in order, re-checking the
 gate between commands. Each command's stdout goes to its own file
-under --outdir; progress to stderr. Exits after the command list
-completes once, or at --hours."""
+under --outdir; progress to stderr, one ``DONE`` line per command
+with its return code. Stops after the command list completes once,
+or at --hours, then prints a JSON summary of completed / failed /
+not-run commands and exits non-zero if any command failed or did not
+run."""
 import argparse
 import json
 import subprocess
@@ -13,7 +16,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from sync_spark.registry import all_queries
 from sync_spark.testing import duckdb_conn
@@ -28,7 +32,7 @@ def gauge(con, sql) -> float:
     return sorted(runs)[1]
 
 
-def main() -> None:
+def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--gate", type=float, default=0.08)
     ap.add_argument("--need", type=int, default=2, help="consecutive calm reads")
@@ -52,6 +56,8 @@ def main() -> None:
     t_end = time.time() + args.hours * 3600
     streak = 0
     i = 0
+    completed: list[str] = []
+    failed: list[dict] = []
     while i < len(cmds) and time.time() < t_end:
         m = gauge(con, sql)
         print(json.dumps({"t": round(time.time(), 1), "gauge": round(m, 4),
@@ -66,13 +72,20 @@ def main() -> None:
             print(f"FIRING {name}", file=sys.stderr, flush=True)
             with open(outdir / f"{name}.out", "w") as so, \
                  open(outdir / f"{name}.err", "w") as se:
-                subprocess.run(cmd, stdout=so, stderr=se, cwd="/root/repo")
-            print(f"DONE {name}", file=sys.stderr, flush=True)
+                rc = subprocess.run(cmd, stdout=so, stderr=se, cwd=REPO).returncode
+            print(f"DONE {name} returncode={rc}", file=sys.stderr, flush=True)
+            if rc == 0:
+                completed.append(name)
+            else:
+                failed.append({"name": name, "returncode": rc})
             i += 1
             streak = 0  # re-confirm calm before the next command
             continue
         time.sleep(args.interval)
+    not_run = [name for name, _ in cmds[i:]]
+    print(json.dumps({"completed": completed, "failed": failed, "not_run": not_run}))
+    return 1 if failed or not_run else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

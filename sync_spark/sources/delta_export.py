@@ -36,10 +36,10 @@ crash can only leak unreferenced files, never reference missing ones.
 Scale: an export is O(#changed files) link syscalls + one JSON
 append — the add/remove diff touches file NAMES only, no data scan.
 At 100 TB with 4096 buckets and a few files per bucket the log stays
-KB-sized per version; Delta's checkpoint-parquet compaction is the
-documented next step when version count grows into the thousands
-(readers replay from the last checkpoint; without one they replay all
-JSON versions — correct, just slower).
+KB-sized per version; ``write_checkpoint`` compacts it into a Delta
+checkpoint parquet when the version count grows (readers replay from
+the last checkpoint; without one they replay all JSON versions —
+correct, just slower).
 """
 
 from __future__ import annotations
@@ -87,16 +87,17 @@ def _read_actions(delta_dir: str, version: int) -> list[dict]:
         return [json.loads(line) for line in fh if line.strip()]
 
 
-def replay_log(delta_dir: str) -> dict:
-    """Replay the full log the way a Delta reader does: later actions
-    win per path. Returns {'files': {path: add_action}, 'metaData':
-    last metaData or None, 'protocol': last protocol or None,
-    'txns': {appId: highest version}, 'version': last version or -1}."""
-    files: dict[str, dict] = {}
-    meta: Optional[dict] = None
-    proto: Optional[dict] = None
-    txns: dict[str, int] = {}
-    versions = log_versions(delta_dir)
+def _fold(
+    delta_dir: str,
+    versions: list[int],
+    files: Optional[dict[str, dict]] = None,
+    meta: Optional[dict] = None,
+    proto: Optional[dict] = None,
+) -> dict:
+    """Apply the JSON commits ``versions`` in order on top of a seed
+    state (empty by default): later actions win per path. Returns
+    {'files': {path: add_action}, 'metaData', 'protocol'}."""
+    files = {} if files is None else files
     for v in versions:
         for action in _read_actions(delta_dir, v):
             if "add" in action:
@@ -107,16 +108,18 @@ def replay_log(delta_dir: str) -> dict:
                 meta = action["metaData"]
             elif "protocol" in action:
                 proto = action["protocol"]
-            elif "txn" in action:
-                t = action["txn"]
-                txns[t["appId"]] = max(txns.get(t["appId"], -1), t["version"])
-    return {
-        "files": files,
-        "metaData": meta,
-        "protocol": proto,
-        "txns": txns,
-        "version": versions[-1] if versions else -1,
-    }
+    return {"files": files, "metaData": meta, "protocol": proto}
+
+
+def replay_log(delta_dir: str) -> dict:
+    """Replay the full JSON log the way a Delta reader does: later
+    actions win per path. Returns {'files': {path: add_action},
+    'metaData': last metaData or None, 'protocol': last protocol or
+    None, 'version': last version or -1}."""
+    versions = log_versions(delta_dir)
+    state = _fold(delta_dir, versions)
+    state["version"] = versions[-1] if versions else -1
+    return state
 
 
 def write_commit(delta_dir: str, version: int, actions: list[dict]) -> None:
@@ -280,28 +283,10 @@ def read_export(spark: SparkSession, delta_dir: str, version: Optional[int] = No
     checkpoint-aware reader — and scan the active file set with
     partition values from the log, NOT from directory listing. This is the in-container verification path (no
     delta jar needed) and doubles as time travel over the export."""
-    from pyspark.sql import functions as F
-
     state = replay_with_checkpoint(delta_dir, version)
     version = state["version"]
     files = state["files"]
     if not files:
-        if state["metaData"] is not None:
-            # a valid empty table (e.g. a freshly-bootstrapped delta
-            # store): the log's schemaString is the schema, exactly as
-            # a Delta reader would present it
-            import json as _json
-
-            from pyspark.sql import types as T
-
-            full = T.StructType.fromJson(
-                _json.loads(state["metaData"]["schemaString"])
-            )
-            part_cols = set(state["metaData"].get("partitionColumns") or [])
-            rows = T.StructType(
-                [f for f in full.fields if f.name not in part_cols]
-            )
-            return spark.createDataFrame([], rows)
         raise ValueError(f"no active files at version {version} in {delta_dir!r}")
     paths = [os.path.join(delta_dir, p) for p in sorted(files)]
     # basePath keeps partition discovery consistent; mergeSchema
@@ -367,13 +352,10 @@ def vacuum_export(delta_dir: str, keep_versions: int = 2) -> dict:
     # checkpoint-seeded replay per retained version; union = survivors
     survivors: set[str] = set()
     per_version: dict[int, dict[str, dict]] = {}
-    cutoff_txns: dict[str, int] = {}
     for v in retained:
         st = replay_with_checkpoint(delta_dir, v)
         per_version[v] = st["files"]
         survivors |= set(st["files"])
-        if v == retained[0]:
-            cutoff_txns = st.get("txns") or {}
     latest = replay_with_checkpoint(delta_dir, all_versions[-1])
     meta, proto = latest["metaData"], latest["protocol"]
 
@@ -411,11 +393,6 @@ def vacuum_export(delta_dir: str, keep_versions: int = 2) -> dict:
             base_actions.append({"protocol": proto})
         if meta:
             base_actions.append({"metaData": meta})
-        # carry writer-txn state through the collapse: dropping it
-        # would reset every streaming writer's idempotence watermark
-        # and let a crash-replayed batch double-apply
-        for app, tv in sorted(cutoff_txns.items()):
-            base_actions.append({"txn": {"appId": app, "version": tv}})
         if cp_stale:
             # Self-correcting base commit for the crash window between
             # the os.replace below and the _last_checkpoint unlink: a
@@ -521,14 +498,12 @@ def write_checkpoint(
     files = state["files"]
     meta = state["metaData"]
     proto = state["protocol"]
-    txns = state.get("txns") or {}
     if meta is None or proto is None:
         raise ValueError("log replay found no metaData/protocol — corrupt log?")
 
     proto_t = pa.struct(
         [("minReaderVersion", pa.int32()), ("minWriterVersion", pa.int32())]
     )
-    txn_t = pa.struct([("appId", pa.string()), ("version", pa.int64())])
     format_t = pa.struct(
         [("provider", pa.string()), ("options", pa.map_(pa.string(), pa.string()))]
     )
@@ -562,20 +537,15 @@ def write_checkpoint(
          "dataChange": False}
         for _, a in sorted(files.items())
     ]
-    txn_rows = [
-        {"appId": app, "version": v} for app, v in sorted(txns.items())
-    ]
-    n = 2 + len(add_rows) + len(txn_rows)
+    n = 2 + len(add_rows)
     protocol_col = [proto] + [None] * (n - 1)
     meta_col = [None, meta_row] + [None] * (n - 2)
-    add_col = [None, None] + add_rows + [None] * len(txn_rows)
-    txn_col = [None] * (2 + len(add_rows)) + txn_rows
+    add_col = [None, None] + add_rows
     table = pa.table(
         {
             "protocol": pa.array(protocol_col, type=proto_t),
             "metaData": pa.array(meta_col, type=meta_t),
             "add": pa.array(add_col, type=add_t),
-            "txn": pa.array(txn_col, type=txn_t),
         }
     )
     final = _checkpoint_file(delta_dir, version)
@@ -625,64 +595,26 @@ def replay_with_checkpoint(delta_dir: str, version: Optional[int] = None) -> dic
     if version is None:
         v_all = log_versions(delta_dir)
         version = max(v_all[-1] if v_all else -1, lc["version"] if lc else -1)
-    if lc is None or lc["version"] > version:
-        # pure-JSON replay trimmed to `version`
-        files: dict[str, dict] = {}
-        meta = proto = None
-        txns: dict[str, int] = {}
-        for v in log_versions(delta_dir):
-            if v > version:
-                break
-            for action in _read_actions(delta_dir, v):
-                if "add" in action:
-                    files[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    files.pop(action["remove"]["path"], None)
-                elif "metaData" in action:
-                    meta = action["metaData"]
-                elif "protocol" in action:
-                    proto = action["protocol"]
-                elif "txn" in action:
-                    t = action["txn"]
-                    txns[t["appId"]] = max(txns.get(t["appId"], -1), t["version"])
-        return {"files": files, "metaData": meta, "protocol": proto,
-                "txns": txns, "version": version}
-
-    tbl = pq.read_table(_checkpoint_file(delta_dir, lc["version"]))
-    files = {}
+    files: dict[str, dict] = {}
     meta = proto = None
-    txns = {}
-    for row in tbl.to_pylist():
-        if row.get("protocol"):
-            proto = row["protocol"]
-        if row.get("metaData"):
-            m = dict(row["metaData"])
-            m["configuration"] = dict(m.get("configuration") or [])
-            f = dict(m["format"] or {})
-            f["options"] = dict(f.get("options") or [])
-            m["format"] = f
-            meta = m
-        if row.get("add"):
-            a = dict(row["add"])
-            a["partitionValues"] = dict(a.get("partitionValues") or [])
-            files[a["path"]] = a
-        if row.get("txn"):  # column absent in pre-r11 checkpoints
-            t = row["txn"]
-            txns[t["appId"]] = max(txns.get(t["appId"], -1), t["version"])
-    for v in log_versions(delta_dir):
-        if v <= lc["version"] or v > version:
-            continue
-        for action in _read_actions(delta_dir, v):
-            if "add" in action:
-                files[action["add"]["path"]] = action["add"]
-            elif "remove" in action:
-                files.pop(action["remove"]["path"], None)
-            elif "metaData" in action:
-                meta = action["metaData"]
-            elif "protocol" in action:
-                proto = action["protocol"]
-            elif "txn" in action:
-                t = action["txn"]
-                txns[t["appId"]] = max(txns.get(t["appId"], -1), t["version"])
-    return {"files": files, "metaData": meta, "protocol": proto,
-            "txns": txns, "version": version}
+    base = -1
+    if lc is not None and lc["version"] <= version:
+        base = lc["version"]
+        for row in pq.read_table(_checkpoint_file(delta_dir, base)).to_pylist():
+            if row.get("protocol"):
+                proto = row["protocol"]
+            if row.get("metaData"):
+                m = dict(row["metaData"])
+                m["configuration"] = dict(m.get("configuration") or [])
+                f = dict(m["format"] or {})
+                f["options"] = dict(f.get("options") or [])
+                m["format"] = f
+                meta = m
+            if row.get("add"):
+                a = dict(row["add"])
+                a["partitionValues"] = dict(a.get("partitionValues") or [])
+                files[a["path"]] = a
+    versions = [v for v in log_versions(delta_dir) if base < v <= version]
+    state = _fold(delta_dir, versions, files, meta, proto)
+    state["version"] = version
+    return state

@@ -46,10 +46,6 @@ round-1 anti-pattern; at the reference's 500-table scale that was
 The batch stays persisted: without it every consumer (summary, DLQ,
 MERGE) re-scans the source, and the stream's own ``numInputRows``
 counts each re-scan.
-
-On a deployment with a table format the same ``apply_changes`` plan
-feeds Delta/Iceberg ``MERGE INTO``; the bucketed store is the
-dependency-free equivalent with the same asymptotic write cost.
 """
 
 from __future__ import annotations
@@ -90,30 +86,6 @@ class TableTarget:
     row_schema: T.StructType
     key_cols: list[str]
     ignore_deletes: bool = False
-    # "bucketed" (default, dependency-free store) or "delta": the
-    # target IS a Delta-protocol table (sources/delta_store.py) —
-    # same apply_changes plan, Delta log as the only metadata,
-    # protocol txn actions for effectively-once replay
-    table_format: str = "bucketed"
-
-
-def lakehouse_merge_available() -> bool:
-    """Probe for an in-JVM lakehouse MERGE backend (delta-spark /
-    Iceberg runtime). When one lands in the environment, _apply_batch
-    is the single seam to swap: its bucketed read-merge-overwrite
-    becomes ``MERGE INTO`` against the table format with the SAME
-    apply_changes change set (the plan is backend-agnostic; only the
-    write primitive changes). Probed at call time, not import time, so
-    adding the jar to a running deployment's env needs no code change.
-    This container ships neither package, so the bucketed store is the
-    active backend (equivalence to the Delta protocol is pinned
-    offline by test_delta_export.py's jar-free read-back instead)."""
-    import importlib.util
-
-    return (
-        importlib.util.find_spec("delta") is not None
-        or importlib.util.find_spec("pyiceberg") is not None
-    )
 
 
 def _write_atomic(df: DataFrame, path: str) -> None:
@@ -464,9 +436,6 @@ class CdcPipeline:
                 good = self._apply_rules_unsecured(good, rules)
 
                 stored_schema = self._stored_schema[t.source_table]
-                if t.table_format == "delta":
-                    self._apply_delta(t, good, touched, stored_schema, batch_id)
-                    continue
                 if not os.path.exists(t.target_path):
                     # first events for a table that was never
                     # snapshotted (insert-only mapping, or a mapping
@@ -571,65 +540,6 @@ class CdcPipeline:
                     snapshot_create(t.target_path, note=f"batch={batch_id}")
         finally:
             batch.unpersist()
-
-    def _apply_delta(
-        self,
-        t: TableTarget,
-        good: DataFrame,
-        touched: list[int],
-        stored_schema: T.StructType,
-        batch_id: int,
-    ) -> None:
-        """MERGE one table's change set into its Delta-protocol target
-        (sources/delta_store.py). Same apply_changes plan as the
-        bucketed path; differences are all protocol-native:
-
-        - idempotence via a ``txn {appId, version=batch_id}`` action
-          instead of overwrite-discipline (a crash-replayed batch is
-          skipped inside delta_merge);
-        - schema evolution via metaData re-emission (delta_merge
-          widens; narrowing/type-conflicts raise with the same
-          migration story as the bucketed guards);
-        - snapshot_after_batch is a no-op: every commit IS a
-          time-travel version.
-        """
-        from sync_spark.sources.delta_store import (
-            delta_snapshot_if_empty,
-            delta_merge,
-            replay_with_checkpoint,
-            table_config,
-        )
-
-        # bootstrap: first events for a never-snapshotted table
-        delta_snapshot_if_empty(
-            self.spark,
-            empty_frame(self.spark, stored_schema),
-            t.target_path,
-            t.key_cols,
-            self.n_buckets,
-        )
-        meta = replay_with_checkpoint(t.target_path)["metaData"]
-        key_cols, n_buckets = table_config(meta)
-        if key_cols != list(t.key_cols) or n_buckets != self.n_buckets:
-            # the summary's touched-bucket ids were derived under the
-            # pipeline's contract; merging under a different one would
-            # read/remove the wrong buckets — same refusal as
-            # overwrite_buckets' check_meta
-            raise ValueError(
-                f"delta table at {t.target_path!r} was created with "
-                f"key_cols={key_cols}, n_buckets={n_buckets} but this "
-                f"pipeline is configured with {list(t.key_cols)}, "
-                f"{self.n_buckets} — recreate or reconfigure"
-            )
-        delta_merge(
-            self.spark,
-            t.target_path,
-            good,
-            app_id=f"sync_spark.cdc.{t.source_table}",
-            txn_version=batch_id,
-            row_schema=stored_schema,
-            touched=touched,
-        )
 
     # -- stream lifecycle --------------------------------------------------
 

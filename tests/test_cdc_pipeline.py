@@ -742,15 +742,6 @@ def test_export_exhausted_preserves_distinct_null_seq_rows(spark, pipeline_dirs,
     assert spark.read.parquet(f"{out_dir}/table=users").count() == 3
 
 
-def test_lakehouse_probe_reports_backend():
-    """The jar probe answers without raising in any environment; in
-    this container neither delta-spark nor pyiceberg ships, so the
-    bucketed backend must be the active one."""
-    from sync_spark.streaming.pipeline import lakehouse_merge_available
-
-    assert lakehouse_merge_available() is False
-
-
 def test_reserved_envelope_names_rejected(spark):
     """r9 (ADVICE r8): a source schema carrying op/seq/secured would be
     silently shadowed by the envelope bookkeeping columns (and never

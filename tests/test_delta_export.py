@@ -10,6 +10,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -191,6 +192,44 @@ def test_schema_evolution_reemits_metadata(spark, tmp_path):
     got = {(r.id, r.v, r.extra) for r in read_export(spark, dl).collect()}
     want = {(r.id, r.v, r.extra) for r in read_target(spark, tgt).collect()}
     assert got == want
+
+
+def test_uncommitted_files_invisible(spark, tmp_path, monkeypatch):
+    """Crash window of export_delta: data files are linked BEFORE the
+    log commit, so a crash between the two leaves part files on disk
+    that no log version names. A reader never sees them (the log IS
+    the listing), and the next export commits the store state
+    exactly."""
+    import sync_spark.sources.delta_export as D
+
+    tgt, dl = str(tmp_path / "t"), str(tmp_path / "delta")
+    write_bucketed(_rows(spark, [(i, f"v{i}") for i in range(10)]), tgt, ["id"], N_BUCKETS)
+    assert export_delta(spark, tgt, dl) == 0
+    before = {(r.id, r.v) for r in read_export(spark, dl).collect()}
+    _merge(spark, tgt, [(999, "GHOST", "upsert")])
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before commit")
+
+    monkeypatch.setattr(D, "write_commit", crash)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        export_delta(spark, tgt, dl)
+    monkeypatch.undo()
+
+    on_disk = {
+        f"{b}/{f}"
+        for b in os.listdir(dl)
+        if b.startswith(f"{BUCKET_COL}=")
+        for f in os.listdir(os.path.join(dl, b))
+        if f.endswith(".parquet")
+    }
+    assert on_disk - set(replay_log(dl)["files"]), "crash left no stray file"
+    assert log_versions(dl) == [0]
+    got = {(r.id, r.v) for r in read_export(spark, dl).collect()}
+    assert got == before and (999, "GHOST") not in got
+
+    assert export_delta(spark, tgt, dl) == 1
+    assert {(r.id, r.v) for r in read_export(spark, dl).collect()} == _state(spark, tgt)
 
 
 def test_cli_export_delta_verb(spark, tmp_path, capsys):
