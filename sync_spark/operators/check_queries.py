@@ -42,13 +42,9 @@ def chk_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nonsubset_pairs = 0 — two different code paths must agree), and
     banding recalls ≥90% of the exact pair set."""
     d = tq._t(spark, sf_dir, "documents")
-    w = tq._doc_kernel_width(spark, sf_dir)
-    exact = dedup.ngram_jaccard_pairs(
-        d, "text", "doc_id", n=3, threshold=0.8, spread_width=w
-    )
+    exact = dedup.ngram_jaccard_pairs(d, "text", "doc_id", n=3, threshold=0.8)
     lsh = dedup.minhash_lsh_pairs(
-        d, "text", "doc_id", n=3, num_hashes=32, bands=8, threshold=0.8,
-        spread_width=w,
+        d, "text", "doc_id", n=3, num_hashes=32, bands=8, threshold=0.8
     )
     e = exact.select("id_a", "id_b").withColumn("in_exact", F.lit(1))
     l = lsh.select("id_a", "id_b").withColumn("in_lsh", F.lit(1))

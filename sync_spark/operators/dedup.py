@@ -56,9 +56,7 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 _KERNEL_CHUNK_BYTES = 32 * 1024
 
 
-def spread_for_kernel(
-    df: DataFrame, min_partitions: int = 0, width: int | None = None
-) -> DataFrame:
+def spread_for_kernel(df: DataFrame) -> DataFrame:
     """Fan a narrow input out before a CPU-bound per-row kernel
     (winnowing, LM scoring, shingling). A small parquet file arrives
     as ONE input split (under files.maxPartitionBytes), which
@@ -67,43 +65,81 @@ def spread_for_kernel(
     strictly conditional because an unconditional one would shuffle
     the full corpus for nothing.
 
-    The width is sized from the optimizer's byte estimate (~one task
-    per 32 KB of input, capped at defaultParallelism): at toy scale
-    full CPU width costs more in task-launch waves than the kernel
-    itself (measured 0.71s at 32-way vs 0.51s at 8-way for the sf0.1
-    winnow kernel), while at real scale the cap takes over."""
-    if width is not None:
-        # caller already sized the spread from file bytes
-        # (kernel_spread_width_from_files): 0 = scan is wide enough,
-        # skip BOTH the optimizer-stats probe and the .rdd partition
-        # probe (~0.2s of query construction each call)
-        return df.repartition(width) if width > 0 else df
-    target = kernel_spread_width(df, min_partitions)
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    The width is sized from the bytes of the frame's local input
+    files (~one task per 32 KB, capped at defaultParallelism; see
+    ``_spread_width_for_bytes``): at toy scale full CPU width costs
+    more in task-launch waves than the kernel itself (measured 0.71s
+    at 32-way vs 0.51s at 8-way for the sf0.1 winnow kernel), while
+    at real scale the cap takes over. A frame with no local files
+    behind it (in-memory ``createDataFrame`` rows, remote storage)
+    gets NO spread — the unknown-layout rule; in-memory frames
+    already arrive at defaultParallelism slices."""
+    width = _frame_spread_width(df)
+    return df.repartition(width) if width else df
 
 
-def kernel_spread_width(df: DataFrame, min_partitions: int = 0) -> int:
-    """The task-width calculation behind ``spread_for_kernel``,
-    exposed for SQL-string kernels that need the number for a
-    ``REPARTITION(n)`` hint (a DataFrame-side repartition can't be
-    injected into a ``spark.sql`` pipeline without splitting it into
-    two analysis passes). Sized from the optimizer's byte estimate —
-    ~one task per 32 KB at toy scale, capped at defaultParallelism at
-    real scale — so a hinted SQL kernel scales exactly like the
-    DataFrame form."""
-    sc = df.sparkSession.sparkContext
-    cap = sc.defaultParallelism
-    if min_partitions:
-        return min(min_partitions, cap)
+def spread_hint(df: DataFrame) -> str:
+    """``spread_for_kernel`` for SQL-string kernels: the conditional
+    ``/*+ REPARTITION(n) */`` hint for a SELECT over ``df`` (a
+    DataFrame-side repartition can't be injected into a ``spark.sql``
+    pipeline without splitting it into two analysis passes). Empty
+    string when the scan is already at least as wide as the kernel
+    wants. Two calls on one frame give one width, so kernels sharing
+    a persisted plan stay plan-equal."""
+    width = _frame_spread_width(df)
+    return f"/*+ REPARTITION({width}) */" if width else ""
+
+
+def _frame_spread_width(df: DataFrame) -> int:
+    """The kernel width for ``df`` from its input files' bytes
+    (``inputFiles`` reads the scan's file index — no job, no plan
+    probe). 0 for a frame with no local files behind it."""
+    size = 0
+    for uri in df.inputFiles():
+        parsed = urlparse(uri)
+        if parsed.scheme not in ("", "file"):
+            return 0
+        size += os.path.getsize(unquote(parsed.path))
+    return _spread_width_for_bytes(df.sparkSession, size or None)
+
+
+def _spread_width_for_bytes(spark, size: int | None) -> int:
+    cap = spark.sparkContext.defaultParallelism
+    if size is None:
+        # Unknown layout (remote storage, in-memory rows): NO spread.
+        # Assuming "narrow" here would emit an unconditional
+        # REPARTITION(cap) that at scale forces a full-corpus shuffle
+        # and can even SHRINK a thousands-split scan down to
+        # defaultParallelism — the exact hazard the conditional exists
+        # to prevent. A missed spread on a genuinely-narrow toy input
+        # costs one slow kernel; a forced shuffle at 100 TB costs the
+        # job.
+        return 0
+    width = max(2, min(cap, size // _KERNEL_CHUNK_BYTES + 1))
+    max_split = _parse_byte_size(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+    )
+    est_splits = max(1, (size + max_split - 1) // max_split)
+    return width if est_splits < width else 0
+
+
+def _parse_byte_size(value: str, default: int = 134217728) -> int:
+    """Spark byte-size conf parser: bare number = bytes, with the
+    standard case-insensitive k/m/g/t (optionally + 'b') suffixes
+    ('128m', '128MB', '134217728b'). Falls back to ``default`` on
+    anything unparseable rather than raising at query-construction
+    time."""
     try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:  # stats unavailable → assume big
-        size = 1 << 40
-    return max(2, min(cap, size // _KERNEL_CHUNK_BYTES + 1))
+        s = str(value).strip().lower()
+        if s.endswith("b"):
+            s = s[:-1]
+        mult = 1
+        if s and s[-1] in "kmgt":
+            mult = 1024 ** ("kmgt".index(s[-1]) + 1)
+            s = s[:-1]
+        return int(s) * mult
+    except (ValueError, AttributeError):
+        return default
 
 
 def gram_array(toks: Column, k: int) -> Column:
@@ -121,22 +157,18 @@ def gram_array(toks: Column, k: int) -> Column:
     )
 
 
-def _doc_shingles(
-    df: DataFrame, text_col: str, id_col: str, n: int,
-    spread_width: int | None = None,
-) -> DataFrame:
+def _doc_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """Two-step shingling: materialize the token array as a column
     FIRST, then build n-grams with element_at (gram_array). Higher-
     order lambdas run interpreted (no codegen), so an un-materialized
     split() child would be re-evaluated per element — measured 13×
-    slower. ``spread_width`` (r11): callers over testdata-layout
-    tables pass kernel_spread_width_from_files so construction skips
-    the optimizer-stats + .rdd plan probes (~0.2s/call)."""
+    slower. The token frame is fanned out by ``spread_for_kernel``,
+    sized from ``df``'s input files, so every kernel over one corpus
+    frame builds the same shingle plan."""
     from sync_spark.functions.text import staged_expr, tokens_named
 
     toks = spread_for_kernel(
-        df.select(F.col(id_col).alias("doc_id"), tokens_named(text_col).alias("toks")),
-        width=spread_width,
+        df.select(F.col(id_col).alias("doc_id"), tokens_named(text_col).alias("toks"))
     )
     # memoized (r11 opt round): the gram HOF is a fixed expression over
     # the staged "toks" attribute — one build per (n, k) per context
@@ -150,40 +182,45 @@ def _doc_shingles(
     return toks.select("doc_id", F.array_sort(F.array_distinct(gram)).alias("sh"))
 
 
-# most-recent persisted shingle table; bounded-leak discipline for
-# long-lived sessions (see _doc_shingles_cached)
+def _persist_slot(slots: list[DataFrame], df: DataFrame, level: StorageLevel) -> DataFrame:
+    """Persist ``df`` at ``level`` as the ONE live entry of ``slots``.
+
+    Results are lazy, so an operator can't know when the caller is
+    done with its cache — instead each new entry evicts the previous
+    one (bounded to ONE live cache per slot list). A
+    still-lazy older result simply recomputes; long-lived sessions
+    never accumulate stale persisted relations.
+
+    Evict BEFORE persisting the replacement: Spark's cache manager
+    keys on the LOGICAL PLAN, so unpersisting an old handle whose plan
+    equals the new one would evict the fresh cache too."""
+    while slots:
+        try:
+            slots.pop().unpersist()
+        except Exception:
+            pass  # session already stopped
+    df = df.persist(level)
+    slots.append(df)
+    return df
+
+
+# most-recent persisted shingle table (see _persist_slot)
 _live_shingle_cache: list[DataFrame] = []
 
 
-def _doc_shingles_cached(
-    df: DataFrame, text_col: str, id_col: str, n: int,
-    spread_width: int | None = None,
-) -> DataFrame:
+def _doc_shingles_cached(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """Persisted shingle table with derived size column.
 
     ORDER MATTERS: persist BEFORE attaching size(sh)/filters. Catalyst
     pushes projections and predicates through the shingle projection,
     substituting the full transform expression into each consumer —
     measured 3× the shingling cost when n_sh and the >0 filter sat
-    below the cache barrier.
-
-    Cache lifetime: results are lazy, so the operator can't know when
-    the caller is done — instead each new shingle cache evicts the
-    previous one (bounded to ONE live cache per session). A still-lazy
-    older result simply recomputes; long-lived sessions never
-    accumulate stale shingle tables."""
-    # evict BEFORE persisting the replacement: Spark's cache manager
-    # keys on the LOGICAL PLAN, so unpersisting an old handle whose
-    # plan equals the new one would evict the fresh cache too
-    while _live_shingle_cache:
-        try:
-            _live_shingle_cache.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
-    base = _doc_shingles(df, text_col, id_col, n, spread_width).persist(
-        StorageLevel.MEMORY_AND_DISK
+    below the cache barrier. Cache lifetime: one live shingle table
+    per session (``_persist_slot``)."""
+    base = _persist_slot(
+        _live_shingle_cache, _doc_shingles(df, text_col, id_col, n),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _live_shingle_cache.append(base)
     return base.withColumn("n_sh", F.size("sh")).filter(F.col("n_sh") > 0)
 
 
@@ -193,7 +230,6 @@ def ngram_jaccard_pairs(
     id_col: str,
     n: int = 3,
     threshold: float = 0.8,
-    spread_width: int | None = None,
 ) -> DataFrame:
     """EXACT Jaccard ≥ threshold pairs over word n-gram shingle sets —
     a prefix-filtered inverted index (PPJoin-style; Xiao et al.,
@@ -203,11 +239,10 @@ def ngram_jaccard_pairs(
     candidate aggregate and two-tier verification run as ONE
     spark.sql analysis pass (r11, guide §4/§1.4: the equivalent
     ~40-call Column chain cost ~0.3s of construction per call at bench
-    scale). ``spread_width``: see _doc_shingles — pass the file-stat
-    width so the shingle build skips its plan probes; callers sharing
-    one bench session should pass the SAME value so the shingle cache
-    stays plan-equal."""
-    docs = _doc_shingles_cached(df, text_col, id_col, n, spread_width)
+    scale). The shingle build's spread is sized from ``df`` itself
+    (see _doc_shingles), so callers sharing one corpus frame share
+    one plan-equal shingle cache."""
+    docs = _doc_shingles_cached(df, text_col, id_col, n)
     docs.createOrReplaceTempView("__njp_docs")
     return df.sparkSession.sql(ngram_jaccard_pairs_sql("__njp_docs", threshold))
 
@@ -291,17 +326,15 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.8,
-    spread_width: int | None = None,
 ) -> DataFrame:
     """MinHash→LSH candidate generation + exact-Jaccard verification
     (see ``minhash_lsh_pairs_sql``). The persisted shingle table
     registers as a temp view and the signature aggregate, banding
     join and verification run as ONE spark.sql analysis pass (r11,
     guide §4/§1.4: the 32 per-seed min-agg Columns plus 8 band structs
-    cost ~0.55s of py4j construction per call at bench scale).
-    ``spread_width``: see ngram_jaccard_pairs."""
+    cost ~0.55s of py4j construction per call at bench scale)."""
     assert num_hashes % bands == 0
-    docs = _doc_shingles_cached(df, text_col, id_col, n, spread_width)
+    docs = _doc_shingles_cached(df, text_col, id_col, n)
     docs.createOrReplaceTempView("__mhp_docs")
     return df.sparkSession.sql(
         minhash_lsh_pairs_sql("__mhp_docs", num_hashes, bands, threshold)
@@ -427,8 +460,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 64) -> DataFr
     return agg.select("doc_id", sig.alias("simhash"))
 
 
-# most-recent persisted simhash chunk relation; same bounded-leak
-# discipline as _live_shingle_cache above
+# most-recent persisted simhash chunk relation (see _persist_slot)
 _live_chunk_cache: list[DataFrame] = []
 
 
@@ -455,15 +487,11 @@ def simhash_pairs_cached(
     keeps the lineage for the lost-executor posture.
 
     Cache lifetime mirrors _doc_shingles_cached: each call evicts the
-    previous chunk cache (bounded to ONE live entry), so a long-lived
-    session serving varying sources doesn't accumulate persisted chunk
-    relations and driver-side plan references."""
+    previous chunk cache (``_persist_slot``, bounded to ONE live
+    entry), so a long-lived session serving varying sources doesn't
+    accumulate persisted chunk relations and driver-side plan
+    references."""
     assert bits % 2 == 0
-    while _live_chunk_cache:
-        try:
-            _live_chunk_cache.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
     lanes = ",\n         ".join(
         f"SUM((shiftright(h, {j * 2}) & 1) + shiftleft(shiftright(h, {j * 2 + 1}) & 1, 32)) AS p{j}"
         for j in range(bits // 2)
@@ -496,8 +524,8 @@ WITH __sht AS (
   LATERAL VIEW explode(sequence(0, {n_chunks - 1})) __shk AS chunk
 )
 SELECT doc_id, simhash, chunk, chunk_val FROM __shc
-""").persist()
-    _live_chunk_cache.append(chunks)
+""")
+    chunks = _persist_slot(_live_chunk_cache, chunks, StorageLevel.MEMORY_AND_DISK_DESER)
     a, b = chunks.alias("a"), chunks.alias("b")
     cand = (
         a.join(
@@ -568,89 +596,6 @@ def winnow_fingerprint_rows(
     return staged.select("doc_id", F.explode_outer("__fps").alias("fp")).filter(
         F.col("fp").isNotNull()
     )
-
-
-def kernel_spread_hint(spark, sf_dir: str, table: str = "documents") -> str:
-    """The conditional ``/*+ REPARTITION(n) */`` hint for SQL-string
-    kernels, sized WITHOUT touching Spark plans: table bytes come from
-    os.stat (readers.table_size_bytes), the scan's expected split
-    count from ``spark.sql.files.maxPartitionBytes``, and the kernel
-    width from the same ~32 KB/task rule as kernel_spread_width. The
-    plan-based probe (optimizer stats + .rdd partition count) costs a
-    measured ~0.2s per query CONSTRUCTION at bench scale; this is
-    O(#files) stat calls. Empty string when the scan is already at
-    least as wide as the kernel wants — at 100 TB the scan has
-    thousands of splits and the hint (a full-corpus shuffle) must not
-    fire."""
-    width = kernel_spread_width_from_files(spark, sf_dir, table)
-    return f"/*+ REPARTITION({width}) */" if width else ""
-
-
-def kernel_spread_width_from_files(spark, sf_dir: str, table: str = "documents") -> int:
-    """File-bytes form of the kernel-spread width calculation shared
-    by kernel_spread_hint (SQL kernels) and DataFrame kernels over
-    testdata-layout tables. Returns 0 when the scan is expected to be
-    at least as wide as the kernel wants (no repartition — at 100 TB
-    the scan has thousands of splits and this is always 0)."""
-    from sync_spark.sources.readers import table_size_bytes
-
-    return _spread_width_for_bytes(spark, table_size_bytes(sf_dir, table))
-
-
-def _frame_spread_hint(df: DataFrame) -> str:
-    """``kernel_spread_hint`` for an operator handed a DataFrame rather
-    than a table name: the same file-stat width, with the bytes summed
-    over the frame's input files (``inputFiles`` reads the scan's file
-    index — no job, no plan probe). A frame with no local files behind
-    it (in-memory rows, remote storage) gets no hint, the
-    unknown-layout rule below."""
-    size = 0
-    for uri in df.inputFiles():
-        parsed = urlparse(uri)
-        if parsed.scheme not in ("", "file"):
-            return ""
-        size += os.path.getsize(unquote(parsed.path))
-    width = _spread_width_for_bytes(df.sparkSession, size or None)
-    return f"/*+ REPARTITION({width}) */" if width else ""
-
-
-def _spread_width_for_bytes(spark, size: int | None) -> int:
-    cap = spark.sparkContext.defaultParallelism
-    if size is None:
-        # Unknown layout (remote storage, non-.parquet names): NO hint.
-        # Assuming "narrow" here would emit an unconditional
-        # REPARTITION(cap) that at scale forces a full-corpus shuffle
-        # and can even SHRINK a thousands-split scan down to
-        # defaultParallelism — the exact hazard the conditional exists
-        # to prevent. A missed spread on a genuinely-narrow toy input
-        # costs one slow kernel; a forced shuffle at 100 TB costs the
-        # job.
-        return 0
-    width = max(2, min(cap, size // _KERNEL_CHUNK_BYTES + 1))
-    max_split = _parse_byte_size(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    est_splits = max(1, (size + max_split - 1) // max_split)
-    return width if est_splits < width else 0
-
-
-def _parse_byte_size(value: str, default: int = 134217728) -> int:
-    """Spark byte-size conf parser: bare number = bytes, with the
-    standard case-insensitive k/m/g/t (optionally + 'b') suffixes
-    ('128m', '128MB', '134217728b'). Falls back to ``default`` on
-    anything unparseable rather than raising at query-construction
-    time."""
-    try:
-        s = str(value).strip().lower()
-        if s.endswith("b"):
-            s = s[:-1]
-        mult = 1
-        if s and s[-1] in "kmgt":
-            mult = 1024 ** ("kmgt".index(s[-1]) + 1)
-            s = s[:-1]
-        return int(s) * mult
-    except (ValueError, AttributeError):
-        return default
 
 
 def winnow_sql_kernel(
@@ -814,7 +759,7 @@ def winnow_pairs(
     kernel = winnow_sql_kernel("doc_id", "text", "__wp_src", k=k, window=window)
     return df.sparkSession.sql(f"""
 WITH __wp_src AS (
-  SELECT {_frame_spread_hint(df)} doc_id, text FROM {view}
+  SELECT {spread_hint(df)} doc_id, text FROM {view}
 ), {kernel}, __wp_postings AS (
   SELECT sort_array(collect_list(doc_id)) AS ids FROM __wfp GROUP BY fp
 ), __wp_bounded AS (
@@ -877,7 +822,7 @@ def decontaminate(
     hits = decontaminate_hits_sql("__dc_spread", bench, k=k, window=window)
     return corpus.sparkSession.sql(f"""
 WITH __dc_spread AS (
-  SELECT {_frame_spread_hint(corpus)} doc_id, text FROM __dc_corpus
+  SELECT {spread_hint(corpus)} doc_id, text FROM __dc_corpus
 ), {hits}
 SELECT d.doc_id,
        COALESCE(h.n_hits, 0L) AS n_hits,
@@ -1123,7 +1068,7 @@ def bloom_decontaminate(
     bk = winnow_sql_kernel("doc_id", "text", bench, k=k, window=window, prefix="__bb")
     return corpus.sparkSession.sql(f"""
 WITH __bd_spread AS (
-  SELECT {_frame_spread_hint(corpus)} doc_id, text FROM __bd_corpus
+  SELECT {spread_hint(corpus)} doc_id, text FROM __bd_corpus
 ), {ck}, {bk}, {bloom_bitmap_sql("__bbfp", "fp")}
 SELECT doc_id, n_maybe, n_maybe >= {min_shared} AS flagged
 FROM (

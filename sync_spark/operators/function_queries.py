@@ -292,9 +292,7 @@ def f_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file corpus arrives as 1-2 splits — 5·|corpus|
     # levenshteins would run on one core (measured 2.8s single-task
     # vs 0.3s spread at sf1)
-    w = dedup.kernel_spread_width_from_files(spark, sf_dir, "customer")
-    if w:
-        c = c.repartition(w)
+    c = dedup.spread_for_kernel(c)
     band = F.lit(_FUZZY_BAND)
     # probes ride as a LITERAL array exploded per corpus row — no
     # probes frame, no broadcast, no BroadcastNestedLoopJoin (its

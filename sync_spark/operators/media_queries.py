@@ -37,8 +37,8 @@ _MEDIA_ROWS_PER_TASK = 256
 def _spread_ids(
     ids: DataFrame, sf_dir: str | None = None, frac: float = 1.0
 ) -> DataFrame:
-    """Media-kernel spread (r9, kernel_spread discipline applied to
-    media): at bench scale the id frame rides ONE tiny parquet split,
+    """Media-kernel spread (r9, the dedup.spread_for_kernel discipline
+    applied to media): at bench scale the id frame rides ONE tiny parquet split,
     which would serialize the whole synthesize+decode island on a
     single core — decode is MB/s-class CPU work while scan splits are
     sized for IO (128 MB), the worst mismatch in the repo. Round-robin
@@ -88,7 +88,7 @@ def _spread_ids(
             # guard used ids.rdd.getNumPartitions(), a plan→RDD
             # translation costing ~0.1s PER QUERY CONSTRUCTION across
             # six media queries. Estimate the scan width from file
-            # bytes instead (the kernel_spread_width_from_files
+            # bytes instead (the dedup.spread_for_kernel
             # discipline): ceil(bytes/maxPartitionBytes) UNDERestimates
             # splits (maxSplitBytes ≤ maxPartitionBytes), so the worst
             # case is a redundant bare-long repartition — while at

@@ -185,8 +185,9 @@ def t_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries) would flip to the inverted-index form t_keyword_topk
     already implements (posting-grain aggregate, vocab-grain df
     join)."""
-    hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("__bm25_documents")
+    d = _t(spark, sf_dir, "documents")
+    hint = dedup.spread_hint(d)
+    d.createOrReplaceTempView("__bm25_documents")
     return spark.sql(_bm25_sql("spark", hint, "__bm25_documents"))
 
 
@@ -228,8 +229,9 @@ def t_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter instead of a pushed size()>0 predicate) so the token array
     is materialized once per row, never re-evaluated per generated
     chunk."""
-    hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("__chunk_documents")
+    d = _t(spark, sf_dir, "documents")
+    hint = dedup.spread_hint(d)
+    d.createOrReplaceTempView("__chunk_documents")
     return spark.sql(f"""
 WITH tok1 AS (
   SELECT {hint} doc_id, {_SPARK_TOKS} AS toks
@@ -576,8 +578,9 @@ def t_rrf_fuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize+sort posting kernel, not fusion overhead. Left as floor;
     the same draw re-confirmed t_keyword_topk's in-row-kernel win
     (see its docstring)."""
-    hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("__rrf_documents")
+    d = _t(spark, sf_dir, "documents")
+    hint = dedup.spread_hint(d)
+    d.createOrReplaceTempView("__rrf_documents")
     return spark.sql(
         _rrf_sql("spark", hint, "__rrf_documents", fused_tail=True)
     )
@@ -837,12 +840,10 @@ def t_hybrid_fuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quantized-dot corpus pass), not fusion fat. The >2×-DuckDB
     ratio is the two-engine kernel-floor gap on a sub-second row, not
     an unexploited plan lever."""
-    doc_hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
-    w = dedup.kernel_spread_width_from_files(spark, sf_dir, "embeddings")
-    emb_hint = f"/*+ REPARTITION({w}) */" if w else ""
-    _t(spark, sf_dir, "embeddings").createOrReplaceTempView("__hybrid_embeddings")
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("__hybrid_documents")
-    return spark.sql(_hybrid_spark_sql(doc_hint, emb_hint))
+    d, emb = _t(spark, sf_dir, "documents"), _t(spark, sf_dir, "embeddings")
+    emb.createOrReplaceTempView("__hybrid_embeddings")
+    d.createOrReplaceTempView("__hybrid_documents")
+    return spark.sql(_hybrid_spark_sql(dedup.spread_hint(d), dedup.spread_hint(emb)))
 
 
 def rrf_fuse_ranked(
@@ -1561,8 +1562,9 @@ def t_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches; with one consumer it is pure overhead). Queries with no
     TF-IDF match have no ground-truth set and are absent by
     definition (the aggregate is restricted to is_rel rows)."""
-    hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("__eval_documents")
+    d = _t(spark, sf_dir, "documents")
+    hint = dedup.spread_hint(d)
+    d.createOrReplaceTempView("__eval_documents")
     return spark.sql(_eval_sql("spark", hint, "__eval_documents", fused=True))
 
 

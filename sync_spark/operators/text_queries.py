@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from sync_spark.functions import text as T
 from sync_spark.operators import dedup, similarity
@@ -149,18 +150,7 @@ def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     does the O(n²) cross join, Spark does the scalable plan; results
     must agree exactly."""
     d = _t(spark, sf_dir, "documents")
-    return dedup.ngram_jaccard_pairs(
-        d, "text", "doc_id", n=3, threshold=0.8,
-        spread_width=_doc_kernel_width(spark, sf_dir),
-    )
-
-
-def _doc_kernel_width(spark: SparkSession, sf_dir: str) -> int:
-    """The ONE spread width every documents-table shingle kernel in
-    the registry passes down (r11): file-stat sized, no plan probes —
-    and shared so consecutive kernel calls keep the persisted shingle
-    plan EQUAL (the cache is keyed on plan equality)."""
-    return dedup.kernel_spread_width_from_files(spark, sf_dir, "documents")
+    return dedup.ngram_jaccard_pairs(d, "text", "doc_id", n=3, threshold=0.8)
 
 
 D_JACCARD_SQL = r"""
@@ -188,8 +178,7 @@ def d_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(
-        d, "text", "doc_id", n=3, threshold=0.8,
-        spread_width=_doc_kernel_width(spark, sf_dir),
+        d, "text", "doc_id", n=3, threshold=0.8
     ).select("id_a", "id_b")
     return dedup_clusters(d, pairs).orderBy("doc_id")
 
@@ -229,8 +218,7 @@ def d_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact Jaccard so every returned pair truly clears the threshold."""
     d = _t(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(
-        d, "text", "doc_id", n=3, num_hashes=32, bands=8, threshold=0.8,
-        spread_width=_doc_kernel_width(spark, sf_dir),
+        d, "text", "doc_id", n=3, num_hashes=32, bands=8, threshold=0.8
     )
 
 
@@ -256,8 +244,7 @@ def e_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     them — 10·|corpus| interpreted HOF dots on two cores measured
     2.5s at sf1 vs 0.9s spread."""
     emb = _t(spark, sf_dir, "embeddings")
-    w = dedup.kernel_spread_width_from_files(spark, sf_dir, "embeddings")
-    corpus = emb.repartition(w) if w else emb
+    corpus = dedup.spread_for_kernel(emb)
     return similarity.cosine_topk(emb.filter(F.col("vec_id") < 10), corpus, k=5)
 
 
@@ -912,9 +899,9 @@ def t_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1 for identical output. Shingles are per-doc distinct by
     construction, so count(*) IS the document frequency."""
     d = _t(spark, sf_dir, "documents")
-    sh = dedup._doc_shingles_cached(
-        d, "text", "doc_id", 3, _doc_kernel_width(spark, sf_dir)
-    ).select("doc_id", F.explode("sh").alias("shingle"))
+    sh = dedup._doc_shingles_cached(d, "text", "doc_id", 3).select(
+        "doc_id", F.explode("sh").alias("shingle")
+    )
     return (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).cast("long").alias("doc_freq"))
@@ -1086,7 +1073,7 @@ def t_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # construction-cost rewrite as d_decontaminate; mixing the sql
     # frame into the surrounding Column plan is free)
     d.createOrReplaceTempView("__cu_documents")
-    hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
+    hint = dedup.spread_hint(d)
     hits = spark.sql(f"""
 WITH __cu_corpus AS (
   SELECT {hint} doc_id, text FROM __cu_documents WHERE source <> 'src0'
@@ -1285,8 +1272,7 @@ def d_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
-        d, "text", "doc_id", n=3, num_hashes=32, bands=8, threshold=0.8,
-        spread_width=_doc_kernel_width(spark, sf_dir),
+        d, "text", "doc_id", n=3, num_hashes=32, bands=8, threshold=0.8
     ).select("id_a", "id_b")
     return dedup_clusters(d, pairs).orderBy("doc_id")
 
@@ -1642,8 +1628,8 @@ def t_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     mitigation); the aggregate absorbs hot tokens map-side and AQE
     picks broadcast vs skew-split shuffle for the join by measured
     size. In-row per-doc work is embarrassingly parallel; the kernel
-    width hint is sized from file bytes (kernel_spread_hint, r6) and
-    capped at defaultParallelism, so at real scale it is a no-op.
+    width hint is sized from the frame's file bytes (dedup.spread_hint)
+    and capped at defaultParallelism, so at real scale it is a no-op.
 
     Round-6 note on deriving df FROM the tf kernel (the r5 verdict's
     suggestion): the explode + groupBy(doc_id, doc_len, tok) form
@@ -1668,13 +1654,11 @@ def t_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = table_rowcount(sf_dir, "documents")
     if n_docs is None:
         n_docs = d.count()
-    # conditional spread, same guard as spread_for_kernel: the hint is
-    # emitted ONLY when the scan is narrower than the kernel width —
-    # at real scale the scan already has thousands of splits and the
-    # query must not pay a full (doc_id, text) shuffle for nothing.
-    # Sized from os.stat file bytes (r6): the plan-stats + RDD probe
-    # cost a measured ~0.2s of every query construction
-    spread_hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
+    # conditional spread (dedup.spread_hint): the hint is emitted ONLY
+    # when the scan is narrower than the kernel width — at real scale
+    # the scan already has thousands of splits and the query must not
+    # pay a full (doc_id, text) shuffle for nothing
+    spread_hint = dedup.spread_hint(d)
     d.createOrReplaceTempView("__kw_documents")
     return spark.sql(f"""
 WITH spread AS (
@@ -1803,8 +1787,9 @@ def d_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     is pytest-pinned). The corpus-side .distinct() is dropped — the
     LEFT SEMI join is unaffected by right-side duplicates, which is
     shared_fp_counts' own discipline."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("__ip_documents")
-    hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents")
+    d.createOrReplaceTempView("__ip_documents")
+    hint = dedup.spread_hint(d)
     ck = dedup.winnow_sql_kernel(
         "doc_id", "text", "__ip_corpus", k=_WINNOW_K, window=_WINNOW_W, prefix="__ic"
     )
@@ -1912,7 +1897,7 @@ def t_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY.md LLM-ops section) alongside t_lm_score and the mixture
     samplers."""
     d = _t(spark, sf_dir, "documents")
-    hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
+    hint = dedup.spread_hint(d)
     d.createOrReplaceTempView("__dsir_documents")
 
     def kernel(cols: str, src: str) -> str:
@@ -2039,8 +2024,7 @@ LIMIT 100
 
 _UNIMAX_PCT = 60  # token budget as a percentage of the corpus
 
-# most-recent persisted unimax token frame; bounded-leak discipline
-# for long-lived sessions (see dedup._live_shingle_cache)
+# most-recent persisted unimax token frame (see dedup._persist_slot)
 _live_unimax_cache: list[DataFrame] = []
 
 
@@ -2095,30 +2079,24 @@ def t_unimax_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tok — ~25 B/row, text column gone) is now persisted so the
     regex pass runs once per action; the cache write is strictly
     smaller than the second full-text scan + regex pass it removes,
-    and MEMORY_AND_DISK spills rather than OOMs at 100 TB. Interleaved
+    and MEMORY_AND_DISK_DESER spills rather than OOMs at 100 TB. Interleaved
     A/B (rows bit-equal): sf1 5/5 wins, median 1.85→1.37s; sf0.1 5/5,
     0.69→0.64s. Unlike t_ppl_buckets (persist measured slower — its
     dup subtree is a CHEAP arithmetic kernel where the cached-plan
     barrier cost more than the recompute), unimax's dup work is a
-    Java-regex pass over every text byte. Cache lifetime follows the
-    _live_shingle_cache discipline (dedup.py): each call evicts the
-    previous call's token frame, bounding a long-lived session to one
-    live cache; evict BEFORE persisting so the plan-keyed cache
-    manager can't drop the fresh entry."""
+    Java-regex pass over every text byte. Cache lifetime: each call
+    evicts the previous call's token frame (dedup._persist_slot),
+    bounding a long-lived session to one live cache."""
     _t(spark, sf_dir, "documents").createOrReplaceTempView("__um_documents")
-    while _live_unimax_cache:
-        try:
-            _live_unimax_cache.pop().unpersist()
-        except Exception:
-            pass  # session already stopped
-    docs_cached = spark.sql("""
+    docs = spark.sql("""
 SELECT doc_id, lang,
        CASE WHEN length(trim(text)) = 0 THEN CAST(0 AS BIGINT)
             ELSE CAST(regexp_count(trim(text), '\\\\s+') + 1 AS BIGINT) END AS n_tok
 FROM __um_documents
-""").persist()
-    _live_unimax_cache.append(docs_cached)
-    docs_cached.createOrReplaceTempView("__um_docs")
+""")
+    dedup._persist_slot(
+        _live_unimax_cache, docs, StorageLevel.MEMORY_AND_DISK_DESER
+    ).createOrReplaceTempView("__um_docs")
     return spark.sql(f"""
 WITH docs AS (
   SELECT doc_id, lang, n_tok FROM __um_docs
@@ -2421,7 +2399,7 @@ def d_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sync_spark.operators.materialized import materialized_input
 
     d = _t(spark, sf_dir, "documents")
-    spread_hint = dedup.kernel_spread_hint(spark, sf_dir, "documents")
+    spread_hint = dedup.spread_hint(d)
     d.createOrReplaceTempView("__so_documents")
     # bounded collect (≤ |sources|, a label set) through the shared
     # snapshot path — the bitmask CASE embeds these as literals
@@ -2700,10 +2678,7 @@ def e_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "label int, n_vectors long, centroid_e6 array<bigint>, cohesion_e6 long",
             )
         dim = int(row["d"])
-    # w > 0 already means the expected split count is below the kernel
-    # width — no .rdd partition probe needed (that costs ~0.2s/call)
-    w = dedup.kernel_spread_width_from_files(spark, sf_dir, "embeddings")
-    hint = f"/*+ REPARTITION({w}) */" if w else ""
+    hint = dedup.spread_hint(emb)
     emb.createOrReplaceTempView("__lc_embeddings")
     # q = quantized components ∥ quantized unit components, staged as
     # ONE per-row array (interpreted HOF transform, linear, lambdas

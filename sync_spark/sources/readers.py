@@ -180,10 +180,9 @@ def first_array_len(sf_dir: str, name: str, col: str) -> int | None:
 def table_size_bytes(sf_dir: str, name: str) -> int | None:
     """On-disk byte size of a local parquet table (single file or a
     directory of parts) from os.stat alone — no Spark call, no footer
-    parse. Used to size kernel-spread hints without the ~0.2s cost of
-    an optimizer-stats probe + RDD conversion per query construction.
-    None when the layout is anything else (callers fall back to the
-    Spark-side estimate)."""
+    parse. Used to estimate the media kernels' scan splits
+    (media_queries._spread_ids) without an RDD conversion per query
+    construction. None when the layout is anything else."""
     try:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.isfile(path):

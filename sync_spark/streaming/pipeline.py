@@ -67,10 +67,10 @@ from sync_spark.sources.bucketed import (
     bucketize_in_place,
     check_meta,
     empty_frame,
-    is_bucketed,
     overwrite_buckets,
     read_buckets,
     read_target,
+    recover_interrupted_swaps,
     write_bucketed,
 )
 from sync_spark.sources.cdc import changes_for_table, read_event_stream
@@ -112,8 +112,6 @@ def snapshot_if_empty(
     (mongodb.go:459-465). Returns True if the snapshot ran. When
     ``key_cols`` is given the target is written in the bucketed layout
     directly (otherwise the pipeline migrates it on first merge)."""
-    from sync_spark.sources.bucketed import recover_interrupted_swaps
-
     if row_schema is not None:
         # pin the snapshot to the CDC row_schema: a drifting source
         # type (e.g. int key vs declared long) would bucket by a
@@ -436,6 +434,11 @@ class CdcPipeline:
                 good = self._apply_rules_unsecured(good, rules)
 
                 stored_schema = self._stored_schema[t.source_table]
+                # heal a crashed root swap FIRST: a crash between
+                # _swap_dir's two renames leaves no live dir, only
+                # the parked .old_<name> copy — bootstrapping an empty
+                # target here would then delete the only copy
+                recover_interrupted_swaps(t.target_path)
                 if not os.path.exists(t.target_path):
                     # first events for a table that was never
                     # snapshotted (insert-only mapping, or a mapping
@@ -448,16 +451,12 @@ class CdcPipeline:
                         t.key_cols,
                         self.n_buckets,
                     )
-                if not is_bucketed(t.target_path):
-                    # one-time migration of a legacy flat target
-                    bucketize_in_place(
-                        self.spark, t.target_path, t.key_cols, self.n_buckets
-                    )
-                elif not check_meta(t.target_path, t.key_cols, self.n_buckets):
-                    # layout was bucketed under a different contract
-                    # (n_buckets/key_cols): touched-bucket derivation
-                    # would read/swap the wrong dirs — re-bucketize
-                    # under the current one before merging
+                if not check_meta(t.target_path, t.key_cols, self.n_buckets):
+                    # a legacy flat target (no meta) or a layout
+                    # bucketed under a different contract (n_buckets/
+                    # key_cols): touched-bucket derivation would
+                    # read/swap the wrong dirs — (re-)bucketize under
+                    # the current one before merging
                     bucketize_in_place(
                         self.spark, t.target_path, t.key_cols, self.n_buckets
                     )
@@ -610,8 +609,6 @@ def replay_dlq(
     import shutil as _shutil
 
     table_dir = os.path.join(dlq_path, f"table={source_table}")
-    from sync_spark.sources.bucketed import recover_interrupted_swaps
-
     recover_interrupted_swaps(table_dir)  # heal a crash mid-queue-swap
     if not _glob.glob(os.path.join(table_dir, "batch_id=*")):
         return (0, 0)
@@ -750,7 +747,7 @@ def export_exhausted_dlq(
     import glob as _glob
     import shutil as _shutil
 
-    from sync_spark.sources.bucketed import _swap_dir, recover_interrupted_swaps
+    from sync_spark.sources.bucketed import _swap_dir
 
     table_dir = os.path.join(dlq_path, f"table={source_table}")
     recover_interrupted_swaps(table_dir)

@@ -234,6 +234,23 @@ def test_crash_between_renames_recovers_old_bucket(spark, tmp_path):
     assert len(got) == 40 and got[1] == "v1"  # no silent row loss
 
 
+def test_crash_between_root_renames_keeps_parked_target(spark, tmp_path):
+    """A crash between the two renames of a ROOT swap (write_bucketed,
+    as bucketize_in_place runs it) leaves no live target dir, only the
+    parked '.old_<name>' copy. The next batch must restore it before
+    deciding the target is missing — bootstrapping an empty target
+    would make _swap_dir delete the only copy."""
+    tgt = str(tmp_path / "t_users")
+    rows = [Row(id=i, v=f"r{i}") for i in range(1, 51)]
+    write_bucketed(spark.createDataFrame(rows, SCHEMA), tgt, ["id"], N_BUCKETS)
+    parked = os.path.join(str(tmp_path), f"{OLD_PREFIX}t_users")
+    os.rename(tgt, parked)
+    write_event_batch(str(tmp_path / "ev"), [_ev(1, "insert", 51)], 1)
+    _pipeline(spark, tmp_path).run_available()
+    assert read_target(spark, tgt).count() == 51
+    assert not [e for e in os.listdir(tmp_path) if e.startswith(OLD_PREFIX)]
+
+
 def test_completed_swap_leftover_is_dropped(spark, tmp_path):
     """Crash after the second rename: both live and parked exist →
     recovery drops the stale parked dir."""
