@@ -308,7 +308,7 @@ def cmd_snapshot(args) -> int:
         return 2
     spark = _spark("sync_cli_snapshot")
     if args.action == "create":
-        v = S.snapshot_create(args.target, note=args.note)
+        v = S.snapshot_create(spark, args.target, note=args.note)
         print(json.dumps({"created": v}))
     elif args.action == "list":
         print(json.dumps({"versions": S.snapshot_versions(args.target)}))
@@ -339,13 +339,14 @@ def cmd_maintain(args) -> int:
       batch the stream has committed (max committed batch id + 1;
       replay-range 9e9 ids excluded, mirroring the pruner);
     - snapshot expiry: ``expire_snapshots --keep-snapshots`` per
-      mapped bucketed target that has a snapshot manifest;
+      mapped target that has a snapshot log;
     - optional delta-export upkeep (``--export-delta`` root):
       ``vacuum_export --vacuum-keep`` per published table.
 
     Prints one JSON audit line; every step is idempotent, so a crashed
     or doubled cron tick is harmless."""
     from sync_spark.operators.monitor import compact_apply_stats
+    from sync_spark.sources import delta_export as D
     from sync_spark.sources import snapshots as S
     from sync_spark.sources.cdc import auto_prune_event_log, committed_event_files
 
@@ -375,20 +376,12 @@ def cmd_maintain(args) -> int:
     expired = {}
     for t in task._targets():
         name = os.path.basename(t.target_path.rstrip("/"))
-        try:
-            if S.snapshot_versions(t.target_path):
-                expired[name] = S.expire_snapshots(
-                    t.target_path, keep_last=args.keep_snapshots
-                )
-        except Exception as exc:  # a target without a manifest is fine
-            print(
-                json.dumps({"snapshot_expire_error": f"{name}: {exc}"[:200]}),
-                file=sys.stderr,
+        if os.path.isdir(os.path.join(t.target_path, S.SNAP_DIR, D.LOG_DIR)):
+            expired[name] = S.expire_snapshots(
+                t.target_path, keep_last=args.keep_snapshots
             )
     out["snapshots_expired"] = expired
     if args.export_delta:
-        from sync_spark.sources import delta_export as D
-
         vac = {}
         for t in task._targets():
             name = os.path.basename(t.target_path.rstrip("/"))
@@ -405,17 +398,29 @@ def cmd_export_delta(args) -> int:
 
     spark = _spark("sync_cli_export_delta")
     v = D.export_delta(spark, args.target, args.out, operation=args.operation)
+    # checkpoint-aware: after --checkpoint --clean-log the JSON log is
+    # empty and a JSON-only replay would report latest -1 / 0 files
+    state = D.replay_with_checkpoint(args.out)
     if v is None:
-        out = {"exported": None, "reason": "no_changes",
-               "latest": D.replay_log(args.out)["version"]}
+        out = {"exported": None, "reason": "no_changes", "latest": state["version"]}
     else:
-        out = {"exported": v, "active_files": len(D.replay_log(args.out)["files"])}
+        out = {"exported": v, "active_files": len(state["files"])}
     if args.vacuum_keep is not None:
         out["vacuum"] = D.vacuum_export(args.out, keep_versions=args.vacuum_keep)
     if args.checkpoint:
         out["checkpoint"] = D.write_checkpoint(args.out, clean_log=args.clean_log)
     print(json.dumps(out))
     return 0
+
+
+def _keep_window(s: str) -> int:
+    """argparse type of a retention window (``--keep-last``,
+    ``--keep-snapshots``, ``--vacuum-keep``): an int >= 1, because a
+    Delta log always keeps its latest version. A bad value exits 2."""
+    n = int(s)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
 
 
 def _add_task_args(p) -> None:
@@ -507,7 +512,7 @@ def main(argv=None) -> int:
     p.add_argument("--version", type=int, default=None)
     p.add_argument("--version-b", type=int, default=None)
     p.add_argument("--keys", default="id")
-    p.add_argument("--keep-last", type=int, default=5)
+    p.add_argument("--keep-last", type=_keep_window, default=5)
     p.add_argument("--note", default="")
     p.set_defaults(fn=cmd_snapshot)
 
@@ -519,7 +524,7 @@ def main(argv=None) -> int:
     p.add_argument("--operation", default="MERGE")
     p.add_argument(
         "--vacuum-keep",
-        type=int,
+        type=_keep_window,
         default=None,
         metavar="N",
         help="after exporting, vacuum the export to the last N versions "
@@ -546,10 +551,10 @@ def main(argv=None) -> int:
     )
     _add_task_args(p)
     p.add_argument("--stats", default=None, help="apply-counter root (CdcPipeline stats_path)")
-    p.add_argument("--keep-snapshots", type=int, default=5, metavar="N")
+    p.add_argument("--keep-snapshots", type=_keep_window, default=5, metavar="N")
     p.add_argument("--export-delta", default=None, metavar="ROOT",
                    help="delta-export root to vacuum per published table")
-    p.add_argument("--vacuum-keep", type=int, default=2, metavar="N")
+    p.add_argument("--vacuum-keep", type=_keep_window, default=2, metavar="N")
     p.set_defaults(fn=cmd_maintain)
 
     args = ap.parse_args(argv)

@@ -58,6 +58,7 @@ from pyspark.sql import types as T
 BUCKET_COL = "__bucket"
 META_FILE = ".sync_meta.json"  # dot-prefixed: invisible to Spark listings
 OLD_PREFIX = ".old_"  # parking dir prefix for rename-aside swaps
+SNAP_DIR = ".snapshots"  # the store's snapshot log (sources/snapshots.py)
 
 
 def bucket_expr_vals(vals: Sequence[F.Column], n_buckets: int) -> F.Column:
@@ -243,6 +244,12 @@ def write_bucketed(
     for name, content in (extra_files or {}).items():
         with open(os.path.join(stage, name), "w") as fh:
             fh.write(content)
+    # a full rewrite (re-bucketize, `execute --apply`) keeps the
+    # store's snapshot log: hard-linked into the stage, it lands with
+    # the swap, and a crash before the swap leaves the original intact
+    snaps = os.path.join(path, SNAP_DIR)
+    if os.path.isdir(snaps):
+        shutil.copytree(snaps, os.path.join(stage, SNAP_DIR), copy_function=os.link)
     _swap_dir(stage, path)
 
 

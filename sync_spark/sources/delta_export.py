@@ -23,9 +23,11 @@ Mechanism per export:
    ones. No data change → no new version (idempotent);
 3. version 0 additionally carries `protocol` (minReader 1 /
    minWriter 2) and `metaData` (stable table id, Spark schemaString,
-   partitionColumns=[__bucket]); the metaData is re-emitted when the
-   merged store schema evolves, which is Delta's own schema-evolution
-   mechanism.
+   partitionColumns=[__bucket], and the store's bucket layout
+   ``.sync_meta.json`` under ``configuration[LAYOUT_KEY]``); the
+   metaData is re-emitted when the merged store schema evolves, which
+   is Delta's own schema-evolution mechanism, or the store is
+   re-bucketized.
 
 Crash-safety follows the repo discipline: the JSON commit is staged
 under a dot-tmp name and ``os.replace``d into place (Delta requires
@@ -55,11 +57,15 @@ from pyspark.sql import SparkSession
 
 from sync_spark.sources.bucketed import (
     BUCKET_COL,
+    read_meta,
     read_target,
     recover_interrupted_swaps,
 )
 
 LOG_DIR = "_delta_log"
+# metaData.configuration key carrying the store's ``.sync_meta.json``
+# (n_buckets, key_cols), so every version records its bucket layout
+LAYOUT_KEY = "sync_spark.layout"
 
 
 def _log_path(delta_dir: str) -> str:
@@ -80,6 +86,15 @@ def log_versions(delta_dir: str) -> list[int]:
         if e.endswith(".json") and e[:-5].isdigit():
             out.append(int(e[:-5]))
     return sorted(out)
+
+
+def table_versions(delta_dir: str) -> list[int]:
+    """Every version a reader can time-travel to, ascending: the JSON
+    commits plus the ``_last_checkpoint`` version (after
+    ``write_checkpoint(..., clean_log=True)`` that one exists only as
+    the checkpoint parquet)."""
+    lc = read_last_checkpoint(delta_dir)
+    return sorted(set(log_versions(delta_dir)) | ({lc["version"]} if lc else set()))
 
 
 def _read_actions(delta_dir: str, version: int) -> list[dict]:
@@ -197,16 +212,23 @@ def export_delta(
     The previous-state diff is checkpoint-aware: after a
     ``write_checkpoint(..., clean_log=True)`` the JSON log may be
     empty, and diffing against a JSON-only replay would re-add every
-    live file under an already-used version number."""
+    live file under an already-used version number.
+
+    ``metaData`` is (re-)emitted when the schema or the store's bucket
+    layout (``.sync_meta.json`` → ``configuration[LAYOUT_KEY]``)
+    differs from the previous version's."""
     state = replay_with_checkpoint(delta_dir)
     live = _live_files(store_path)
 
     adds = {p: a for p, a in live.items() if p not in state["files"]}
     removes = sorted(p for p in state["files"] if p not in live)
     schema_string = _schema_string(spark, store_path)
-    meta_changed = (
-        state["metaData"] is None or state["metaData"]["schemaString"] != schema_string
-    )
+    layout = read_meta(store_path)
+    configuration = {LAYOUT_KEY: json.dumps(layout)} if layout else {}
+    meta_changed = state["metaData"] is None or (
+        state["metaData"]["schemaString"],
+        state["metaData"].get("configuration") or {},
+    ) != (schema_string, configuration)
     if not adds and not removes and not meta_changed:
         return None
 
@@ -240,7 +262,7 @@ def export_delta(
                     "format": {"provider": "parquet", "options": {}},
                     "schemaString": schema_string,
                     "partitionColumns": [BUCKET_COL],
-                    "configuration": {},
+                    "configuration": configuration,
                     "createdTime": (
                         state["metaData"]["createdTime"]
                         if state["metaData"]
@@ -307,7 +329,10 @@ def vacuum_export(delta_dir: str, keep_versions: int = 2) -> dict:
     versions' active sets, then drop the log files older than the
     retained window. Time travel remains exact within the window and
     is explicitly surrendered before it — the same contract as Delta's
-    ``VACUUM ... RETAIN``.
+    ``VACUUM ... RETAIN``. ``keep_versions`` must be >= 1 (``ValueError``
+    otherwise), so the latest version always survives — a store's
+    snapshot log (``sources/snapshots.py``) expires through here and
+    always keeps its newest snapshot.
 
     The survivor set is the UNION of per-version replays (a file
     removed at version N is still needed to read version N-1), so this
@@ -320,7 +345,9 @@ def vacuum_export(delta_dir: str, keep_versions: int = 2) -> dict:
     (protocol + metaData + every active add) under its own version
     number before older JSON files are dropped — the same collapsing a
     Delta checkpoint performs, expressed in the JSON log itself so
-    readers need no checkpoint support.
+    readers need no checkpoint support. The base commit keeps the
+    replaced commit's ``commitInfo`` (its timestamp and operation are
+    the version's history, e.g. a snapshot's note).
 
     Checkpoint-aware (ADVICE r5): after ``write_checkpoint(...,
     clean_log=True)`` the state at/below the checkpoint exists only in
@@ -338,12 +365,12 @@ def vacuum_export(delta_dir: str, keep_versions: int = 2) -> dict:
     checkpoint-seeded replay in that crash window reconciles to
     exactly the cutoff state instead of resurrecting adds whose data
     files vacuum already unlinked."""
+    if keep_versions < 1:
+        raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
     json_versions = log_versions(delta_dir)
     lc = read_last_checkpoint(delta_dir)
     cp_version = lc["version"] if lc else None
-    all_versions = sorted(
-        set(json_versions) | ({cp_version} if cp_version is not None else set())
-    )
+    all_versions = table_versions(delta_dir)
     if not all_versions:
         return {"deleted_files": 0, "dropped_versions": 0}
     retained = all_versions[-keep_versions:]
@@ -379,7 +406,12 @@ def vacuum_export(delta_dir: str, keep_versions: int = 2) -> dict:
         # rewrite the cutoff version as a self-contained base commit
         # (staged + os.replace: a crash leaves the old, still-valid
         # chain in place)
-        base_actions: list[dict] = [
+        prior = (
+            [a for a in _read_actions(delta_dir, cutoff) if "commitInfo" in a]
+            if cutoff in json_versions
+            else []
+        )
+        base_actions: list[dict] = prior[:1] or [
             {
                 "commitInfo": {
                     "timestamp": int(time.time() * 1000),
@@ -480,15 +512,11 @@ def write_checkpoint(
 
     json_versions = log_versions(delta_dir)
     lc = read_last_checkpoint(delta_dir)
-    all_versions = sorted(
-        set(json_versions) | ({lc["version"]} if lc else set())
-    )
+    all_versions = table_versions(delta_dir)
     if not all_versions:
         raise ValueError(f"no log to checkpoint in {delta_dir!r}")
     if version is None:
         version = all_versions[-1]
-    if version not in all_versions:
-        raise ValueError(f"version {version} not in log (have {all_versions})")
 
     # seed from the previous checkpoint + trailing JSON (ADVICE r5):
     # after a clean_log cycle the protocol/metaData live only in the
@@ -588,13 +616,22 @@ def replay_with_checkpoint(delta_dir: str, version: Optional[int] = None) -> dic
     seed the state from the checkpoint parquet's rows, then apply only
     the JSON commits after it. Falls back to the pure-JSON replay when
     no checkpoint applies — e.g. time travel BELOW the checkpoint with
-    the JSON still present."""
+    the JSON still present.
+
+    ``version=None`` is the latest version (-1 with empty state for a
+    missing log). An explicit version the log does not hold — above
+    the latest, or dropped by vacuum or ``clean_log`` — raises
+    ``ValueError`` rather than serving another version's state."""
     import pyarrow.parquet as pq
 
     lc = read_last_checkpoint(delta_dir)
+    have = table_versions(delta_dir)
     if version is None:
-        v_all = log_versions(delta_dir)
-        version = max(v_all[-1] if v_all else -1, lc["version"] if lc else -1)
+        version = have[-1] if have else -1
+    elif version not in have:
+        raise ValueError(
+            f"unknown snapshot version {version} for {delta_dir!r}; have {have}"
+        )
     files: dict[str, dict] = {}
     meta = proto = None
     base = -1

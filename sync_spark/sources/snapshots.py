@@ -1,26 +1,28 @@
-"""Snapshot / time-travel layer for the bucketed CDC store — the
-dependency-free slice of what Delta/Iceberg would provide on a real
-cluster (SURVEY.md §2.1 S12/S13 extension; the table-format MERGE
-backend itself stays environment-blocked, this closes the *read*
-side: reproducible as-of reads and operational rollback).
+"""Snapshot / time-travel layer for the bucketed CDC store (SURVEY.md
+§2.1 S12/S13 extension): reproducible as-of reads, version diffs and
+operational rollback.
 
-Mechanism: after a merge, ``snapshot_create`` HARD-LINKS every live
-bucket's parquet files into ``.snapshots/v{N}/__bucket=K/``. Links are
-metadata-only (no data copy) and pin the inode: the store's
+A store's snapshots are the versions of a Delta log at
+``<store>/.snapshots/``: ``snapshot_create`` is ``export_delta``
+(sources/delta_export.py) into that directory, so each live part file
+is HARD-LINKED there once and each version is one JSON commit naming
+its file set. Links are metadata-only and pin the inode: the store's
 rename-aside swaps later delete the live *directory entries*, but the
-snapshot's links keep the bytes alive. Parquet part files are
-immutable once written (the store swaps directories, never rewrites
-files in place), so a link IS a consistent frozen copy.
+links keep the bytes, and part files are immutable once written, so a
+link IS a frozen copy. The note is the commit's ``operation``; the
+bucket layout (``.sync_meta.json``) travels in
+``metaData.configuration``, so rollback restores it. Crash safety,
+retention (``expire_snapshots`` = ``vacuum_export``) and time travel
+are the export's; any Delta reader can read the snapshots.
 
-Cost model at 100 TB: one snapshot = O(#files) link syscalls + one
-manifest write — no data movement, no scan. Retention is explicit
-(``expire_snapshots``); space cost of old snapshots is only the delta
-of replaced buckets, because untouched buckets share inodes across
-every snapshot that references them.
+Cost at 100 TB: one snapshot = O(#changed files) link syscalls + one
+JSON commit + the export's footer-merge schema job; untouched buckets
+share one inode across every version and the live table.
 
 The ``.snapshots`` root is dot-prefixed, so Spark's file listing on
 the LIVE table never sees it (same discipline as the ``.old_*``
-parking dirs and ``.sync_meta.json``).
+parking dirs and ``.sync_meta.json``); a full rewrite of the store
+(``write_bucketed``) carries it across the root swap.
 """
 
 from __future__ import annotations
@@ -28,7 +30,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
 import uuid
 from typing import Optional
 
@@ -37,69 +38,48 @@ from pyspark.sql import functions as F
 
 from sync_spark.sources.bucketed import (
     BUCKET_COL,
+    SNAP_DIR,
     _swap_dir,
-    read_target,
-    recover_interrupted_swaps,
+    is_bucketed,
+    write_meta,
 )
-
-SNAP_DIR = ".snapshots"
-MANIFEST = "manifest.json"
-
-
-def _snap_root(path: str) -> str:
-    return os.path.join(path, SNAP_DIR)
-
-
-def _manifest_path(path: str) -> str:
-    return os.path.join(_snap_root(path), MANIFEST)
-
-
-def _read_manifest(path: str) -> dict:
-    mp = _manifest_path(path)
-    if not os.path.exists(mp):
-        return {"versions": []}
-    with open(mp) as fh:
-        return json.load(fh)
-
-
-def _write_manifest(path: str, manifest: dict) -> None:
-    """Atomic (write-tmp + rename) so a crash mid-write can't leave a
-    torn manifest that orphans every existing snapshot."""
-    os.makedirs(_snap_root(path), exist_ok=True)
-    tmp = _manifest_path(path) + f".tmp_{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    os.replace(tmp, _manifest_path(path))
+from sync_spark.sources.delta_export import (
+    LAYOUT_KEY,
+    _link_file,
+    _read_actions,
+    export_delta,
+    log_versions,
+    read_export,
+    replay_with_checkpoint,
+    table_versions,
+    vacuum_export,
+)
 
 
 def snapshot_versions(path: str) -> list[dict]:
-    """Committed snapshot descriptors, oldest first."""
-    return list(_read_manifest(path)["versions"])
-
-
-def _link_tree(src_dir: str, dst_dir: str) -> int:
-    """Hard-link every regular file of one bucket dir; falls back to
-    copy if the filesystem refuses links (still correct, just not
-    free). Returns the file count."""
-    os.makedirs(dst_dir, exist_ok=True)
-    n = 0
-    for entry in os.listdir(src_dir):
-        s, d = os.path.join(src_dir, entry), os.path.join(dst_dir, entry)
-        if not os.path.isfile(s):
-            continue
-        try:
-            os.link(s, d)
-        except OSError:
-            shutil.copy2(s, d)
-        n += 1
-    return n
+    """Committed snapshot descriptors {version, created_unix, note},
+    oldest first, from the log's versions and their ``commitInfo``."""
+    snap = os.path.join(path, SNAP_DIR)
+    json_versions = set(log_versions(snap))
+    out = []
+    for v in table_versions(snap):
+        actions = _read_actions(snap, v) if v in json_versions else []
+        info = next((a["commitInfo"] for a in actions if "commitInfo" in a), {})
+        out.append(
+            {
+                "version": v,
+                "created_unix": info.get("timestamp", 0) // 1000,
+                "note": info.get("operation", ""),
+            }
+        )
+    return out
 
 
 def _clean_stale_stages(path: str) -> None:
-    """Drop leaked rollback staging dirs (a crash between _link_tree
-    and the swap leaves a `.rbstage_*` hard-link tree that pins old
-    file bytes; recover_interrupted_swaps only knows the store's own
-    parking names)."""
+    """Drop leaked rollback staging dirs (a crash between linking a
+    bucket's stage and the swap leaves a `.rbstage_*` hard-link tree
+    that pins old file bytes; recover_interrupted_swaps only knows the
+    store's own parking names)."""
     if not os.path.isdir(path):
         return
     for e in os.listdir(path):
@@ -107,94 +87,54 @@ def _clean_stale_stages(path: str) -> None:
             shutil.rmtree(os.path.join(path, e), ignore_errors=True)
 
 
-def snapshot_create(path: str, note: str = "") -> int:
-    """Freeze the CURRENT live state as the next version. Staged under
-    a dot-tmp name and renamed into place, so a crash mid-link leaves
-    no half-registered version (the manifest is only updated after the
-    rename)."""
-    recover_interrupted_swaps(path)
-    _clean_stale_stages(path)
-    manifest = _read_manifest(path)
-    # next version accounts for ORPHAN v* dirs too (a crash between
-    # the rename below and the manifest append leaves an unreferenced
-    # vN dir): numbering only off the manifest would collide with the
-    # orphan and wedge every subsequent snapshot on ENOTEMPTY
-    on_disk = []
-    if os.path.isdir(_snap_root(path)):
-        for e in os.listdir(_snap_root(path)):
-            if e.startswith("v") and e[1:].isdigit():
-                on_disk.append(int(e[1:]))
-    version = 1 + max(
-        [v["version"] for v in manifest["versions"]] + on_disk, default=0
-    )
-    final = os.path.join(_snap_root(path), f"v{version}")
-    stage = os.path.join(_snap_root(path), f".tmp_v{version}_{uuid.uuid4().hex[:8]}")
-    buckets = [e for e in os.listdir(path) if e.startswith(f"{BUCKET_COL}=")]
-    if not buckets:
+def snapshot_create(spark: SparkSession, path: str, note: str = "") -> int:
+    """Freeze the CURRENT live state as the next log version (the note
+    becomes the commit's operation) and return it; on a store unchanged
+    since the latest version, return that version and commit nothing."""
+    if not is_bucketed(path):  # also heals interrupted swaps
         raise ValueError(f"nothing to snapshot: no {BUCKET_COL}= dirs under {path!r}")
-    n_files = 0
-    for b in sorted(buckets):
-        n_files += _link_tree(os.path.join(path, b), os.path.join(stage, b))
-    # carry the layout contract so a snapshot is self-describing even
-    # if the live table is later re-bucketized
-    meta_src = os.path.join(path, ".sync_meta.json")
-    if os.path.exists(meta_src):
-        shutil.copy2(meta_src, os.path.join(stage, ".sync_meta.json"))
-    os.rename(stage, final)
-    manifest["versions"].append(
-        {
-            "version": version,
-            "buckets": len(buckets),
-            "files": n_files,
-            "created_unix": int(time.time()),
-            "note": note,
-        }
-    )
-    _write_manifest(path, manifest)
-    return version
+    _clean_stale_stages(path)
+    snap = os.path.join(path, SNAP_DIR)
+    v = export_delta(spark, path, snap, operation=note or "SNAPSHOT")
+    return table_versions(snap)[-1] if v is None else v
 
 
 def read_snapshot(spark: SparkSession, path: str, version: int) -> DataFrame:
-    """Time-travel read: the table exactly as of ``version``. Same
-    reader as the live table (bucket column dropped), so downstream
-    plans are identical."""
-    versions = {v["version"] for v in snapshot_versions(path)}
-    if version not in versions:
-        raise ValueError(
-            f"unknown snapshot version {version} for {path!r}; have {sorted(versions)}"
-        )
-    return read_target(spark, os.path.join(_snap_root(path), f"v{version}"))
+    """Time-travel read: the table exactly as of ``version``, bucket
+    column dropped like the live reader. ``ValueError`` for a version
+    the log does not hold."""
+    return read_export(spark, os.path.join(path, SNAP_DIR), version)
 
 
 def snapshot_rollback(spark: SparkSession, path: str, version: int) -> int:
     """Restore the live table to ``version``. The pre-rollback state
     is snapshotted FIRST, so a rollback is itself undoable (returns
-    that safety version). Buckets are replaced wholesale: dirs present
-    live but absent from the snapshot are removed (the snapshot is the
-    full table state, not a delta)."""
-    versions = {v["version"] for v in snapshot_versions(path)}
-    if version not in versions:
-        raise ValueError(
-            f"unknown snapshot version {version} for {path!r}; have {sorted(versions)}"
-        )
+    that safety version). Buckets are replaced wholesale from the
+    version's file set: dirs present live but absent from the version
+    are removed (a version is the full table state, not a delta), and
+    the version's bucket layout is written back."""
+    snap = os.path.join(path, SNAP_DIR)
+    state = replay_with_checkpoint(snap, version)  # unknown version raises
     _clean_stale_stages(path)
-    safety = snapshot_create(path, note=f"pre-rollback-to-v{version}")
-    snap = os.path.join(_snap_root(path), f"v{version}")
+    safety = snapshot_create(spark, path, note=f"pre-rollback-to-v{version}")
+    by_bucket: dict[str, list[str]] = {}
+    for p in state["files"]:
+        b, f = p.split("/", 1)
+        by_bucket.setdefault(b, []).append(f)
     live_buckets = {e for e in os.listdir(path) if e.startswith(f"{BUCKET_COL}=")}
-    snap_buckets = {e for e in os.listdir(snap) if e.startswith(f"{BUCKET_COL}=")}
-    for b in sorted(snap_buckets):
-        dst = os.path.join(path, b)
+    for b, files in sorted(by_bucket.items()):
         # dot-prefixed stage: a `<bucket>__stage_x` name would read as
         # a partition dir with a poisoned value; a crash pre-swap
         # leaks only an invisible dot-dir
         stage = os.path.join(path, f".rbstage_{uuid.uuid4().hex[:8]}")
-        _link_tree(os.path.join(snap, b), stage)
+        for f in files:
+            _link_file(os.path.join(snap, b, f), os.path.join(stage, f))
         # the store's crash-safe swap (park live under .old_*, rename
         # stage in, drop parking): a crash at any point is healed by
         # recover_interrupted_swaps — a bare rmtree+rename window would
         # leave the bucket MISSING with nothing to recover from
-        _swap_dir(stage, dst)
-    for b in sorted(live_buckets - snap_buckets):
+        _swap_dir(stage, os.path.join(path, b))
+    for b in sorted(live_buckets - set(by_bucket)):
         # park-then-delete (same discipline as _swap_dir): a crash
         # mid-rmtree on the live name would leave a partially-deleted
         # bucket visible to readers; renamed to a dot-prefixed parking
@@ -203,37 +143,28 @@ def snapshot_rollback(spark: SparkSession, path: str, version: int) -> int:
         doomed = os.path.join(path, f".rbstage_doomed_{uuid.uuid4().hex[:8]}")
         os.rename(os.path.join(path, b), doomed)
         shutil.rmtree(doomed, ignore_errors=True)
-    meta_src = os.path.join(snap, ".sync_meta.json")
-    if os.path.exists(meta_src):
-        shutil.copy2(meta_src, os.path.join(path, ".sync_meta.json"))
+    layout = (state["metaData"] or {}).get("configuration", {}).get(LAYOUT_KEY)
+    if layout:
+        meta = json.loads(layout)
+        write_meta(path, meta["key_cols"], meta["n_buckets"])
     return safety
 
 
 def expire_snapshots(path: str, keep_last: int) -> list[int]:
-    """Drop all but the newest ``keep_last`` versions. Shared inodes
-    mean only bytes unreferenced by ANY remaining snapshot (or the
-    live table) are actually reclaimed. Returns expired versions."""
-    if keep_last < 0:
-        raise ValueError("keep_last must be >= 0")
-    manifest = _read_manifest(path)
-    vs = sorted(manifest["versions"], key=lambda v: v["version"])
-    doomed = vs[: max(0, len(vs) - keep_last)]
-    keep = vs[len(doomed):]
-    # manifest first: a crash after this point leaves unreferenced
-    # dirs (garbage, harmless) rather than referenced-but-deleted ones
-    _write_manifest(path, {"versions": keep})
-    expired = []
-    for v in doomed:
-        d = os.path.join(_snap_root(path), f"v{v['version']}")
-        if os.path.exists(d):
-            shutil.rmtree(d)
-        expired.append(v["version"])
-    return expired
+    """Keep the newest ``keep_last`` (>= 1) versions, through
+    ``vacuum_export``: files no retained version names are deleted
+    (shared inodes mean bytes the live table still links stay), and
+    the latest version always survives. Returns expired versions."""
+    snap = os.path.join(path, SNAP_DIR)
+    before = table_versions(snap)
+    vacuum_export(snap, keep_versions=keep_last)
+    after = set(table_versions(snap))
+    return [v for v in before if v not in after]
 
 
 def latest_version(path: str) -> Optional[int]:
-    vs = snapshot_versions(path)
-    return vs[-1]["version"] if vs else None
+    vs = table_versions(os.path.join(path, SNAP_DIR))
+    return vs[-1] if vs else None
 
 
 def snapshot_diff(

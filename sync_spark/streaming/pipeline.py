@@ -170,9 +170,11 @@ class CdcPipeline:
         self.stats_path = stats_path
         self.n_buckets = n_buckets
         # opt-in time travel: freeze each table's post-merge state as
-        # a hard-link snapshot version (sources/snapshots.py) — the
-        # batch id goes in the note so an operator can map versions
-        # back to the stream position for as-of debugging / rollback
+        # a version of the store's `.snapshots` Delta log
+        # (sources/snapshots.py; one footer-merge schema job per table
+        # per batch) — the batch id is the commit's note, so an
+        # operator can map versions back to the stream position for
+        # as-of debugging / rollback
         self.snapshot_after_batch = snapshot_after_batch
         self._schema_checked: set[str] = set()
         # the EFFECTIVE stored schema per table: fieldSecurity re-types
@@ -536,7 +538,9 @@ class CdcPipeline:
                 if self.snapshot_after_batch:
                     from sync_spark.sources.snapshots import snapshot_create
 
-                    snapshot_create(t.target_path, note=f"batch={batch_id}")
+                    snapshot_create(
+                        self.spark, t.target_path, note=f"batch={batch_id}"
+                    )
         finally:
             batch.unpersist()
 

@@ -8,7 +8,9 @@ sequence order), mirroring the reference's compareDataConsistency
 
 from __future__ import annotations
 
+import glob
 import json
+import os
 import random
 
 import pytest
@@ -759,3 +761,74 @@ def test_reserved_envelope_names_rejected(spark):
     )
     with _pytest.raises(ValueError, match="reserved envelope column"):
         changes_for_table(env, "t", bad, ["id"])
+
+
+def test_ignored_delete_with_null_key_not_counted_bad(spark, pipeline_dirs):
+    _snapshot(spark, pipeline_dirs, [Row(id=1, name="a", balance=1.0)])
+    events = [
+        # null-key DELETE under ignore_deletes: dropped at the
+        # envelope level, so it must NOT trip the DLQ write path
+        _event("delete", 1, "users", {"id": None}),
+        _event("update", 2, "users", {"id": 1},
+               {"id": 1, "name": "ok", "balance": 2.0}),
+    ]
+    write_event_batch(pipeline_dirs["events"], events, 1)
+    _mk_pipeline(spark, pipeline_dirs, ignore_deletes=True).run_available()
+    assert _read_target(spark, pipeline_dirs["target"])[1]["name"] == "ok"
+    # no DLQ batch dir at all — previously an EMPTY batch was written
+    # (bad_n=1 but the quarantine frame had already dropped the event)
+    assert not glob.glob(os.path.join(pipeline_dirs["dlq"], "table=*", "batch_id=*"))
+    # a null-key INSERT must still quarantine under ignore_deletes
+    write_event_batch(
+        pipeline_dirs["events"],
+        [_event("insert", 3, "users", {"id": None},
+                {"id": None, "name": "bad", "balance": 0.0})],
+        2,
+    )
+    _mk_pipeline(spark, pipeline_dirs, ignore_deletes=True).run_available()
+    dlq = spark.read.parquet(pipeline_dirs["dlq"] + "/table=users").collect()
+    assert len(dlq) == 1 and dlq[0].reason == "null_key"
+
+
+def test_replay_restamps_seq_above_log_max_replay_wins(spark, pipeline_dirs):
+    from sync_spark.streaming.pipeline import replay_dlq
+
+    _snapshot(spark, pipeline_dirs, [Row(id=1, name="a", balance=1.0)])
+    write_event_batch(
+        pipeline_dirs["events"],
+        [_event("insert", 5, "users", {"id": None},
+                {"id": None, "name": "repaired", "balance": 42.0})],
+        1,
+    )
+    pipe = _mk_pipeline(spark, pipeline_dirs)
+    pipe.run_available()
+
+    # a NEWER live update for the same key the repair will assign,
+    # still unconsumed when the replay lands → both files drain in ONE
+    # availableNow micro-batch, so per-key compaction (max seq) is the
+    # tiebreak. Without re-stamping, seq=100 beats the replayed seq=5
+    # and the operator's repair silently loses.
+    write_event_batch(
+        pipeline_dirs["events"],
+        [_event("update", 100, "users", {"id": 1},
+                {"id": 1, "name": "stale-live", "balance": 0.0})],
+        2,
+    )
+
+    def fix(df):
+        return df.withColumn("id", F.coalesce(F.col("id"), F.lit(1)))
+
+    replayed, remaining = replay_dlq(
+        spark, pipeline_dirs["dlq"], pipeline_dirs["events"],
+        "users", ROW_SCHEMA, ["id"], fix=fix,
+    )
+    assert (replayed, remaining) == (1, 0)
+    # the appended replay file carries a fresh seq above the log max
+    replay_files = glob.glob(os.path.join(pipeline_dirs["events"], "events-9*.jsonl"))
+    assert replay_files
+    seqs = [json.loads(line)["seq"]
+            for p in replay_files for line in open(p) if line.strip()]
+    assert min(seqs) > 100
+    pipe.run_available()
+    tgt = _read_target(spark, pipeline_dirs["target"])
+    assert tgt[1]["name"] == "repaired" and tgt[1]["balance"] == 42.0

@@ -131,7 +131,7 @@ def test_cli_run_execute_snapshot(spark, tmp_path, capsys):
     assert main(["snapshot", "create", "--target", tgt]) == 0
     capsys.readouterr()
     assert main([
-        "snapshot", "diff", "--target", tgt, "--version", "1", "--version-b", "2",
+        "snapshot", "diff", "--target", tgt, "--version", "0", "--version-b", "1",
         "--keys", "id",
     ]) == 0
     payload = json.loads(capsys.readouterr().out.strip())
@@ -210,6 +210,11 @@ def test_cli_run_export_delta_and_checkpoint(spark, tmp_path, capsys):
     assert log_versions(table) == []
     got = {(r.id, r.name) for r in read_export(spark, table).collect()}
     assert got == {(1, "a"), (2, "b")}
+    # the report reads the checkpoint too: a JSON-only replay of the
+    # cleaned log would say latest -1
+    assert main(["export-delta", "--target", tgt, "--out", table]) == 0
+    payload = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert payload["exported"] is None and payload["latest"] == 0
 
 
 def test_cli_query_verb(spark, sf_small, capsys):
@@ -260,11 +265,20 @@ def test_cli_maintain_verb(spark, tmp_path, capsys):
             str(stats / "table=users" / f"batch_id={b}")
         )
 
-    # three snapshots; maintain keeps only the newest
+    # three snapshots of three store states (a create on an unchanged
+    # store commits nothing); maintain keeps only the newest
     tgt = str(dirs["tgt"] / "users_t")
-    for _ in range(3):
+    for k in range(3):
+        if k:
+            assert main([
+                "execute", *_task_args(dirs, spec_path), "--apply",
+                "--query", (
+                    f"MERGE INTO users_t AS t USING (SELECT {20 + k} AS id, 'm' AS name) s "
+                    "ON t.id = s.id WHEN NOT MATCHED THEN INSERT *"
+                ),
+            ]) == 0
         assert main(["snapshot", "create", "--target", tgt]) == 0
-    capsys.readouterr()
+        assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["created"] == k
 
     assert main([
         "maintain", *_task_args(dirs, spec_path),
@@ -288,7 +302,7 @@ def test_cli_maintain_verb(spark, tmp_path, capsys):
     }
     assert totals[("users", "upsert")] == (2, 2)
     # snapshots expired down to 1
-    assert out["snapshots_expired"]["users_t"] == [1, 2]
+    assert out["snapshots_expired"]["users_t"] == [0, 1]
     # delta vacuum ran per published table (nothing to drop at 1 version)
     assert out["delta_vacuum"]["users_t"]["deleted_files"] == 0
 
@@ -302,3 +316,22 @@ def test_cli_maintain_verb(spark, tmp_path, capsys):
     out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out2["pruned_event_files"] == 0
     assert out2["snapshots_expired"].get("users_t", []) == []
+
+
+def test_cli_keep_windows_below_one_exit_2(capsys):
+    """A retention window below 1 is refused before any work: a Delta
+    log always keeps its latest version (vacuum_export raises too)."""
+    import pytest
+
+    task = ["--spec", "s", "--source-dir", "a", "--target-root", "b",
+            "--event-log", "c", "--checkpoint", "d"]
+    for argv in (
+        ["snapshot", "expire", "--target", "t", "--keep-last", "0"],
+        ["export-delta", "--target", "t", "--out", "o", "--vacuum-keep", "0"],
+        ["maintain", *task, "--keep-snapshots", "0"],
+        ["maintain", *task, "--vacuum-keep", "-1"],
+    ):
+        with pytest.raises(SystemExit) as exc:
+            main(argv)
+        assert exc.value.code == 2
+        assert "must be >= 1" in capsys.readouterr().err

@@ -349,6 +349,89 @@ def test_vacuum_deletes_unreferenced_keeps_retained_window(spark, tmp_path):
     assert on_disk == (v1_files | v2_files)
 
 
+@pytest.mark.parametrize("keep", [0, -1])
+def test_vacuum_rejects_keep_window_below_one(spark, tmp_path, keep):
+    """keep_versions < 1 raises and touches nothing: `[-0:]` would keep
+    every version and `-1` would act like 2."""
+    from sync_spark.sources.delta_export import vacuum_export
+
+    tgt, dl = str(tmp_path / "t"), str(tmp_path / "delta")
+    write_bucketed(_rows(spark, [(i, f"v{i}") for i in range(10)]), tgt, ["id"], N_BUCKETS)
+    export_delta(spark, tgt, dl)
+    _merge(spark, tgt, [(3, "A", "upsert")])
+    export_delta(spark, tgt, dl)
+    files = sorted(os.path.join(r, f) for r, _, fs in os.walk(dl) for f in fs)
+    with pytest.raises(ValueError, match="keep_versions must be >= 1"):
+        vacuum_export(dl, keep_versions=keep)
+    assert sorted(os.path.join(r, f) for r, _, fs in os.walk(dl) for f in fs) == files
+
+
+def test_time_travel_to_missing_version_raises(spark, tmp_path):
+    """A version the log does not hold — above the latest, or dropped
+    by vacuum or clean_log — raises instead of serving another
+    version's file set under the asked-for number."""
+    from sync_spark.sources.delta_export import (
+        replay_with_checkpoint,
+        vacuum_export,
+        write_checkpoint,
+    )
+
+    tgt, dl = str(tmp_path / "t"), str(tmp_path / "delta")
+    write_bucketed(_rows(spark, [(i, f"v{i}") for i in range(10)]), tgt, ["id"], N_BUCKETS)
+    export_delta(spark, tgt, dl)
+    for k in (1, 2):
+        _merge(spark, tgt, [(k, f"gen{k}", "upsert")])
+        export_delta(spark, tgt, dl)
+
+    def missing(v):
+        with pytest.raises(ValueError, match=f"unknown snapshot version {v}"):
+            replay_with_checkpoint(dl, v)
+        with pytest.raises(ValueError, match=f"unknown snapshot version {v}"):
+            read_export(spark, dl, version=v)
+
+    for v in (3, 7, -1):
+        missing(v)
+    vacuum_export(dl, keep_versions=2)
+    missing(0)
+    write_checkpoint(dl, clean_log=True)
+    missing(1)
+    assert {(r.id, r.v) for r in read_export(spark, dl, version=2).collect()} == _state(
+        spark, tgt
+    )
+
+
+def test_snapshot_log_independent_readback(spark, tmp_path):
+    """A store's snapshots are a Delta log any reader can fold: the
+    test-local `_fold_log_jarfree` replay of `<store>/.snapshots`,
+    scanned by DuckDB, equals the latest snapshot, and read_snapshot
+    equals the frozen state at every retained version."""
+    import duckdb
+
+    from sync_spark.sources.snapshots import read_snapshot, snapshot_create
+
+    tgt = str(tmp_path / "t")
+    write_bucketed(_rows(spark, [(i, f"v{i}") for i in range(20)]), tgt, ["id"], N_BUCKETS)
+    frozen = {snapshot_create(spark, tgt): _state(spark, tgt)}
+    for changes in ([(3, "CHANGED", "upsert"), (7, None, "delete")], [(99, "NEW", "upsert")]):
+        _merge(spark, tgt, changes)
+        frozen[snapshot_create(spark, tgt)] = _state(spark, tgt)
+    assert sorted(frozen) == [0, 1, 2]
+    for v, want in frozen.items():
+        assert {(r.id, r.v) for r in read_snapshot(spark, tgt, v).collect()} == want
+
+    snap = os.path.join(tgt, ".snapshots")
+    files = [os.path.join(snap, p) for p in _fold_log_jarfree(snap)]
+    con = duckdb.connect()
+    try:
+        got = {
+            (r[0], r[1])
+            for r in con.execute("SELECT id, v FROM read_parquet(?)", [files]).fetchall()
+        }
+    finally:
+        con.close()
+    assert got == frozen[2]
+
+
 def test_vacuum_noop_when_everything_retained(spark, tmp_path):
     from sync_spark.sources.delta_export import vacuum_export
 

@@ -110,7 +110,7 @@ def test_full_pipeline_matches_duckdb_fold(spark, tmp_path, seed):
         )
 
     mk_pipe().run_available()
-    v_before = snapshot_create(dirs["target"], note="pre-replay")
+    v_before = snapshot_create(spark, dirs["target"], note="pre-replay")
 
     # repair: quarantined null-key rows get fresh deterministic ids
     base = 5_000_000 + seed
@@ -128,7 +128,7 @@ def test_full_pipeline_matches_duckdb_fold(spark, tmp_path, seed):
     )
     assert replayed == counts["bad"] and remaining == 0
     mk_pipe().run_available()
-    v_after = snapshot_create(dirs["target"], note="post-replay")
+    v_after = snapshot_create(spark, dirs["target"], note="post-replay")
 
     # snapshot diff between the two versions = exactly the replayed keys
     diff = {

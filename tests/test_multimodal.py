@@ -3,8 +3,12 @@ feature / frame-sample pipelines, binaryFile ingestion, stub gating."""
 
 from __future__ import annotations
 
+import struct
+import zlib
+
 import pytest
 
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from sync_spark.functions.multimodal import (
@@ -609,3 +613,44 @@ def test_media_decode_throughput_measured(spark, sf_small):
     print(f"decode throughput: {mb_s:.1f} MB/s total over {wall:.2f}s, "
           f"{n_bytes/1e6:.1f} MB, {n} payloads")
     assert mb_s > 0.5  # loose floor: decode is running, not hung
+
+
+def _png_with_corrupt_idat() -> bytes:
+    """CRC-valid IHDR + CRC-valid IDAT chunk whose data is NOT a
+    deflate stream: zlib.decompress raises zlib.error, which is not a
+    ValueError/IndexError."""
+    sig = b"\x89PNG\r\n\x1a\n"
+    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
+    ihdr_chunk = (
+        struct.pack(">I", 13)
+        + b"IHDR"
+        + ihdr
+        + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr) & 0xFFFFFFFF)
+    )
+    junk = b"\x00not-deflate\xff"
+    idat_chunk = (
+        struct.pack(">I", len(junk))
+        + b"IDAT"
+        + junk
+        + struct.pack(">I", zlib.crc32(b"IDAT" + junk) & 0xFFFFFFFF)
+    )
+    iend = struct.pack(">I", 0) + b"IEND" + struct.pack(">I", zlib.crc32(b"IEND"))
+    return sig + ihdr_chunk + idat_chunk + iend
+
+
+def test_corrupt_idat_yields_null_row_not_batch_death(spark):
+    from sync_spark.functions.multimodal import image_stats, resize_image
+
+    payload = _png_with_corrupt_idat()
+    df = spark.createDataFrame(
+        [Row(media_id=1, payload=bytearray(payload)),
+         Row(media_id=2, payload=bytearray(b"P6\n1 1\n255\n\x10\x20\x30"))],
+        "media_id long, payload binary",
+    )
+    rows = {r.media_id: r for r in image_stats(df).collect()}
+    # bad payload → NULL row; the good PPM row in the SAME batch lives
+    assert rows[1].width is None and rows[1].mean_r is None
+    assert rows[2].width == 1 and rows[2].mean_r == pytest.approx(16.0)
+    resized = {r.media_id: r for r in resize_image(df, 8).collect()}
+    assert resized[1].payload is None
+    assert resized[2].payload is not None
