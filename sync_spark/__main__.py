@@ -339,7 +339,8 @@ def cmd_maintain(args) -> int:
       batch the stream has committed (max committed batch id + 1;
       replay-range 9e9 ids excluded, mirroring the pruner);
     - snapshot expiry: ``expire_snapshots --keep-snapshots`` per
-      mapped target that has a snapshot log;
+      mapped target that has a snapshot log; ``.snapshots`` entries
+      outside the log are reported (``snapshots_stray``), not skipped;
     - optional delta-export upkeep (``--export-delta`` root):
       ``vacuum_export --vacuum-keep`` per published table.
 
@@ -373,14 +374,20 @@ def cmd_maintain(args) -> int:
         out["stats_folded"] = (
             compact_apply_stats(spark, args.stats, below) if below else {}
         )
-    expired = {}
+    expired, stray = {}, {}
     for t in task._targets():
         name = os.path.basename(t.target_path.rstrip("/"))
         if os.path.isdir(os.path.join(t.target_path, S.SNAP_DIR, D.LOG_DIR)):
             expired[name] = S.expire_snapshots(
                 t.target_path, keep_last=args.keep_snapshots
             )
+        leftover = S.stray_entries(t.target_path)
+        if leftover:
+            stray[name] = leftover
     out["snapshots_expired"] = expired
+    if stray:  # e.g. an earlier snapshot format's trees, never expired
+        out["snapshots_stray"] = stray
+        print(f"warning: entries outside the snapshot log: {stray}", file=sys.stderr)
     if args.export_delta:
         vac = {}
         for t in task._targets():

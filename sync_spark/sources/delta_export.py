@@ -137,11 +137,24 @@ def replay_log(delta_dir: str) -> dict:
     return state
 
 
+def _replace_lines(final: str, actions: list[dict]) -> None:
+    """Write ``actions`` as JSON lines to a dot-tmp name beside
+    ``final``, then ``os.replace`` it there: a crash leaves the old
+    file (or none), never a torn one."""
+    tmp = os.path.join(
+        os.path.dirname(final), f".tmp_{uuid.uuid4().hex[:8]}_{os.path.basename(final)}"
+    )
+    with open(tmp, "w") as fh:
+        for action in actions:
+            fh.write(json.dumps(action, separators=(",", ":")) + "\n")
+    os.replace(tmp, final)
+
+
 def write_commit(delta_dir: str, version: int, actions: list[dict]) -> None:
-    """Append one log version atomically: stage under a dot-tmp name,
-    ``os.replace`` into the final ``{version:020d}.json``. Raises if
-    the version already exists (single-writer put-if-absent — the
-    local-FS stand-in for Delta's LogStore contract)."""
+    """Append one log version atomically (``_replace_lines`` into the
+    final ``{version:020d}.json``). Raises if the version already
+    exists (single-writer put-if-absent — the local-FS stand-in for
+    Delta's LogStore contract)."""
     os.makedirs(_log_path(delta_dir), exist_ok=True)
     final = _version_file(delta_dir, version)
     if os.path.exists(final):
@@ -149,13 +162,7 @@ def write_commit(delta_dir: str, version: int, actions: list[dict]) -> None:
             f"delta commit conflict: version {version} already exists in "
             f"{delta_dir!r} (concurrent writer?)"
         )
-    tmp = os.path.join(
-        _log_path(delta_dir), f".tmp_{version:020d}_{uuid.uuid4().hex[:8]}.json"
-    )
-    with open(tmp, "w") as fh:
-        for action in actions:
-            fh.write(json.dumps(action, separators=(",", ":")) + "\n")
-    os.replace(tmp, final)
+    _replace_lines(final, actions)
 
 
 def _live_files(store_path: str) -> dict[str, dict]:
@@ -222,15 +229,16 @@ def export_delta(
 
     adds = {p: a for p, a in live.items() if p not in state["files"]}
     removes = sorted(p for p in state["files"] if p not in live)
-    schema_string = _schema_string(spark, store_path)
     layout = read_meta(store_path)
-    configuration = {LAYOUT_KEY: json.dumps(layout)} if layout else {}
-    meta_changed = state["metaData"] is None or (
-        state["metaData"]["schemaString"],
-        state["metaData"].get("configuration") or {},
-    ) != (schema_string, configuration)
-    if not adds and not removes and not meta_changed:
+    conf = {LAYOUT_KEY: json.dumps(layout)} if layout else {}
+    prior = state["metaData"] or {}
+    prior_conf = prior.get("configuration") or {}
+    if not adds and not removes and prior and prior_conf == conf:
+        # an unchanged file set cannot change the schema: skip the
+        # footer-merge job
         return None
+    schema_string = _schema_string(spark, store_path)
+    meta_changed = (prior.get("schemaString"), prior_conf) != (schema_string, conf)
 
     # link data files BEFORE committing the log entry: a crash here
     # leaks unreferenced links, never a log that points at nothing
@@ -254,20 +262,15 @@ def export_delta(
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
         )
     if meta_changed:
-        prior_id = state["metaData"]["id"] if state["metaData"] else uuid.uuid4().hex
         actions.append(
             {
                 "metaData": {
-                    "id": prior_id,
+                    "id": prior.get("id") or uuid.uuid4().hex,
                     "format": {"provider": "parquet", "options": {}},
                     "schemaString": schema_string,
                     "partitionColumns": [BUCKET_COL],
-                    "configuration": configuration,
-                    "createdTime": (
-                        state["metaData"]["createdTime"]
-                        if state["metaData"]
-                        else now_ms
-                    ),
+                    "configuration": conf,
+                    "createdTime": prior.get("createdTime", now_ms),
                 }
             }
         )
@@ -376,15 +379,15 @@ def vacuum_export(delta_dir: str, keep_versions: int = 2) -> dict:
     retained = all_versions[-keep_versions:]
     cutoff = retained[0]
 
-    # checkpoint-seeded replay per retained version; union = survivors
-    survivors: set[str] = set()
-    per_version: dict[int, dict[str, dict]] = {}
-    for v in retained:
-        st = replay_with_checkpoint(delta_dir, v)
-        per_version[v] = st["files"]
-        survivors |= set(st["files"])
-    latest = replay_with_checkpoint(delta_dir, all_versions[-1])
-    meta, proto = latest["metaData"], latest["protocol"]
+    # checkpoint-seeded replay per retained version; union = survivors.
+    # The base commit stands for version `cutoff`, so it carries THAT
+    # version's metaData (schema + bucket layout), not the latest's;
+    # later versions already re-emit metaData where it changed
+    base = replay_with_checkpoint(delta_dir, cutoff)
+    meta, proto = base["metaData"], base["protocol"]
+    survivors = set(base["files"])
+    for v in retained[1:]:
+        survivors |= set(replay_with_checkpoint(delta_dir, v)["files"])
 
     # delete unreferenced data files
     deleted = 0
@@ -438,7 +441,7 @@ def vacuum_export(delta_dir: str, keep_versions: int = 2) -> dict:
             # never added once the older JSON is gone).
             cp_files = replay_with_checkpoint(delta_dir, cp_version)["files"]
             now_ms = int(time.time() * 1000)
-            for p in sorted(set(cp_files) - set(per_version[cutoff])):
+            for p in sorted(set(cp_files) - set(base["files"])):
                 base_actions.append(
                     {
                         "remove": {
@@ -448,15 +451,9 @@ def vacuum_export(delta_dir: str, keep_versions: int = 2) -> dict:
                         }
                     }
                 )
-        for p in sorted(per_version[cutoff]):
-            base_actions.append({"add": per_version[cutoff][p]})
-        tmp = os.path.join(
-            _log_path(delta_dir), f".tmp_base_{cutoff:020d}_{uuid.uuid4().hex[:8]}.json"
-        )
-        with open(tmp, "w") as fh:
-            for action in base_actions:
-                fh.write(json.dumps(action, separators=(",", ":")) + "\n")
-        os.replace(tmp, _version_file(delta_dir, cutoff))
+        for p in sorted(base["files"]):
+            base_actions.append({"add": base["files"][p]})
+        _replace_lines(_version_file(delta_dir, cutoff), base_actions)
         if cp_stale:
             # pointer first, then the parquet: an orphan checkpoint
             # file without _last_checkpoint is never consulted
@@ -582,10 +579,7 @@ def write_checkpoint(
     os.replace(tmp, final)
 
     lc_final = os.path.join(_log_path(delta_dir), LAST_CHECKPOINT)
-    lc_tmp = lc_final + f".tmp_{uuid.uuid4().hex[:8]}"
-    with open(lc_tmp, "w") as fh:
-        json.dump({"version": version, "size": n}, fh)
-    os.replace(lc_tmp, lc_final)
+    _replace_lines(lc_final, [{"version": version, "size": n}])
 
     dropped = 0
     if clean_log:

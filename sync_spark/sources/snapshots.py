@@ -16,8 +16,9 @@ retention (``expire_snapshots`` = ``vacuum_export``) and time travel
 are the export's; any Delta reader can read the snapshots.
 
 Cost at 100 TB: one snapshot = O(#changed files) link syscalls + one
-JSON commit + the export's footer-merge schema job; untouched buckets
-share one inode across every version and the live table.
+JSON commit + the export's footer-merge schema job (none when nothing
+changed); untouched buckets share one inode across every version and
+the live table.
 
 The ``.snapshots`` root is dot-prefixed, so Spark's file listing on
 the LIVE table never sees it (same discipline as the ``.old_*``
@@ -31,6 +32,7 @@ import json
 import os
 import shutil
 import uuid
+import warnings
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +47,7 @@ from sync_spark.sources.bucketed import (
 )
 from sync_spark.sources.delta_export import (
     LAYOUT_KEY,
+    LOG_DIR,
     _link_file,
     _read_actions,
     export_delta,
@@ -56,10 +59,23 @@ from sync_spark.sources.delta_export import (
 )
 
 
+def stray_entries(path: str) -> list[str]:
+    """``.snapshots`` entries outside the Delta log (e.g. the earlier
+    format's per-version trees): no version names them, so nothing
+    lists or expires them while they pin old bytes."""
+    snap = os.path.join(path, SNAP_DIR)
+    entries = os.listdir(snap) if os.path.isdir(snap) else []
+    return sorted(e for e in entries if e != LOG_DIR and not e.startswith(BUCKET_COL))
+
+
 def snapshot_versions(path: str) -> list[dict]:
     """Committed snapshot descriptors {version, created_unix, note},
-    oldest first, from the log's versions and their ``commitInfo``."""
+    oldest first, from the log's versions and their ``commitInfo``.
+    Warns about ``stray_entries``."""
     snap = os.path.join(path, SNAP_DIR)
+    stray = stray_entries(path)
+    if stray:
+        warnings.warn(f"{snap}: entries outside its Delta log: {stray}", stacklevel=2)
     json_versions = set(log_versions(snap))
     out = []
     for v in table_versions(snap):
@@ -115,7 +131,6 @@ def snapshot_rollback(spark: SparkSession, path: str, version: int) -> int:
     the version's bucket layout is written back."""
     snap = os.path.join(path, SNAP_DIR)
     state = replay_with_checkpoint(snap, version)  # unknown version raises
-    _clean_stale_stages(path)
     safety = snapshot_create(spark, path, note=f"pre-rollback-to-v{version}")
     by_bucket: dict[str, list[str]] = {}
     for p in state["files"]:

@@ -169,12 +169,10 @@ class CdcPipeline:
         self.max_files_per_trigger = max_files_per_trigger
         self.stats_path = stats_path
         self.n_buckets = n_buckets
-        # opt-in time travel: freeze each table's post-merge state as
-        # a version of the store's `.snapshots` Delta log
-        # (sources/snapshots.py; one footer-merge schema job per table
-        # per batch) — the batch id is the commit's note, so an
-        # operator can map versions back to the stream position for
-        # as-of debugging / rollback
+        # opt-in time travel: commit each table's post-merge state as a
+        # version of its `.snapshots` Delta log (sources/snapshots.py;
+        # one footer-merge schema job per table per changed batch), the
+        # batch id as the note, so versions map back to stream position
         self.snapshot_after_batch = snapshot_after_batch
         self._schema_checked: set[str] = set()
         # the EFFECTIVE stored schema per table: fieldSecurity re-types
@@ -538,9 +536,7 @@ class CdcPipeline:
                 if self.snapshot_after_batch:
                     from sync_spark.sources.snapshots import snapshot_create
 
-                    snapshot_create(
-                        self.spark, t.target_path, note=f"batch={batch_id}"
-                    )
+                    snapshot_create(self.spark, t.target_path, note=f"batch={batch_id}")
         finally:
             batch.unpersist()
 

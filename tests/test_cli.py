@@ -280,13 +280,19 @@ def test_cli_maintain_verb(spark, tmp_path, capsys):
         assert main(["snapshot", "create", "--target", tgt]) == 0
         assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["created"] == k
 
+    # an entry outside the snapshot log (an earlier format's tree) is
+    # reported, not silently skipped
+    os.makedirs(os.path.join(tgt, ".snapshots", "v9"))
     assert main([
         "maintain", *_task_args(dirs, spec_path),
         "--stats", str(stats),
         "--keep-snapshots", "1",
         "--export-delta", str(dl_root),
     ]) == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    captured = capsys.readouterr()
+    out = json.loads(captured.out.strip().splitlines()[-1])
+    assert out["snapshots_stray"] == {"users_t": ["v9"]}
+    assert "entries outside the snapshot log" in captured.err
 
     # both committed event files pruned
     assert out["pruned_event_files"] == 2

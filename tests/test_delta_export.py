@@ -155,6 +155,22 @@ def test_idempotent_when_unchanged(spark, tmp_path):
     assert log_versions(dl) == [0]
 
 
+def test_unchanged_export_skips_schema_read(spark, tmp_path, monkeypatch):
+    """An unchanged file set cannot change the schema, so a no-change
+    export returns before the footer-merge schema job."""
+    import sync_spark.sources.delta_export as D
+
+    src, dl = str(tmp_path / "store"), str(tmp_path / "delta")
+    write_bucketed(_rows(spark, [(1, "a"), (2, "b")]), src, ["id"], N_BUCKETS)
+    assert export_delta(spark, src, dl) == 0
+
+    def no_schema_read(*_a, **_k):
+        raise AssertionError("schema read on an unchanged store")
+
+    monkeypatch.setattr(D, "_schema_string", no_schema_read)
+    assert export_delta(spark, src, dl) is None
+
+
 def test_schema_evolution_reemits_metadata(spark, tmp_path):
     tgt, dl = str(tmp_path / "t"), str(tmp_path / "delta")
     write_bucketed(_rows(spark, [(i, f"v{i}") for i in range(10)]), tgt, ["id"], N_BUCKETS)
@@ -679,8 +695,7 @@ def _delta_reader():
         import duckdb
 
         con = duckdb.connect()
-        con.execute("INSTALL delta")
-        con.execute("LOAD delta")
+        con.execute("LOAD delta")  # only an already-installed extension
         return ("duckdb", con)
     except Exception:
         pass

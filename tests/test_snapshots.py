@@ -31,6 +31,7 @@ from sync_spark.sources.snapshots import (
     snapshot_create,
     snapshot_rollback,
     snapshot_versions,
+    stray_entries,
 )
 
 SCHEMA = T.StructType(
@@ -309,6 +310,48 @@ def test_rollback_restores_bucket_layout(spark, tmp_path):
     assert read_meta(tgt) == {"n_buckets": N_BUCKETS, "key_cols": ["id"]}
     got = lookup_keys(spark, tgt, [(i,) for i, _ in base])
     assert {(r.id, r.v) for r in got.collect()} == set(base)
+
+
+def test_rollback_after_expiry_keeps_version_layout(spark, tmp_path):
+    """Expiry collapses the oldest retained version into a base commit;
+    that commit must carry the version's OWN bucket layout, not the
+    latest one. Two versions under 8 buckets, re-bucketize to 4, a
+    third version, expire to 2, roll back to the oldest retained: the
+    layout is 8 and point lookups find every key."""
+    tgt = str(tmp_path / "t")
+    base = [(i, f"v{i}") for i in range(40)]
+    write_bucketed(_rows(spark, base), tgt, ["id"], N_BUCKETS)
+    assert snapshot_create(spark, tgt) == 0
+    _merge(spark, tgt, [(3, "changed", "upsert"), (50, "new", "upsert")])
+    assert snapshot_create(spark, tgt) == 1
+    frozen = _state(spark, tgt)
+
+    bucketize_in_place(spark, tgt, ["id"], 4)
+    assert snapshot_create(spark, tgt) == 2
+    assert expire_snapshots(tgt, keep_last=2) == [0]
+
+    snapshot_rollback(spark, tgt, 1)
+    assert read_meta(tgt) == {"n_buckets": N_BUCKETS, "key_cols": ["id"]}
+    got = lookup_keys(spark, tgt, [(i,) for i, _ in frozen])
+    assert {(r.id, r.v) for r in got.collect()} == frozen
+
+
+def test_stray_snapshot_entries_are_reported(spark, tmp_path):
+    """Entries under `.snapshots/` outside the Delta log (an earlier
+    format's per-version trees) are no version; listing them as nothing
+    would hide the bytes they pin, so they are reported."""
+    tgt = str(tmp_path / "t")
+    write_bucketed(_rows(spark, [(1, "a")]), tgt, ["id"], N_BUCKETS)
+    assert stray_entries(tgt) == []
+    os.makedirs(os.path.join(tgt, ".snapshots", "v0"))
+    open(os.path.join(tgt, ".snapshots", "manifest.json"), "w").close()
+    assert stray_entries(tgt) == ["manifest.json", "v0"]
+    with pytest.warns(UserWarning, match="outside its Delta log"):
+        assert snapshot_versions(tgt) == []
+    assert snapshot_create(spark, tgt) == 0
+    assert stray_entries(tgt) == ["manifest.json", "v0"]
+    with pytest.warns(UserWarning, match="outside its Delta log"):
+        assert [v["version"] for v in snapshot_versions(tgt)] == [0]
 
 
 def test_rollback_parks_extra_buckets_and_heals_leaks(spark, tmp_path):
