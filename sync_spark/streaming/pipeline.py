@@ -63,6 +63,8 @@ from sync_spark.functions.security import apply_security_rules
 from sync_spark.operators.merge import DELETE_OP, OP_COL, apply_changes
 from sync_spark.operators.monitor import write_apply_stats
 from sync_spark.sources.bucketed import (
+    STORE_CODEC,
+    _swap_dir,
     bucket_expr_vals,
     bucketize_in_place,
     check_meta,
@@ -93,10 +95,8 @@ def _write_atomic(df: DataFrame, path: str) -> None:
     old dir is renamed aside before the new one lands, so there is no
     window where neither version exists (crash mid-swap leaves
     ``path__old`` for recovery)."""
-    from sync_spark.sources.bucketed import _swap_dir
-
     tmp = f"{path}__stage_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
+    df.write.mode("overwrite").option("compression", STORE_CODEC).parquet(tmp)
     _swap_dir(tmp, path)
 
 

@@ -469,3 +469,136 @@ def test_recover_cleans_committed_over_parked_root(spark, tmp_path):
     shutil.rmtree(tgt)
     recover_interrupted_swaps(tgt)
     assert not os.path.exists(tgt)  # nothing to resurrect
+
+
+def test_swap_dir_bumps_store_generation(tmp_path):
+    from sync_spark.sources import bucketed
+
+    gen0 = bucketed._store_mutation_gen
+    stage = tmp_path / "stage"
+    stage.mkdir()
+    (stage / "f.txt").write_text("x")
+    dst = tmp_path / "store"
+    bucketed._swap_dir(str(stage), str(dst))
+    assert bucketed._store_mutation_gen == gen0 + 1
+    assert os.path.exists(dst / "f.txt")
+
+
+# ---------------------------------------------------------------------------
+# store codec: every file the layout writer makes is zstd
+# ---------------------------------------------------------------------------
+
+
+def _bucket_dirs(tgt: str) -> dict[int, str]:
+    return {
+        int(e.split("=", 1)[1]): os.path.join(tgt, e)
+        for e in os.listdir(tgt)
+        if e.startswith(f"{BUCKET_COL}=")
+    }
+
+
+def _chunk_codecs(bucket_dir: str) -> set[str]:
+    """The codec of every column chunk of a bucket dir's parquet files."""
+    import pyarrow.parquet as pq
+
+    out = set()
+    for f in os.listdir(bucket_dir):
+        if f.endswith(".parquet"):
+            md = pq.ParquetFile(os.path.join(bucket_dir, f)).metadata
+            for i in range(md.num_row_groups):
+                out |= {md.row_group(i).column(j).compression for j in range(md.num_columns)}
+    return out
+
+
+def _name_codecs(bucket_dir: str) -> set[str]:
+    """The codec Spark names each file by (``part-*.zstd.parquet``): the
+    one trace of the codec a schema-only file carries, since it has no
+    row groups and so no column chunks."""
+    return {f.split(".")[-2] for f in os.listdir(bucket_dir) if f.endswith(".parquet")}
+
+
+def _ids_by_bucket(spark, ids) -> dict[int, set[int]]:
+    out: dict[int, set[int]] = {}
+    for r in spark.createDataFrame([(i,) for i in ids], "id long").select(
+        "id", bucket_expr(["id"], N_BUCKETS).alias("b")
+    ).collect():
+        out.setdefault(r.b, set()).add(r.id)
+    return out
+
+
+def test_snapshot_merge_and_emptied_buckets_are_zstd(spark, tmp_path):
+    tgt = str(tmp_path / "t_users")
+    _snapshot40(spark, tgt)
+    for d in _bucket_dirs(tgt).values():
+        assert _chunk_codecs(d) == {"ZSTD"}, d
+        assert _name_codecs(d) == {"zstd"}, d
+
+    by_bucket = _ids_by_bucket(spark, range(1, 41))
+    emptied = _bucket_of(spark, 1)
+    rewritten = next(b for b in sorted(by_bucket) if b != emptied)
+    kept = min(by_bucket[rewritten])
+    events = [_ev(s, "delete", i) for s, i in enumerate(sorted(by_bucket[emptied]), 1)]
+    events.append(_ev(len(events) + 1, "update", kept))
+    write_event_batch(str(tmp_path / "ev"), events, 1)
+    _pipeline(spark, tmp_path).run_available()
+
+    dirs = _bucket_dirs(tgt)
+    assert _chunk_codecs(dirs[rewritten]) == {"ZSTD"}
+    assert _name_codecs(dirs[rewritten]) == {"zstd"}
+    # the emptied bucket keeps one schema-only file, written zstd
+    assert spark.read.parquet(dirs[emptied]).count() == 0
+    assert _chunk_codecs(dirs[emptied]) == set()
+    assert _name_codecs(dirs[emptied]) == {"zstd"}
+    got = {r.id: r.v for r in read_target(spark, tgt).collect()}
+    assert got[kept] == f"v{len(events)}"
+    assert not set(got) & by_bucket[emptied]
+
+
+def test_merge_into_snappy_store_recompresses_only_touched_buckets(
+    spark, tmp_path, monkeypatch
+):
+    """A store written Snappy (the format before zstd) stays readable
+    and mergeable: a merge rewrites its touched buckets zstd, leaves
+    the untouched ones byte-identical Snappy, and the mixed-codec store
+    reads the same rows as an all-Snappy control given the same merge."""
+    from sync_spark.sources import bucketed
+    from sync_spark.sources.bucketed import lookup_keys
+
+    events = [_ev(1, "update", 1), _ev(2, "delete", 2), _ev(3, "insert", 1000)]
+    touched = {_bucket_of(spark, i) for i in (1, 2, 1000)}
+    stores = {}
+    for name in ("mixed", "control"):
+        base = tmp_path / name
+        tgt = str(base / "t_users")
+        with monkeypatch.context() as m:
+            m.setattr(bucketed, "STORE_CODEC", "snappy")
+            _snapshot40(spark, tgt)
+        before = {b: _dir_fingerprint(d) for b, d in _bucket_dirs(tgt).items()}
+        write_event_batch(str(base / "ev"), events, 1)
+        with monkeypatch.context() as m:
+            if name == "control":
+                m.setattr(bucketed, "STORE_CODEC", "snappy")
+            _pipeline(spark, base).run_available()
+        stores[name] = tgt
+
+        dirs = _bucket_dirs(tgt)
+        assert touched <= set(dirs)
+        for b, d in dirs.items():
+            if name == "control":
+                assert _name_codecs(d) == {"snappy"}, d
+            elif b in touched:
+                assert _name_codecs(d) == {"zstd"}, d
+                assert _chunk_codecs(d) <= {"ZSTD"}, d
+            else:
+                assert _dir_fingerprint(d) == before[b], d
+                assert _chunk_codecs(d) == {"SNAPPY"}, d
+        assert set(dirs) - touched, "need at least one untouched bucket"
+
+    def rows(df):
+        return sorted((r.id, r.v) for r in df.collect())
+
+    mixed, control = stores["mixed"], stores["control"]
+    assert rows(read_target(spark, mixed)) == rows(read_target(spark, control))
+    assert len(rows(read_target(spark, mixed))) == 40  # -1 delete, +1 insert
+    keys = [(i,) for i in [*range(1, 41), 1000, 9999]]
+    assert rows(lookup_keys(spark, mixed, keys)) == rows(lookup_keys(spark, control, keys))

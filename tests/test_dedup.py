@@ -152,3 +152,16 @@ class TestWinnowSqlKernel:
         got = winnow_pairs(df, "text", "doc_id", k=5, window=4,
                            min_shared=2, max_posting=100)
         assert {tuple(r) for r in got.collect()} == want and len(want) > 0
+
+
+def test_simhash_chunk_cache_bounded_to_one_entry(spark, sf_small):
+    from sync_spark.operators import dedup
+    from sync_spark.session import load_tables
+
+    load_tables(spark, sf_small)
+    dedup.simhash_pairs_cached(spark, "documents").count()
+    assert len(dedup._live_chunk_cache) == 1
+    first = dedup._live_chunk_cache[0]
+    dedup.simhash_pairs_cached(spark, "documents").count()
+    assert len(dedup._live_chunk_cache) == 1
+    assert dedup._live_chunk_cache[0] is not first

@@ -807,3 +807,42 @@ def test_independent_delta_readback(spark, tmp_path):
     assert got2 == want
     # and the fold agrees with the exporter's own replay on the file set
     assert set(files) == set(replay_log(dl)["files"])
+
+
+def test_duckdb_reads_zstd_store_and_export(spark, tmp_path):
+    """An independent reader decodes the zstd store: DuckDB's built-in
+    read_parquet (no extension) over the live bucket files, and over
+    the files the Delta export's log resolves to, returns exactly the
+    rows read_target returns."""
+    import glob
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    tgt, dl = str(tmp_path / "t"), str(tmp_path / "delta")
+    write_bucketed(
+        _rows(spark, [(i, f"value-{i % 7}-{i}") for i in range(200)]), tgt, ["id"], N_BUCKETS
+    )
+    _merge(spark, tgt, [(3, "CHANGED", "upsert"), (7, None, "delete"), (999, "NEW", "upsert")])
+    export_delta(spark, tgt, dl)
+
+    live = sorted(glob.glob(os.path.join(tgt, f"{BUCKET_COL}=*", "*.parquet")))
+    codecs = set()
+    for f in live:
+        md = pq.ParquetFile(f).metadata
+        for i in range(md.num_row_groups):
+            codecs |= {md.row_group(i).column(j).compression for j in range(md.num_columns)}
+    assert codecs == {"ZSTD"}
+
+    want = _state(spark, tgt)
+    assert len(want) == 200
+    exported = [os.path.join(dl, p) for p in _fold_log_jarfree(dl)]
+    con = duckdb.connect()
+    try:
+        for files in (live, exported):
+            got = con.execute(
+                "SELECT id, v FROM read_parquet(?, hive_partitioning = false)", [files]
+            ).fetchall()
+            assert len(got) == len(want) and set(got) == want
+    finally:
+        con.close()

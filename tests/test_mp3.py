@@ -117,3 +117,16 @@ def test_m_media_mp3_vs_oracle(spark):
 
     spec = all_queries()["m_media_mp3"]
     assert run_compare(spark, spec, "/root/testdata/sf0.001") is None
+
+
+def test_mp3_payload_max_bitrate_frames_full_length():
+    from sync_spark.functions.mp3 import mp3_meta, mp3_payload
+
+    # 320 kbps @ 32 kHz is the max representable V1 L3 frame (base
+    # 1440); the old 1255-byte pattern silently truncated its body
+    payload = mp3_payload(7, n_frames=5, rate=32000, bitrate_kbps=320)
+    # the meta walk only counts a frame when every byte its header
+    # claims is present — short-sliced bodies would break the chain
+    meta = mp3_meta(payload)
+    assert meta["n_frames"] == 5
+    assert meta["bitrate"] == 320000

@@ -719,3 +719,24 @@ class TestIndexedRegistryRows:
         k1 = rt._src_stat(sf_small, "documents")
         k2 = rt._src_stat("/root/testdata/sf0.01", "documents")
         assert k1 != k2
+
+
+def test_qmap_values_escapes_quotes_and_parses(spark):
+    from sync_spark.operators.retrieval import _qmap_values
+
+    vals = _qmap_values([(1, ["o'brien", "plain"])])
+    assert "''" in vals  # SQL-standard doubling, not a raw quote
+    rows = spark.sql(
+        f"SELECT * FROM VALUES {vals} AS q(query_id, tok) ORDER BY tok"
+    ).collect()
+    assert [r.tok for r in rows] == ["o'brien", "plain"]
+
+
+def test_qmap_values_empty_yields_joinable_null_row(spark):
+    from sync_spark.operators.retrieval import _qmap_values
+
+    vals = _qmap_values([])
+    # parses, and the NULL tok matches nothing in an inner join
+    q = spark.sql(f"SELECT * FROM VALUES {vals} AS q(query_id, tok)")
+    posting = spark.createDataFrame([("a", 1)], "tok string, doc_id int")
+    assert posting.join(q, "tok").count() == 0
