@@ -91,16 +91,32 @@ def spread_hint(df: DataFrame) -> str:
 
 
 def _frame_spread_width(df: DataFrame) -> int:
-    """The kernel width for ``df`` from its input files' bytes
-    (``inputFiles`` reads the scan's file index — no job, no plan
-    probe). 0 for a frame with no local files behind it."""
+    """The kernel width for ``df`` from its input files' bytes. 0 for
+    a frame with no local files behind it."""
+    return _spread_width_for_bytes(df.sparkSession, local_input_bytes(df))
+
+
+def local_input_bytes(df: DataFrame) -> int | None:
+    """Bytes of the local files behind ``df``'s scans (``inputFiles``
+    reads the scan's file index — no job, no plan probe). None when
+    the layout is unknown: no files (in-memory rows, JDBC) or any
+    file off the local filesystem (remote storage)."""
     size = 0
     for uri in df.inputFiles():
         parsed = urlparse(uri)
         if parsed.scheme not in ("", "file"):
-            return 0
+            return None
         size += os.path.getsize(unquote(parsed.path))
-    return _spread_width_for_bytes(df.sparkSession, size or None)
+    return size or None
+
+
+def scan_splits(spark, size: int) -> int:
+    """Input splits a scan of ``size`` bytes gets, estimated as
+    ``ceil(size / spark.sql.files.maxPartitionBytes)``, at least 1."""
+    max_split = _parse_byte_size(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+    )
+    return max(1, -(-size // max_split))
 
 
 def _spread_width_for_bytes(spark, size: int | None) -> int:
@@ -116,11 +132,7 @@ def _spread_width_for_bytes(spark, size: int | None) -> int:
         # job.
         return 0
     width = max(2, min(cap, size // _KERNEL_CHUNK_BYTES + 1))
-    max_split = _parse_byte_size(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    est_splits = max(1, (size + max_split - 1) // max_split)
-    return width if est_splits < width else 0
+    return width if scan_splits(spark, size) < width else 0
 
 
 def _parse_byte_size(value: str, default: int = 134217728) -> int:

@@ -94,17 +94,12 @@ def _spread_ids(
             # case is a redundant bare-long repartition — while at
             # 100 TB thousands of estimated splits ≥ width (≤ cap)
             # still make the spread a no-op, never a forced shuffle.
-            from sync_spark.operators.dedup import _parse_byte_size
+            from sync_spark.operators.dedup import scan_splits as splits_for
             from sync_spark.sources.readers import table_size_bytes
 
             size = table_size_bytes(sf_dir, "embeddings")
             if size is not None:
-                max_split = _parse_byte_size(
-                    ids.sparkSession.conf.get(
-                        "spark.sql.files.maxPartitionBytes", "134217728"
-                    )
-                )
-                scan_splits = max(1, (size + max_split - 1) // max_split)
+                scan_splits = splits_for(ids.sparkSession, size)
         except Exception:
             width = cap  # unknown layout: prefer parallelism
     if scan_splits is None:

@@ -204,40 +204,72 @@ def apply_stats_totals(spark: SparkSession, stats_path: str) -> DataFrame:
     below it — that makes a crash between "compacted dir renamed in"
     and "old dirs deleted" harmless (the superseded dirs are ignored,
     never double-counted) and the next compact call finishes the
-    deletion."""
-    # explicit schema: pre-compaction batch files lack src_batches and
-    # read NULL by name — mergeSchema would open every footer before
-    # partition pruning, a hot-path trap this serving query must avoid
-    stats = spark.read.schema(
-        "op string, n long, src_batches long, table string, batch_id string"
-    ).parquet(stats_path)
-    bid = F.col("batch_id").cast("string")
-    is_comp = bid.startswith("c")
-    live_id = F.when(~is_comp, bid.cast("long"))
-    comp_cutoff = F.when(is_comp, F.substring(bid, 2, 10).cast("long"))
-    from pyspark.sql.window import Window
+    deletion.
 
-    w = Window.partitionBy("table")
-    # only the NEWEST compacted dir per table counts (a crash between
-    # "new compacted dir in" and "old one deleted" would otherwise
-    # double-count the folded history), and live dirs below its
-    # cut-off are superseded by it
-    stats = stats.withColumn("__cut", F.max(comp_cutoff).over(w)).filter(
-        (is_comp & (comp_cutoff == F.col("__cut")))
-        | (~is_comp & (F.col("__cut").isNull() | (live_id >= F.col("__cut"))))
-    )
-    return (
-        stats.groupBy("table", "op")
-        .agg(
-            F.sum("n").alias("total"),
-            (
-                F.countDistinct(F.when(~is_comp, bid))
-                + F.coalesce(
-                    F.sum(F.when(is_comp, F.col("src_batches"))), F.lit(0)
-                )
-            ).alias("n_batches"),
+    The counters are a handful of driver-written rows per batch, so
+    they are read with pyarrow and rolled up on the driver: no Spark
+    job (a Spark read of the same files ran 4 jobs / 8 stages). The
+    listing follows Spark's: dot- and underscore-prefixed entries are
+    ignored, and a file without ``src_batches`` reads it as null.
+    Returns a local frame ``(table, op, total, n_batches)`` ordered by
+    table, op."""
+    from urllib.parse import unquote
+
+    import pyarrow.parquet as pq
+
+    from sync_spark.operators.localrel import arrow_local_frame
+
+    def partitions(path: str, key: str) -> list[tuple[str, str]]:
+        """(value, dir) of each ``key=value`` subdir of ``path``."""
+        if not os.path.isdir(path):
+            return []
+        return [
+            (unquote(e[len(key) + 1:]), os.path.join(path, e))
+            for e in sorted(os.listdir(path))
+            if e.startswith(f"{key}=") and os.path.isdir(os.path.join(path, e))
+        ]
+
+    def number(text: str) -> int | None:
+        return int(text) if text.isdigit() else None
+
+    # (table, op) -> [total, live batch ids, compacted src_batches]
+    groups: dict = {}
+    for table, tdir in partitions(stats_path, "table"):
+        batches = partitions(tdir, "batch_id")
+        cuts = [number(b[1:11]) for b, _ in batches if b.startswith("c")]
+        cut = max((c for c in cuts if c is not None), default=None)
+        for bid, bdir in batches:
+            # only the NEWEST compacted dir per table counts (a crash
+            # between "new compacted dir in" and "old one deleted"
+            # would otherwise double-count the folded history), and
+            # live dirs below its cut-off are superseded by it
+            compacted = bid.startswith("c")
+            if compacted:
+                keep = cut is not None and number(bid[1:11]) == cut
+            else:
+                keep = cut is None or (number(bid) is not None and number(bid) >= cut)
+            if not keep:
+                continue
+            for name in sorted(os.listdir(bdir)):
+                if name.startswith((".", "_")):
+                    continue
+                for r in pq.read_table(os.path.join(bdir, name)).to_pylist():
+                    g = groups.setdefault((table, r.get("op")), [None, set(), 0])
+                    if r.get("n") is not None:
+                        g[0] = (g[0] or 0) + r["n"]
+                    if not compacted:
+                        g[1].add(bid)
+                    elif r.get("src_batches") is not None:
+                        g[2] += r["src_batches"]
+    out = [
+        (table, op, total, len(live) + comp)
+        for (table, op), (total, live, comp) in sorted(
+            groups.items(),
+            key=lambda kv: tuple((v is not None, v or "") for v in kv[0]),
         )
-        .orderBy("table", "op")
+    ]
+    return arrow_local_frame(
+        spark, out, "table string, op string, total long, n_batches long"
     )
 
 

@@ -31,26 +31,47 @@ per batch. This module restores the reference's cost model on files:
   so Spark's file listing never sees them — a leftover can't poison
   the ``__bucket=`` partition namespace;
 - the layout is self-describing: ``write_bucketed`` persists
-  ``.sync_meta.json`` (n_buckets, key_cols) at the table root and
-  every merge validates it, so a pipeline configured with different
-  bucketing can't silently read/swap the wrong buckets;
+  ``.sync_meta.json`` (n_buckets, key_cols) at the table root, the
+  CDC pipeline takes each table's count from it, and every merge
+  validates it, so no caller can silently read/swap the wrong
+  buckets;
+- the bucket count is sized from the data (``buckets_for``): when a
+  full write is given no count, it takes one bucket per Spark input
+  split of its source, ``ceil(local input bytes /
+  spark.sql.files.maxPartitionBytes)``, at least 1. A source with no
+  local files behind it (in-memory rows, remote storage, JDBC, the
+  pipeline's empty bootstrap) keeps ``UNKNOWN_LAYOUT_BUCKETS`` = 16,
+  the unknown-layout rule kernel spread follows too. Every bucket is
+  at least one file, and each file carries 0.9–1.4 KB of footer and
+  page index: at 16 buckets a 2.2k-row ``orders`` table was 2,554 B
+  per file, 1,115 B of it not data. On perfbench ``cdc_catchup``
+  (seed 1, 4-core host) the ≤ 0.5 MB tables are one bucket each and
+  the store holds 11.2 B/row against 16.6 at 16 buckets (accounts
+  9.8 → 7.3, orders 18.3 → 8.9, profiles 72.1 → 49.0);
 - every file goes through one layout writer (``_write_layout``) as
   zstd parquet at parquet-mr's default level (``STORE_CODEC``). On
-  perfbench ``cdc_catchup`` (4-core host) that is 16.6 B/row against
-  23.8 with Snappy, −30%: accounts 16.3 → 9.8, orders 23.6 → 18.3,
-  profiles 88.6 → 72.1, the last bounded by its AES-GCM base64
-  ``phone`` column, which does not compress. Readers need no setting
-  (the codec is recorded per column chunk), so a store written Snappy
-  by an older version stays readable, and its buckets recompress
-  only when a merge touches them or ``bucketize_in_place`` rewrites
-  the layout.
+  perfbench ``cdc_catchup`` (4-core host, 16 buckets per table) that
+  was 16.6 B/row against 23.8 with Snappy, −30%: accounts 16.3 →
+  9.8, orders 23.6 → 18.3, profiles 88.6 → 72.1, the last bounded by
+  its AES-GCM base64 ``phone`` column, which does not compress.
+  Readers need no setting (the codec is recorded per column chunk),
+  so a store written Snappy by an older version stays readable, and
+  its buckets recompress only when a merge touches them or
+  ``bucketize_in_place`` rewrites the layout.
 
-At 100 TB: n_buckets sizes so one bucket ≈ a few GB (e.g. 8192
-buckets for 20 TB targets); the touched-set collect is bounded by
-n_buckets ints, not data. The same ``apply_changes`` plan feeds Delta
-or Iceberg ``MERGE INTO`` on deployments that have a table format —
-this store is the dependency-free equivalent with the same asymptotic
-write cost.
+At 100 TB: under the rule one bucket ≈ one 128 MB input split, so a
+20 TB snapshot is written as ~164k buckets of one file each (the
+data-sized write clusters rows by bucket first), and a batch touching
+k buckets rewrites about k × 128 MB (at a fixed 8192 buckets it was
+k × 2.5 GB). The touched-set collect is bounded by n_buckets ints
+(~164k), not data. The count is fixed when the snapshot is written:
+a store that outgrows it is split by an explicit
+``bucketize_in_place`` with a larger count, never behind a running
+pipeline's back. The persisted indexes (ANN, BM25 postings,
+fingerprints) keep the explicit counts their builders pass. The same
+``apply_changes`` plan feeds Delta or Iceberg ``MERGE INTO`` on
+deployments that have a table format — this store is the
+dependency-free equivalent with the same asymptotic write cost.
 """
 
 from __future__ import annotations
@@ -70,6 +91,10 @@ META_FILE = ".sync_meta.json"  # dot-prefixed: invisible to Spark listings
 OLD_PREFIX = ".old_"  # parking dir prefix for rename-aside swaps
 SNAP_DIR = ".snapshots"  # the store's snapshot log (sources/snapshots.py)
 STORE_CODEC = "zstd"  # parquet codec of every file the store writes
+# the bucket count when a write cannot see its input's size (in-memory
+# rows, remote storage, JDBC, an empty bootstrap): the unknown-layout
+# rule kernel spread follows too (operators/dedup.py)
+UNKNOWN_LAYOUT_BUCKETS = 16
 
 
 def bucket_expr_vals(vals: Sequence[F.Column], n_buckets: int) -> F.Column:
@@ -215,6 +240,30 @@ def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
     )
 
 
+def buckets_for(df: DataFrame) -> int:
+    """THE bucket-count rule: one bucket per Spark input split of
+    ``df``'s local files, ``ceil(bytes / maxPartitionBytes)``, at
+    least 1; ``UNKNOWN_LAYOUT_BUCKETS`` when ``df`` has no local
+    files behind it. Costs no job (the scan's file index)."""
+    from sync_spark.operators.dedup import local_input_bytes, scan_splits
+
+    size = local_input_bytes(df)
+    if size is None:
+        return UNKNOWN_LAYOUT_BUCKETS
+    return scan_splits(df.sparkSession, size)
+
+
+def _data_sized(df: DataFrame, keys: Sequence[str]) -> tuple[DataFrame, int]:
+    """``df`` and its ``buckets_for`` count; above one bucket, ``df``
+    is clustered one task per bucket. Unclustered, every input split
+    writes a file into every bucket, and under this rule the count
+    grows with the splits (splits² files)."""
+    n_buckets = buckets_for(df)
+    if n_buckets > 1:
+        df = df.repartition(n_buckets, bucket_expr(keys, n_buckets))
+    return df, n_buckets
+
+
 def _write_layout(
     df: DataFrame,
     stage: str,
@@ -258,14 +307,16 @@ def write_bucketed(
     df: DataFrame,
     path: str,
     keys: Sequence[str],
-    n_buckets: int,
+    n_buckets: int | None = None,
     extra_files: dict[str, str] | None = None,
 ) -> None:
     """Full (re)write of a bucketed target — the snapshot path. Stages
     the whole layout then swaps the root directory. An empty source
     still yields a readable, schema-bearing layout (one empty
     ``__bucket=0`` dir) so ``is_bucketed``/``read_target``/first-merge
-    work the same as on the legacy flat path.
+    work the same as on the legacy flat path. ``n_buckets=None``
+    sizes the layout from ``df`` (``buckets_for``) and writes each
+    bucket as one file.
 
     ``extra_files``: {filename: content} sidecars (dot-prefixed names
     so Spark ignores them) written INTO THE STAGE before the swap —
@@ -273,6 +324,8 @@ def write_bucketed(
     without its sidecars (the ANN index's params file is the canonical
     user; a post-swap sidecar write would leave a data-bearing but
     unreadable index if the process died in the window)."""
+    if n_buckets is None:
+        df, n_buckets = _data_sized(df, keys)
     stage = f"{path}__stage_{uuid.uuid4().hex[:8]}"
     _write_layout(df, stage, keys, n_buckets)
     write_meta(stage, keys, n_buckets)
@@ -426,16 +479,19 @@ def overwrite_buckets(
 
 
 def bucketize_in_place(
-    spark: SparkSession, path: str, keys: Sequence[str], n_buckets: int
+    spark: SparkSession, path: str, keys: Sequence[str], n_buckets: int | None = None
 ) -> None:
     """One-time migration of a legacy flat parquet target into the
     bucketed layout (used when a pipeline attaches to a target written
-    by an older snapshot), and re-bucketization when the persisted
-    contract (n_buckets/key_cols) differs from the pipeline's. Reads
-    via read_target so an existing ``__bucket`` partition column is
-    dropped before re-hashing."""
-    df = read_target(spark, path).localCheckpoint(eager=True)
-    write_bucketed(df, path, keys, n_buckets)
+    by an older snapshot), re-bucketization when the key columns
+    change, and the explicit split of a store that outgrew its count.
+    Reads via read_target so an existing ``__bucket`` partition column
+    is dropped before re-hashing. ``n_buckets=None`` sizes the layout
+    from the store's own files."""
+    df = read_target(spark, path)
+    if n_buckets is None:
+        df, n_buckets = _data_sized(df, keys)
+    write_bucketed(df.localCheckpoint(eager=True), path, keys, n_buckets)
 
 
 # bucket ids for literal key tuples are a pure function of

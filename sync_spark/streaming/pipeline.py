@@ -43,6 +43,17 @@ round-1 anti-pattern; at the reference's 500-table scale that was
 - MERGE: 2 — ``apply_changes`` is one per-key argmin over the touched
   buckets ∪ the changes (one shuffle), then the staged bucket write.
 
+The pipeline owns no bucket count: before each summary it reads every
+table's count from its store's ``.sync_meta.json`` (a driver-side file
+read, no job), so the layout never changes under a running pipeline.
+A legacy flat target, a meta-less layout or one bucketed on other key
+columns is migrated first, once, sized from its own files
+(``bucketed.buckets_for``). The job count above does not depend on
+the count, but the tasks do: on perfbench ``cdc_catchup`` (seed 1,
+traced, 4-core host) stores sized from their ≤ 0.5 MB snapshots are
+one bucket each, and a batch touches 1 bucket instead of 16, at 6.67
+jobs / 8.67 stages either way and 14.67 tasks instead of 22.67.
+
 The batch stays persisted: without it every consumer (summary, DLQ,
 MERGE) re-scans the source, and the stream's own ``numInputRows``
 counts each re-scan.
@@ -64,21 +75,20 @@ from sync_spark.operators.merge import DELETE_OP, OP_COL, apply_changes
 from sync_spark.operators.monitor import write_apply_stats
 from sync_spark.sources.bucketed import (
     STORE_CODEC,
+    UNKNOWN_LAYOUT_BUCKETS,
     _swap_dir,
     bucket_expr_vals,
     bucketize_in_place,
-    check_meta,
     empty_frame,
     overwrite_buckets,
     read_buckets,
+    read_meta,
     read_target,
     recover_interrupted_swaps,
     write_bucketed,
 )
 from sync_spark.sources.cdc import changes_for_table, read_event_stream
 from sync_spark.spec import SyncSpec
-
-DEFAULT_N_BUCKETS = 16  # tests/local; size so one bucket ≈ a few GB at scale
 
 
 @dataclass
@@ -105,13 +115,15 @@ def snapshot_if_empty(
     source: DataFrame,
     target_path: str,
     key_cols: Optional[list[str]] = None,
-    n_buckets: int = DEFAULT_N_BUCKETS,
+    n_buckets: Optional[int] = None,
     row_schema: Optional[T.StructType] = None,
 ) -> bool:
     """Initial full copy, skipped when the target already has data
     (mongodb.go:459-465). Returns True if the snapshot ran. When
     ``key_cols`` is given the target is written in the bucketed layout
-    directly (otherwise the pipeline migrates it on first merge)."""
+    directly (otherwise the pipeline migrates it on first merge),
+    with ``n_buckets`` sized from the source's files when not given
+    (``bucketed.buckets_for``)."""
     if row_schema is not None:
         # pin the snapshot to the CDC row_schema: a drifting source
         # type (e.g. int key vs declared long) would bucket by a
@@ -156,7 +168,6 @@ class CdcPipeline:
         security_key: str = "",
         max_files_per_trigger: int | None = None,
         stats_path: Optional[str] = None,
-        n_buckets: int = DEFAULT_N_BUCKETS,
         snapshot_after_batch: bool = False,
     ) -> None:
         self.spark = spark
@@ -168,7 +179,10 @@ class CdcPipeline:
         self.security_key = security_key
         self.max_files_per_trigger = max_files_per_trigger
         self.stats_path = stats_path
-        self.n_buckets = n_buckets
+        # each table's bucket count, read from its store before every
+        # batch's summary (``_adopt_layouts``): the store owns its
+        # layout, the pipeline never changes it
+        self._layouts: dict[str, int] = {}
         # opt-in time travel: commit each table's post-merge state as a
         # version of its `.snapshots` Delta log (sources/snapshots.py;
         # one footer-merge schema job per table per changed batch), the
@@ -250,9 +264,39 @@ class CdcPipeline:
             key_pred = c if key_pred is None else (key_pred & c)
         return pred | key_pred
 
+    def _adopt_layouts(self) -> dict[str, int]:
+        """Each table's bucket count, from its store's
+        ``.sync_meta.json`` — read BEFORE the summary, which hashes
+        every table's touched buckets under that table's own count.
+
+        A store the count cannot be trusted for is migrated first,
+        sized from its own files: a legacy flat target or a meta-less
+        bucketed layout (either may predate the meta contract, so no
+        count can be adopted from it) and a layout whose key columns
+        differ from the mapping's. A table with no target yet takes
+        the unknown-layout count, which its bootstrap on its first
+        events writes."""
+        layouts = {}
+        for t in self.tables:
+            # heal a crashed root swap FIRST: a crash between
+            # _swap_dir's two renames leaves no live dir, only the
+            # parked .old_<name> copy — treating the target as missing
+            # would bootstrap an empty one over the only copy
+            recover_interrupted_swaps(t.target_path)
+            if not os.path.exists(t.target_path):
+                layouts[t.source_table] = UNKNOWN_LAYOUT_BUCKETS
+                continue
+            meta = read_meta(t.target_path)
+            if meta is None or meta["key_cols"] != list(t.key_cols):
+                bucketize_in_place(self.spark, t.target_path, t.key_cols)
+                meta = read_meta(t.target_path)
+            layouts[t.source_table] = meta["n_buckets"]
+        return layouts
+
     def _batch_summary(self, batch: DataFrame) -> list:
         """THE one probe/stats job per micro-batch: per (table, op,
-        bad) counts + touched bucket sets.
+        bad) counts + touched bucket sets, each table's under its own
+        store's bucket count (``_adopt_layouts``).
 
         Computed in the ENVELOPE domain with per-table CASE branches
         (each branch parses that table's key with its own schema) —
@@ -277,7 +321,8 @@ class CdcPipeline:
             pred = F.col("op").isNull() | pred
             # THE layout hash (same definition object as the bucketed
             # writer — typed key values in key_cols order)
-            bucket = bucket_expr_vals(vals, self.n_buckets)
+            n_buckets = self._layouts[t.source_table]
+            bucket = bucket_expr_vals(vals, n_buckets)
             # PK-changing update: the OLD key's bucket is ALSO touched
             # (its row must be merged away); missing it would leave a
             # stale duplicate in an unread bucket
@@ -286,7 +331,7 @@ class CdcPipeline:
                 bkey = F.from_json("before_key_json", key_schema)
                 bbucket = F.when(
                     changed,
-                    bucket_expr_vals([bkey[k] for k in t.key_cols], self.n_buckets),
+                    bucket_expr_vals([bkey[k] for k in t.key_cols], n_buckets),
                 )
             else:
                 bbucket = F.lit(None).cast("int")
@@ -337,6 +382,7 @@ class CdcPipeline:
         (table,batch) overwrite discipline for DLQ/stats means
         replaying a batch after a crash converges to the same target
         state (T4)."""
+        self._layouts = self._adopt_layouts()
         batch = batch.persist()
         try:
             summary = self._batch_summary(batch)
@@ -434,31 +480,19 @@ class CdcPipeline:
                 good = self._apply_rules_unsecured(good, rules)
 
                 stored_schema = self._stored_schema[t.source_table]
-                # heal a crashed root swap FIRST: a crash between
-                # _swap_dir's two renames leaves no live dir, only
-                # the parked .old_<name> copy — bootstrapping an empty
-                # target here would then delete the only copy
-                recover_interrupted_swaps(t.target_path)
+                n_buckets = self._layouts[t.source_table]
                 if not os.path.exists(t.target_path):
                     # first events for a table that was never
                     # snapshotted (insert-only mapping, or a mapping
                     # added mid-stream): bootstrap an empty bucketed
-                    # target instead of dying on PATH_NOT_FOUND at
+                    # target, under the count the summary hashed
+                    # with, instead of dying on PATH_NOT_FOUND at
                     # every checkpoint replay
                     write_bucketed(
                         empty_frame(self.spark, stored_schema),
                         t.target_path,
                         t.key_cols,
-                        self.n_buckets,
-                    )
-                if not check_meta(t.target_path, t.key_cols, self.n_buckets):
-                    # a legacy flat target (no meta) or a layout
-                    # bucketed under a different contract (n_buckets/
-                    # key_cols): touched-bucket derivation would
-                    # read/swap the wrong dirs — (re-)bucketize under
-                    # the current one before merging
-                    bucketize_in_place(
-                        self.spark, t.target_path, t.key_cols, self.n_buckets
+                        n_buckets,
                     )
                 if t.source_table not in self._schema_checked:
                     # narrowing guard, once per table per pipeline
@@ -530,9 +564,7 @@ class CdcPipeline:
                 # merged reads the OLD bucket files while staging; the
                 # swap happens only after the staged write completes,
                 # so no localCheckpoint barrier is needed
-                overwrite_buckets(
-                    merged, t.target_path, t.key_cols, self.n_buckets, touched
-                )
+                overwrite_buckets(merged, t.target_path, t.key_cols, n_buckets, touched)
                 if self.snapshot_after_batch:
                     from sync_spark.sources.snapshots import snapshot_create
 

@@ -10,6 +10,7 @@ import hashlib
 import json
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -17,7 +18,9 @@ from pyspark.sql import types as T
 from sync_spark.sources.bucketed import (
     BUCKET_COL,
     OLD_PREFIX,
+    UNKNOWN_LAYOUT_BUCKETS,
     bucket_expr,
+    bucketize_in_place,
     is_bucketed,
     overwrite_buckets,
     read_buckets,
@@ -47,10 +50,10 @@ def _ev(seq, op, vid, table="users"):
     }
 
 
-def _bucket_of(spark, vid: int) -> int:
+def _bucket_of(spark, vid: int, n_buckets: int = N_BUCKETS) -> int:
     return (
         spark.createDataFrame([Row(id=vid)], "id long")
-        .select(bucket_expr(["id"], N_BUCKETS).alias("b"))
+        .select(bucket_expr(["id"], n_buckets).alias("b"))
         .collect()[0]["b"]
     )
 
@@ -66,17 +69,16 @@ def _dir_fingerprint(path: str) -> dict[str, str]:
     return out
 
 
-def _pipeline(spark, tmp_path, tables=None, **kw):
+def _pipeline(spark, tmp_path, tables=None, cls=CdcPipeline, **kw):
     tables = tables or [
         TableTarget("users", str(tmp_path / "t_users"), SCHEMA, ["id"])
     ]
-    return CdcPipeline(
+    return cls(
         spark,
         SyncSpec(task_id=1, type="parquet"),
         tables,
         event_log_dir=str(tmp_path / "ev"),
         checkpoint_dir=str(tmp_path / "ck"),
-        n_buckets=N_BUCKETS,
         **kw,
     )
 
@@ -278,22 +280,22 @@ def test_legacy_dunder_old_leftover_recovers(spark, tmp_path):
     assert len(got) == 40 and os.path.isdir(live)
 
 
-def test_n_buckets_mismatch_rebucketizes_not_corrupts(spark, tmp_path):
-    """Target snapshotted with 32 buckets, pipeline configured with 8:
-    without the persisted contract the touched-set math would swap the
-    wrong dirs and leave stale duplicates. The pipeline must detect
-    the mismatch and re-bucketize before merging (ADVICE item)."""
+def test_pipeline_adopts_store_bucket_count_not_corrupts(spark, tmp_path):
+    """Target written with 32 buckets: the pipeline reads the count
+    from the store's meta and merges under it — touched-set math
+    under any other count would swap the wrong dirs and leave stale
+    duplicates — and the layout stays at 32."""
     tgt = str(tmp_path / "t_users")
     rows = [Row(id=i, v=f"r{i}") for i in range(1, 41)]
     write_bucketed(spark.createDataFrame(rows, SCHEMA), tgt, ["id"], 32)
     assert read_meta(tgt)["n_buckets"] == 32
 
     write_event_batch(str(tmp_path / "ev"), [_ev(1, "update", 1)], 1)
-    _pipeline(spark, tmp_path).run_available()  # pipeline uses N_BUCKETS=8
+    _pipeline(spark, tmp_path).run_available()
 
     got = {r.id: r.v for r in read_target(spark, tgt).collect()}
     assert len(got) == 40 and got[1] == "v1"  # no stale duplicate of id=1
-    assert read_meta(tgt) == {"n_buckets": N_BUCKETS, "key_cols": ["id"]}
+    assert read_meta(tgt) == {"n_buckets": 32, "key_cols": ["id"]}
 
 
 def test_overwrite_buckets_raises_on_contract_mismatch(spark, tmp_path):
@@ -602,3 +604,199 @@ def test_merge_into_snappy_store_recompresses_only_touched_buckets(
     assert len(rows(read_target(spark, mixed))) == 40  # -1 delete, +1 insert
     keys = [(i,) for i in [*range(1, 41), 1000, 9999]]
     assert rows(lookup_keys(spark, mixed, keys)) == rows(lookup_keys(spark, control, keys))
+
+
+# ---------------------------------------------------------------------------
+# bucket count sized from the data; the pipeline adopts the store's count
+# ---------------------------------------------------------------------------
+
+MAX_SPLIT = "spark.sql.files.maxPartitionBytes"
+
+
+def _file_source(spark, tmp_path, ids, name="src"):
+    """A parquet-backed source frame of ``ids`` (four files) and the
+    bytes of the data files behind it."""
+    path = str(tmp_path / name)
+    spark.createDataFrame([Row(id=i, v=f"r{i}") for i in ids], SCHEMA).repartition(
+        4
+    ).write.parquet(path)
+    size = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if not f.startswith((".", "_"))
+    )
+    return spark.read.parquet(path), size
+
+
+def _dir_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+        if not f.startswith((".", "_"))
+    )
+
+
+class _Recorder(CdcPipeline):
+    """Records each batch summary with the store metas it ran against."""
+
+    def __init__(self, *a, **kw):
+        super().__init__(*a, **kw)
+        self.seen = []
+
+    def _batch_summary(self, batch):
+        out = super()._batch_summary(batch)
+        self.seen.append((out, {t.source_table: read_meta(t.target_path) for t in self.tables}))
+        return out
+
+
+def _touched(summary) -> set[int]:
+    return {b for r in summary if not r["bad"] for b in r["buckets"]}
+
+
+def test_file_backed_snapshot_gets_one_bucket_per_input_split(spark, tmp_path):
+    src, size = _file_source(spark, tmp_path, range(1, 201))
+    split = size // 3 + 1
+    tgt = str(tmp_path / "t_users")
+    spark.conf.set(MAX_SPLIT, str(split))
+    try:
+        assert snapshot_if_empty(spark, src, tgt, key_cols=["id"])
+    finally:
+        spark.conf.unset(MAX_SPLIT)
+    assert read_meta(tgt) == {"n_buckets": -(-size // split), "key_cols": ["id"]}
+    assert read_meta(tgt)["n_buckets"] == 3
+    assert {r.id for r in read_target(spark, tgt).collect()} == set(range(1, 201))
+    # clustered by bucket: one file each, not one per input split
+    for d in _bucket_dirs(tgt).values():
+        assert len([f for f in os.listdir(d) if f.endswith(".parquet")]) == 1, d
+
+    # a re-bucketize with no count is sized from the store's own files
+    store_bytes = _dir_bytes(tgt)
+    spark.conf.set(MAX_SPLIT, str(split))
+    try:
+        bucketize_in_place(spark, tgt, ["id"])
+    finally:
+        spark.conf.unset(MAX_SPLIT)
+    assert read_meta(tgt)["n_buckets"] == -(-store_bytes // split)
+    for d in _bucket_dirs(tgt).values():
+        assert len([f for f in os.listdir(d) if f.endswith(".parquet")]) == 1, d
+    assert {r.id for r in read_target(spark, tgt).collect()} == set(range(1, 201))
+
+    # at the default split size a small source is one split: one bucket
+    small = str(tmp_path / "t_small")
+    assert snapshot_if_empty(spark, src, small, key_cols=["id"])
+    assert read_meta(small)["n_buckets"] == 1
+    assert list(_bucket_dirs(small)) == [0]
+
+
+def test_in_memory_snapshot_keeps_unknown_layout_count(spark, tmp_path):
+    tgt = str(tmp_path / "t_users")
+    rows = [Row(id=i, v=f"r{i}") for i in range(1, 41)]
+    assert snapshot_if_empty(spark, spark.createDataFrame(rows, SCHEMA), tgt, key_cols=["id"])
+    assert UNKNOWN_LAYOUT_BUCKETS == 16
+    assert read_meta(tgt)["n_buckets"] == 16
+
+
+@pytest.mark.parametrize("n_buckets", [1, 32])
+def test_pipeline_merges_under_the_store_count(spark, tmp_path, n_buckets):
+    """The touched set is hashed under the store's own count, the merge
+    is correct, and at 32 buckets every untouched bucket stays
+    byte-identical."""
+    tgt = str(tmp_path / "t_users")
+    if n_buckets == 1:
+        src, _ = _file_source(spark, tmp_path, range(1, 41))
+        assert snapshot_if_empty(spark, src, tgt, key_cols=["id"])
+    else:
+        rows = [Row(id=i, v=f"r{i}") for i in range(1, 41)]
+        write_bucketed(spark.createDataFrame(rows, SCHEMA), tgt, ["id"], n_buckets)
+    assert read_meta(tgt)["n_buckets"] == n_buckets
+    before = {b: _dir_fingerprint(d) for b, d in _bucket_dirs(tgt).items()}
+
+    write_event_batch(
+        str(tmp_path / "ev"),
+        [_ev(1, "update", 1), _ev(2, "delete", 2), _ev(3, "insert", 1000)],
+        1,
+    )
+    p = _pipeline(spark, tmp_path, cls=_Recorder)
+    p.run_available()
+
+    want = {_bucket_of(spark, i, n_buckets) for i in (1, 2, 1000)}
+    [(summary, metas)] = p.seen
+    assert _touched(summary) == want
+    assert metas["users"]["n_buckets"] == n_buckets
+    assert read_meta(tgt) == {"n_buckets": n_buckets, "key_cols": ["id"]}
+    got = {r.id: r.v for r in read_target(spark, tgt).collect()}
+    assert got == {**{i: f"r{i}" for i in range(3, 41)}, 1: "v1", 1000: "v3"}
+    untouched = set(before) - want
+    assert bool(untouched) == (n_buckets == 32)
+    for b in untouched:
+        assert _dir_fingerprint(_bucket_dirs(tgt)[b]) == before[b], b
+
+
+def test_legacy_flat_target_migrates_before_summary(spark, tmp_path):
+    """A flat target is bucketed, sized from its own files, before the
+    summary hashes the batch: the touched set is derived under the
+    migrated count, so the merge raises no stray-bucket error and
+    leaves no stale duplicate."""
+    tgt = str(tmp_path / "t_users")
+    rows = [Row(id=i, v=f"r{i}") for i in range(1, 41)]
+    snapshot_if_empty(spark, spark.createDataFrame(rows, SCHEMA), tgt)
+    assert not is_bucketed(tgt)
+    split = _dir_bytes(tgt) // 2 + 1
+    write_event_batch(
+        str(tmp_path / "ev"),
+        [_ev(1, "update", 1), _ev(2, "delete", 2), _ev(3, "insert", 41)],
+        1,
+    )
+    p = _pipeline(spark, tmp_path, cls=_Recorder)
+    spark.conf.set(MAX_SPLIT, str(split))
+    try:
+        p.run_available()
+    finally:
+        spark.conf.unset(MAX_SPLIT)
+
+    [(summary, metas)] = p.seen
+    assert metas["users"] == {"n_buckets": 2, "key_cols": ["id"]}
+    assert _touched(summary) == {_bucket_of(spark, i, 2) for i in (1, 2, 41)}
+    assert read_meta(tgt) == {"n_buckets": 2, "key_cols": ["id"]}
+    ids = [r.id for r in read_target(spark, tgt).collect()]
+    assert len(ids) == len(set(ids)) == 40
+    assert set(ids) == set(range(1, 42)) - {2}
+
+
+def test_replay_after_crash_mid_swap_converges_on_one_bucket_store(
+    spark, tmp_path, monkeypatch
+):
+    """The merge dies between the bucket swap's two renames (live
+    bucket parked, staged one not landed); the replayed batch restores
+    the parked bucket, merges again and lands the same state, still
+    one bucket."""
+    from sync_spark.sources import bucketed
+
+    tgt = str(tmp_path / "t_users")
+    src, _ = _file_source(spark, tmp_path, range(1, 41))
+    assert snapshot_if_empty(spark, src, tgt, key_cols=["id"])
+    assert read_meta(tgt)["n_buckets"] == 1
+    write_event_batch(
+        str(tmp_path / "ev"),
+        [_ev(1, "update", 1), _ev(2, "delete", 2), _ev(3, "insert", 41)],
+        1,
+    )
+
+    def crash(src_dir, dst):
+        os.rename(dst, bucketed._old_name(dst))
+        raise RuntimeError("crash mid-swap")
+
+    with monkeypatch.context() as m:
+        m.setattr(bucketed, "_swap_dir", crash)
+        with pytest.raises(Exception, match="crash mid-swap"):
+            _pipeline(spark, tmp_path).run_available()
+    assert os.listdir(tgt).count(f"{OLD_PREFIX}{BUCKET_COL}=0") == 1
+    assert f"{BUCKET_COL}=0" not in os.listdir(tgt)
+
+    _pipeline(spark, tmp_path).run_available()
+    got = {r.id: r.v for r in read_target(spark, tgt).collect()}
+    assert got == {**{i: f"r{i}" for i in range(3, 41)}, 1: "v1", 41: "v3"}
+    assert read_meta(tgt) == {"n_buckets": 1, "key_cols": ["id"]}
+    assert list(_bucket_dirs(tgt)) == [0]
+    assert not [e for e in os.listdir(tgt) if e.startswith(OLD_PREFIX)]

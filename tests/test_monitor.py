@@ -140,3 +140,35 @@ def test_humanize_bytes(spark):
     got = [r.h for r in df.select(humanize_bytes("b").alias("h")).orderBy("b").collect()]
     # 1048000 B = 1023.4 KB: no thousands separator (reference %.1f)
     assert got == ["0 B", "512 B", "2.0 KB", "1023.4 KB", "5.0 MB", "3.0 GB"]
+
+
+def test_apply_stats_totals_runs_no_spark_job(spark, tmp_path):
+    """The rollup reads the driver-written counters with pyarrow: the
+    same columns and types as a Spark rollup, no job to build or
+    collect it, hidden entries ignored, and an absent stats root reads
+    as no rows."""
+    from sync_spark.operators.monitor import apply_stats_totals, write_apply_stats
+
+    stats = str(tmp_path / "stats")
+    write_apply_stats(f"{stats}/table=users/batch_id=1", [("insert", 2), ("update", 1)])
+    write_apply_stats(f"{stats}/table=users/batch_id=2", [("insert", 5)])
+    write_apply_stats(f"{stats}/table=orders/batch_id=2", [("delete", 3)])
+    write_apply_stats(f"{stats}/table=users/.stage_batch_id=3", [("insert", 100)])
+    sc = spark.sparkContext
+    group = "apply-stats-totals-jobs"
+    sc.setJobGroup(group, "apply_stats_totals", False)
+    try:
+        df = apply_stats_totals(spark, stats)
+        rows = [tuple(r) for r in df.collect()]
+    finally:
+        sc.setJobGroup("", "", False)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert df.schema.simpleString() == (
+        "struct<table:string,op:string,total:bigint,n_batches:bigint>"
+    )
+    assert rows == [
+        ("orders", "delete", 3, 1),
+        ("users", "insert", 7, 2),
+        ("users", "update", 1, 1),
+    ]
+    assert apply_stats_totals(spark, str(tmp_path / "none")).collect() == []

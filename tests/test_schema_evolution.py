@@ -157,7 +157,6 @@ def _mk_pipeline(spark, dirs, row_schema):
         event_log_dir=dirs["events"],
         checkpoint_dir=dirs["ckpt"],
         dlq_path=dirs["dlq"],
-        n_buckets=4,
     )
 
 
