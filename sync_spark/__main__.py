@@ -104,8 +104,7 @@ def cmd_run(args) -> int:
     current, cycles, reloads, pruned = _digest(), 0, 0, 0
     for _ in range(args.max_cycles):
         # a torn/invalid spec write mid-poll must not kill the watch
-        # loop: keep the running task, retry next cycle (same contract
-        # as reload.SpecWatcher.run)
+        # loop: keep the running task, retry next cycle
         try:
             d = _digest()
             if d is not None and d != current:

@@ -7,9 +7,9 @@ tail from the envelope event log with masking + MERGE apply. A
 monitor tick counts source/target rows per mapping into the metrics
 table. The reference runs these as goroutines + cron + a 10s config
 poll; here each is an explicit entry point a scheduler (Airflow, cron,
-Databricks jobs) calls — hot-reload (T10) becomes "stop the streaming
-query, rebuild from the new spec, start", exposed via
-``CdcPipeline.start``'s returned StreamingQuery handle.
+Databricks jobs) calls — hot-reload (T10) is the CLI's
+``run --watch`` loop: on a spec change it rebuilds the task from the
+new spec and drains from the same checkpoint.
 """
 
 from __future__ import annotations

@@ -539,37 +539,6 @@ def decode_media(df: DataFrame) -> DataFrame:
     return df.select("media_id", "kind", "payload").mapInPandas(batches, DECODED_SCHEMA)
 
 
-FEATURE_DIM = 16
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """Feature extraction stub: deterministic pseudo-embedding from a
-    payload digest (a real model would run here, batched exactly the
-    same way)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = []
-            for p in pdf["payload"]:
-                if p is None:
-                    feats.append(None)
-                    continue
-                dig = hashlib.sha256(p).digest()
-                feats.append(
-                    [int.from_bytes(dig[2 * i : 2 * i + 2], "little") / 65535.0 for i in range(FEATURE_DIM)]
-                )
-            yield pd.DataFrame({"media_id": pdf["media_id"], "features": feats})
-
-    return df.select("media_id", "payload").mapInPandas(batches, FEATURES_SCHEMA)
-
-
 def resize_meta(df: DataFrame, max_side: int) -> DataFrame:
     """Resize planning is pure column math (aspect-preserving target
     dims); only the pixel rewrite would enter the stub codec. Keeping

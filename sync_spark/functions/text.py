@@ -11,9 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# tiny per-language stopword sets for the n-gram/stopword-vote
-# language heuristic (reference has no langid; this is the extension
-# surface the judge grades)
+# tiny per-language stopword sets for the stopword-vote language
+# heuristic (the reference has no language ID; this is an extension)
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "to", "is"],
     "de": ["der", "die", "das", "und", "ist", "ein"],
@@ -51,16 +50,13 @@ def _shingle_expr(toks: Column, n: int) -> Column:
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
 
 
-def stopword_hits(text: Column, lang: str) -> Column:
+def stopword_hits_toks(toks: Column, lang: str) -> Column:
     """Count of tokens in the language's stopword set (bag count, not
     distinct). Case-insensitive — 'The' at sentence start is still a
-    stopword."""
-    return stopword_hits_toks(tokens(text), lang)
+    stopword.
 
-
-def stopword_hits_toks(toks: Column, lang: str) -> Column:
-    """stopword_hits over an already-materialized token array — the
-    expression-sharing form (r6): langid embeds one stopword filter
+    Takes an already-materialized token array — the
+    expression-sharing form (r6): langid_toks embeds one stopword filter
     per language, and inlining the tokenizer into each multiplies the
     expression tree ~20× — a measured ~0.4s of ANALYSIS per query
     construction, before a row is touched. Callers stage tokens()
@@ -90,18 +86,14 @@ def avg_token_len(text: Column) -> Column:
     )
 
 
-def langid(text: Column) -> Column:
-    """Stopword-vote language ID: argmax over per-language hit counts;
-    ties go to the alphabetically-first language; 'und' when no hits.
+def langid_toks(toks: Column) -> Column:
+    """Stopword-vote language ID over a staged token array (see
+    stopword_hits_toks): argmax over per-language hit counts; ties go
+    to the alphabetically-first language; 'und' when no hits.
 
     Implemented as a right-to-left fold over the sorted language list
     so the tie rule is by construction (a later-seen = alphabetically
     earlier language replaces on >=)."""
-    return langid_toks(tokens(text))
-
-
-def langid_toks(toks: Column) -> Column:
-    """langid over a staged token array (see stopword_hits_toks)."""
     best_lang, best_score = F.lit("und"), F.lit(0)
     for lang in sorted(STOPWORDS, reverse=True):
         score = stopword_hits_toks(toks, lang)

@@ -58,17 +58,6 @@ def frac_window(before: dict, after: dict) -> dict:
     }
 
 
-def steal_during(fn):
-    """Run ``fn()``; return (result, elapsed_s, steal_frac)."""
-    import time
-
-    c0 = cpu_times()
-    t0 = time.perf_counter()
-    res = fn()
-    dt = time.perf_counter() - t0
-    return res, dt, frac_window(c0, cpu_times())["steal"]
-
-
 def calm_median(runs: list[tuple[float, float]]) -> tuple[float, dict]:
     """Median over the calm draws of one query's (sec, steal) runs.
 

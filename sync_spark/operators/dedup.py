@@ -25,9 +25,9 @@ Each operator has ONE implementation, the form its registry row runs.
 The pair and decontamination kernels are one ``spark.sql`` statement
 over a temp view (the persisted shingle table, or the caller's
 frames): a Column chain of the same plan costs tenths of a second of
-py4j/analysis per call at bench scale. Per-row kernels that also
-serve streaming frames (``winnow_fps_columns``) and the token-level
-operators stay Column expressions. No Python UDFs anywhere.
+py4j/analysis per call at bench scale. Per-row kernels
+(``winnow_fps_columns``) and the token-level operators stay Column
+expressions. No Python UDFs anywhere.
 """
 
 from __future__ import annotations
@@ -680,8 +680,7 @@ def winnow_fps_columns(
     recomputes the full md5 gram array once per window position —
     quadratic per document, measured as a hang at sf0.1. Bound
     attribute references keep it linear, and every op is
-    a narrow projection, so the SAME builder serves batch frames and
-    STREAMING frames (the curation pipeline's decontamination probe).
+    a narrow projection.
 
     Rows with zero grams (docs shorter than k tokens) keep an EMPTY
     ``out`` array — no row loss, callers filter or explode as they

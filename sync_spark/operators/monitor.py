@@ -25,9 +25,6 @@ from pyspark.sql import functions as F
 
 from sync_spark import tz
 
-LOG_COLUMNS = ["task_id", "table", "src_count", "tgt_count", "logged_at"]
-
-
 def monitor_tick(
     spark: SparkSession,
     task_id: int,

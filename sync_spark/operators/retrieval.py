@@ -1246,28 +1246,6 @@ def _index_ranked(
     )
 
 
-_TFIDF_INDEX_CONTRIB = "(tf * 1000000 * n) DIV (df * dl)"
-
-
-def tfidf_index_topk(
-    spark: SparkSession,
-    path: str,
-    queries: list[tuple[int, list[str]]] | None = None,
-    k: int = BM25_K,
-) -> DataFrame:
-    """TF-IDF top-k against the PERSISTED posting index — the second
-    ranker of t_rrf_fuse served index-side ((tf · 10⁶ · N) DIV
-    (df · dl), _tfidf_contrib's integer weight). Identical
-    bucket-pruned cost shape as bm25_index_topk: ≤ |terms| posting
-    buckets, never the corpus."""
-    if queries is None:
-        queries = BM25_QUERIES
-    postings = _pruned_postings(spark, path, queries)
-    return _index_ranked(
-        spark, path, postings, queries, _TFIDF_INDEX_CONTRIB, "score_e6", k
-    )
-
-
 def rrf_index_topk(
     spark: SparkSession,
     path: str,
@@ -1345,7 +1323,7 @@ WITH qmap AS (
 ), scored AS (
   SELECT query_id, doc_id,
          SUM({_BM25_INDEX_CONTRIB}) AS b_score,
-         SUM({_TFIDF_INDEX_CONTRIB}) AS t_score
+         SUM((tf * 1000000 * n) DIV (df * dl)) AS t_score
   FROM withdf
   GROUP BY query_id, doc_id
 ), ranked AS (

@@ -14,9 +14,6 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def get_spark(app_name: str = "sync_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
 

@@ -57,9 +57,6 @@ ENVELOPE_SCHEMA = T.StructType(
     ]
 )
 
-OPS = ("insert", "update", "replace", "delete")
-
-
 def write_event_batch(path: str, events: Iterable[dict[str, Any]], batch_id: int) -> str:
     """Append one JSONL event file to the log directory (test/demo
     producer; a real deployment points the stream at Kafka or a
@@ -100,11 +97,6 @@ def write_event_batch(path: str, events: Iterable[dict[str, Any]], batch_id: int
         ns = (prev_ms + 1) * 1_000_000
         os.utime(fname, ns=(ns, ns))
     return fname
-
-
-def read_event_log(spark: SparkSession, path: str) -> DataFrame:
-    """Batch view of the event log."""
-    return spark.read.schema(ENVELOPE_SCHEMA).json(path)
 
 
 def read_event_stream(

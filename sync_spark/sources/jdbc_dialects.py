@@ -154,12 +154,6 @@ def quote_ident(url: str, name: str) -> str:
     return q + name.replace(q, q * 2) + q
 
 
-def table_ref(url: str, table: str, schema: Optional[str] = None) -> str:
-    """Quoted table reference, optionally schema-qualified."""
-    t = quote_ident(url, table)
-    return f"{quote_ident(url, schema)}.{t}" if schema else t
-
-
 def decimal_custom_schema(cols: Sequence[tuple[str, int, int]]) -> str:
     """``customSchema`` option value pinning DECIMAL(p,s) columns.
 

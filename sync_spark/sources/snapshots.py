@@ -33,7 +33,6 @@ import os
 import shutil
 import uuid
 import warnings
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -175,11 +174,6 @@ def expire_snapshots(path: str, keep_last: int) -> list[int]:
     vacuum_export(snap, keep_versions=keep_last)
     after = set(table_versions(snap))
     return [v for v in before if v not in after]
-
-
-def latest_version(path: str) -> Optional[int]:
-    vs = table_versions(os.path.join(path, SNAP_DIR))
-    return vs[-1] if vs else None
 
 
 def snapshot_diff(

@@ -74,50 +74,3 @@ def dedup_events_within_watermark(
     """
     keys = key_cols if key_cols is not None else ["source_table", "key_json", "seq"]
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def trending_term_counts(
-    stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "10 minutes",
-    min_len: int = 3,
-) -> DataFrame:
-    """Sliding-window term counts over a text stream — the state side
-    of a trending-terms dashboard. Hopping ``window``/``slide`` over
-    event time, tokens exploded map-side, watermark bounds the state
-    (a term's count is final once the watermark passes its window).
-
-    Ranking is NOT done here: rank/row_number over a streaming
-    aggregate is illegal in Spark (and meaningless pre-finalization),
-    so the windowed counts stream out and ``top_terms_per_window``
-    ranks each FINALIZED micro-batch in foreachBatch / on the sink
-    table — the standard split for windowed top-k at scale (state is
-    O(windows × vocab), ranking is a bounded batch op)."""
-    from sync_spark.functions.text import tokens
-
-    toks = stream.select(
-        F.col(ts_col), F.explode(tokens(F.col(text_col))).alias("term")
-    ).filter(F.length("term") >= min_len)
-    return (
-        toks.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("w"), "term")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "term", "n")
-    )
-
-
-def top_terms_per_window(counts: DataFrame, k: int = 3) -> DataFrame:
-    """Rank a batch of finalized windowed term counts → top-k per
-    window (count desc, term asc tiebreak). Bounded per-window
-    partitions; pair with ``trending_term_counts`` in foreachBatch."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("window_start").orderBy(F.col("n").desc(), F.col("term").asc())
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("window_start", F.col("rk").cast("long").alias("rk"), "term", "n")
-    )

@@ -22,10 +22,6 @@ def jst_to_utc(dt: datetime) -> datetime:
     return dt - JST_OFFSET
 
 
-def utc_to_jst(dt: datetime) -> datetime:
-    return dt + JST_OFFSET
-
-
 def jst_day_range(day: date) -> tuple[datetime, datetime]:
     """Half-open UTC range covering one JST calendar day.
 

@@ -29,7 +29,7 @@ from sync_spark.sources.bucketed import (
     recover_interrupted_swaps,
     write_bucketed,
 )
-from sync_spark.sources.cdc import read_event_log, write_event_batch
+from sync_spark.sources.cdc import ENVELOPE_SCHEMA, write_event_batch
 from sync_spark.spec import SyncSpec
 from sync_spark.streaming.pipeline import CdcPipeline, TableTarget, snapshot_if_empty
 
@@ -182,7 +182,7 @@ def test_one_probe_job_per_batch_not_per_table(spark, tmp_path):
         str(tmp_path / "ev"), [_ev(1, "update", 1, table="tab3")], 1
     )
     p = _pipeline(spark, tmp_path, tables=tables)
-    batch = read_event_log(spark, str(tmp_path / "ev"))
+    batch = spark.read.schema(ENVELOPE_SCHEMA).json(str(tmp_path / "ev"))
 
     sc = spark.sparkContext
     group = "probe-count-test"

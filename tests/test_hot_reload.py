@@ -1,17 +1,18 @@
-"""T10 config hot-reload: spec file change stops the old pipeline and
-starts a new one with the new behavior; unchanged polls are no-ops."""
+"""T10 config hot-reload through the CLI's ``run --watch`` loop: a spec
+file change rebuilds the task with the new behavior from the same
+checkpoint; an unchanged cycle is a no-op."""
 
 from __future__ import annotations
 
 import json
+import types
 
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
+import sync_spark.__main__ as cli
+from sync_spark.sources.bucketed import read_target
 from sync_spark.sources.cdc import write_event_batch
-from sync_spark.spec import SyncSpec
-from sync_spark.streaming.pipeline import CdcPipeline, TableTarget, snapshot_if_empty
-from sync_spark.streaming.reload import SpecWatcher
 
 SCHEMA = T.StructType([T.StructField("id", T.LongType()), T.StructField("v", T.StringType())])
 
@@ -39,41 +40,42 @@ def _event(seq, v):
     }
 
 
-def test_hot_reload_switches_behavior(spark, tmp_path):
-    tgt = str(tmp_path / "t")
-    snapshot_if_empty(spark, spark.createDataFrame([Row(id=0, v="base")], SCHEMA), tgt)
+def test_hot_reload_switches_behavior(spark, tmp_path, monkeypatch, capsys):
+    src, tgt_root, ev = tmp_path / "src", tmp_path / "tgt", str(tmp_path / "ev")
+    spark.createDataFrame([Row(id=0, v="base")], SCHEMA).write.parquet(
+        str(src / "users.parquet")
+    )
+    tgt = str(tgt_root / "users")
     spec_file = tmp_path / "spec.json"
     spec_file.write_text(SPEC_PLAIN)
+    write_event_batch(ev, [_event(1, "plain")], 1)
 
-    class DrainQuery:
-        """availableNow 'query' handle: drains the log on start."""
+    def read():
+        return {r.id: r.v for r in read_target(spark, tgt).collect()}
 
-        def __init__(self, spec):
-            self.pipe = CdcPipeline(
-                spark, spec,
-                [TableTarget("users", tgt, SCHEMA, ["id"],
-                             ignore_deletes=spec.mappings[0].tables[0].ignore_delete_ops)],
-                event_log_dir=str(tmp_path / "ev"),
-                checkpoint_dir=str(tmp_path / "ck"),
-            )
-            self.pipe.run_available()
+    sleeps = []
 
-        def stop(self):
-            pass
+    def between_cycles(seconds):
+        # the first cycle ran the task it started with: event 1 is plain
+        assert read()[1] == "plain"
+        # flip the spec to masked; the next cycle rebuilds with new rules
+        spec_file.write_text(SPEC_MASKED)
+        write_event_batch(ev, [_event(2, "secret")], 2)
+        sleeps.append(seconds)
 
-    watcher = SpecWatcher(str(spec_file), DrainQuery)
-
-    write_event_batch(str(tmp_path / "ev"), [_event(1, "plain")], 1)
-    assert watcher.poll_once() is True  # initial start
-    assert watcher.poll_once() is False  # unchanged → no-op
-    got = {r.id: r.v for r in spark.read.parquet(tgt).collect()}
-    assert got[1] == "plain"
-
-    # flip the spec to masked; next poll restarts with new rules
-    spec_file.write_text(SPEC_MASKED)
-    write_event_batch(str(tmp_path / "ev"), [_event(2, "secret")], 2)
-    assert watcher.poll_once() is True
-    assert watcher.reload_count == 1
-    got = {r.id: r.v for r in spark.read.parquet(tgt).collect()}
+    # only the CLI's own clock: py4j's threads sleep on the real one
+    monkeypatch.setattr(cli, "time", types.SimpleNamespace(sleep=between_cycles))
+    assert cli.main([
+        "run", "--spec", str(spec_file), "--source-dir", str(src),
+        "--target-root", str(tgt_root), "--event-log", ev,
+        "--checkpoint", str(tmp_path / "ck"),
+        "--watch", "--max-cycles", "2", "--poll-seconds", "0",
+    ]) == 0
+    assert sleeps == [0.0]
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    # one reload in two cycles: the unchanged first cycle reloaded nothing
+    assert out["cycles"] == 2 and out["reloads"] == 1
+    got = read()
+    assert got[0] == "base"
     assert got[1] == "plain"  # pre-reload rows untouched
     assert got[2] == "******"  # new rules applied after reload

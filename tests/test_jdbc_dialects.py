@@ -23,7 +23,6 @@ from sync_spark.sources.jdbc_dialects import (
     decimal_custom_schema,
     dialect_for,
     quote_ident,
-    table_ref,
 )
 
 
@@ -59,7 +58,8 @@ def test_quoting_and_table_ref():
     assert quote_ident("jdbc:mysql://h/db", "order") == "`order`"
     assert quote_ident("jdbc:mysql://h/db", "we`ird") == "`we``ird`"
     assert quote_ident("jdbc:postgresql://h/db", "order") == '"order"'
-    assert table_ref("jdbc:postgresql://h/db", "t", schema="s") == '"s"."t"'
+    url = "jdbc:postgresql://h/db"
+    assert f"{quote_ident(url, 's')}.{quote_ident(url, 't')}" == '"s"."t"'
 
 
 def test_decimal_custom_schema():

@@ -24,7 +24,6 @@ from sync_spark.sources.cdc import (
     ENVELOPE_SCHEMA,
     KAFKA_RAW_SCHEMA,
     kafka_envelope,
-    read_event_log,
     read_event_stream,
     write_event_batch,
 )
@@ -101,7 +100,7 @@ def test_kafka_envelope_schema_contract(spark):
 def test_kafka_and_file_transports_agree(spark, tmp_path):
     log = str(tmp_path / "ev")
     write_event_batch(log, _EVENTS, 0)
-    file_env = read_event_log(spark, log)
+    file_env = spark.read.schema(ENVELOPE_SCHEMA).json(log)
     kafka_env = kafka_envelope(_kafka_raw(spark, _EVENTS))
     cols = [f.name for f in ENVELOPE_SCHEMA.fields]
     as_set = lambda df: {tuple(str(r[c]) for c in cols) for r in df.collect()}

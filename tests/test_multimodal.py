@@ -12,10 +12,8 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from sync_spark.functions.multimodal import (
-    FEATURE_DIM,
     _decode_payload,
     decode_media,
-    extract_features,
     fake_payload,
     resize_meta,
     sample_frames,
@@ -63,15 +61,6 @@ def test_real_codec_is_stubbed():
     assert _decode_payload(h264_payload(1, width=30, height=18)) == (30, 18, None)
     with pytest.raises(NotImplementedError, match="codec"):
         _decode_payload(b"\x1a\x45\xdf\xa3" + b"\x00" * 32)  # Matroska/EBML
-
-
-def test_features_deterministic_and_shaped(spark):
-    media = synthetic_media_table(spark, 6)
-    f1 = {r.media_id: list(r.features) for r in extract_features(media).collect()}
-    f2 = {r.media_id: list(r.features) for r in extract_features(media).collect()}
-    assert f1 == f2
-    assert all(len(v) == FEATURE_DIM for v in f1.values())
-    assert all(0.0 <= x <= 1.0 for v in f1.values() for x in v)
 
 
 def test_resize_planning_jvm_side(spark):

@@ -199,7 +199,7 @@ def test_text_functions_handle_messy_input(spark):
     )
     rows = df.select(
         TX.token_count(F.col("t")).alias("n"),
-        TX.stopword_hits(F.col("t"), "en").alias("sw"),
+        TX.stopword_hits_toks(TX.tokens(F.col("t")), "en").alias("sw"),
         TX.punct_ratio(F.col("t")).alias("p"),
     ).collect()
     assert rows[0].n == 5          # \s+ split: no empty tokens
@@ -253,7 +253,6 @@ def test_multimodal_null_payload_rows_survive(spark):
     from sync_spark.functions.multimodal import (
         MEDIA_SCHEMA,
         decode_media,
-        extract_features,
         fake_payload,
     )
 
@@ -265,8 +264,6 @@ def test_multimodal_null_payload_rows_survive(spark):
     dec = {r.media_id: r for r in decode_media(df).collect()}
     assert dec[1].width == 64
     assert dec[2].width is None and dec[2].size_bytes is None
-    feats = {r.media_id: r.features for r in extract_features(df).collect()}
-    assert feats[1] is not None and feats[2] is None
 
 
 def test_adversarial_session_confs_self_correct(spark, sf_small):

@@ -26,7 +26,6 @@ from sync_spark.sources.bucketed import (
 )
 from sync_spark.sources.snapshots import (
     expire_snapshots,
-    latest_version,
     read_snapshot,
     snapshot_create,
     snapshot_rollback,
@@ -73,7 +72,7 @@ def test_snapshot_read_survives_later_merges(spark, tmp_path):
     base = [(i, f"v{i}") for i in range(20)]
     write_bucketed(_rows(spark, base), tgt, ["id"], N_BUCKETS)
     v1 = snapshot_create(spark, tgt, note="initial")
-    assert v1 == 0 and latest_version(tgt) == 0
+    assert v1 == 0 and snapshot_versions(tgt)[-1]["version"] == 0
     # an unchanged store commits nothing: the latest version comes back
     assert snapshot_create(spark, tgt) == 0
 
@@ -167,7 +166,7 @@ def test_expire_keeps_recent_versions(spark, tmp_path):
     # the log always keeps its latest version
     with pytest.raises(ValueError, match="keep_versions must be >= 1"):
         expire_snapshots(tgt, keep_last=0)
-    assert latest_version(tgt) == 3
+    assert snapshot_versions(tgt)[-1]["version"] == 3
 
 
 def test_unknown_version_errors(spark, tmp_path):
@@ -304,7 +303,7 @@ def test_rollback_restores_bucket_layout(spark, tmp_path):
 
     bucketize_in_place(spark, tgt, ["id"], 4)
     assert read_meta(tgt)["n_buckets"] == 4
-    assert latest_version(tgt) == v  # the rewrite kept the log
+    assert snapshot_versions(tgt)[-1]["version"] == v  # the rewrite kept the log
 
     snapshot_rollback(spark, tgt, v)
     assert read_meta(tgt) == {"n_buckets": N_BUCKETS, "key_cols": ["id"]}

@@ -246,62 +246,3 @@ def test_dedup_within_watermark_protects_window_counts(spark, tmp_path):
     ).collect()
     # without dedup this would read [("00:00", 3), ("00:05", 1)]
     assert [(r.s, r.n) for r in rows] == [("00:00", 2), ("00:05", 1)]
-
-
-def test_trending_terms_sliding_topk(spark, tmp_path):
-    """Sliding-window term counts (streaming) + finalized-batch top-k:
-    hopping windows double-count a term into both overlapping windows;
-    ranking runs on the complete-mode output like a foreachBatch
-    would on finalized rows."""
-    import json as _json
-
-    from sync_spark.streaming.windows import top_terms_per_window, trending_term_counts
-
-    log = str(tmp_path / "docs_ev")
-
-    def doc_ev(seq, ts, text):
-        return {
-            "op": "insert", "seq": seq, "ts": ts, "source_table": "documents",
-            "key_json": _json.dumps({"doc_id": seq}),
-            "after_json": _json.dumps({"doc_id": seq, "text": text}),
-        }
-
-    write_event_batch(
-        log,
-        [
-            doc_ev(1, "2024-01-01T00:01:00Z", "alpha beta alpha"),
-            doc_ev(2, "2024-01-01T00:06:00Z", "alpha gamma xy"),  # xy < min_len drops
-            doc_ev(3, "2024-01-01T00:12:00Z", "beta beta gamma"),
-        ],
-        1,
-    )
-    stream = read_event_stream(spark, log).select(
-        "ts", F.get_json_object("after_json", "$.text").alias("text")
-    )
-    counts = trending_term_counts(
-        stream, window="10 minutes", slide="5 minutes", watermark="10 minutes"
-    )
-    q = (
-        counts.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("trend")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.s, r.term): r.n
-        for r in spark.sql(
-            "SELECT date_format(window_start, 'HH:mm') AS s, term, n FROM trend"
-        ).collect()
-    }
-    # event 1 (00:01) lands in windows starting 23:55 and 00:00;
-    # event 2 (00:06) in 00:00 and 00:05; event 3 (00:12) in 00:05 and 00:10
-    assert got[("00:00", "alpha")] == 3  # 2 from ev1 + 1 from ev2
-    assert got[("00:05", "beta")] == 2 and got[("00:05", "gamma")] == 2
-    assert ("00:00", "xy") not in got  # min_len filter
-
-    top = top_terms_per_window(spark.table("trend"), k=1).collect()
-    best = {r.window_start.strftime("%H:%M"): (r.term, r.n) for r in top}
-    assert best["00:00"] == ("alpha", 3)
-    assert best["00:05"] == ("beta", 2)  # tie with gamma -> term asc
