@@ -249,7 +249,7 @@ def cmd_compact_stats(args) -> int:
     from sync_spark.operators.monitor import apply_stats_totals, compact_apply_stats
 
     spark = _spark("sync_cli_compact_stats")
-    folded = compact_apply_stats(spark, args.stats, args.below)
+    folded = compact_apply_stats(args.stats, args.below)
     totals = [
         r.asDict() for r in apply_stats_totals(spark, args.stats).collect()
     ]
@@ -371,7 +371,7 @@ def cmd_maintain(args) -> int:
                     below = max(below, bid + 1)
         out["stats_cutoff"] = below
         out["stats_folded"] = (
-            compact_apply_stats(spark, args.stats, below) if below else {}
+            compact_apply_stats(args.stats, below) if below else {}
         )
     expired, stray = {}, {}
     for t in task._targets():
@@ -404,8 +404,7 @@ def cmd_export_delta(args) -> int:
 
     spark = _spark("sync_cli_export_delta")
     v = D.export_delta(spark, args.target, args.out, operation=args.operation)
-    # checkpoint-aware: after --checkpoint --clean-log the JSON log is
-    # empty and a JSON-only replay would report latest -1 / 0 files
+    # checkpoint-aware: after a vacuum the log starts at a checkpoint
     state = D.replay_with_checkpoint(args.out)
     if v is None:
         out = {"exported": None, "reason": "no_changes", "latest": state["version"]}
@@ -414,7 +413,7 @@ def cmd_export_delta(args) -> int:
     if args.vacuum_keep is not None:
         out["vacuum"] = D.vacuum_export(args.out, keep_versions=args.vacuum_keep)
     if args.checkpoint:
-        out["checkpoint"] = D.write_checkpoint(args.out, clean_log=args.clean_log)
+        out["checkpoint"] = D.write_checkpoint(args.out)
     print(json.dumps(out))
     return 0
 
@@ -534,19 +533,14 @@ def main(argv=None) -> int:
         default=None,
         metavar="N",
         help="after exporting, vacuum the export to the last N versions "
-        "(deletes unreferenced data files, collapses the log base)",
+        "(checkpoints the oldest kept version, drops the log below it "
+        "and the data files no kept version references)",
     )
     p.add_argument(
         "--checkpoint",
         action="store_true",
         help="after exporting, write the protocol checkpoint parquet "
         "(N.checkpoint.parquet + _last_checkpoint)",
-    )
-    p.add_argument(
-        "--clean-log",
-        action="store_true",
-        help="with --checkpoint: delete JSON commits covered by the "
-        "checkpoint (readers start from the checkpoint)",
     )
     p.set_defaults(fn=cmd_export_delta)
 

@@ -32,38 +32,11 @@ import struct
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("format", T.StringType()),
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.IntegerType()),
-                    T.StructField("size_bytes", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 _FAKE_MAGIC = b"SSFK"  # sync_spark fake-media header
-
-
-def fake_payload(media_id: int, kind: str, width: int, height: int, duration_ms: int) -> bytes:
-    """Deterministic fake media bytes: magic + dims header + seeded
-    body. Lets tests exercise the full pipeline without codecs."""
-    body = hashlib.sha256(f"{kind}:{media_id}".encode()).digest() * 4
-    return _FAKE_MAGIC + struct.pack("<iii", width, height, duration_ms) + body
 
 
 def wav_payload(
@@ -617,26 +590,6 @@ def sample_frames(df: DataFrame, every_ms: int) -> DataFrame:
     return df.filter(F.col("kind") == "video").select("media_id", "payload").mapInPandas(
         batches, FRAMES_SCHEMA
     )
-
-
-def synthetic_media_table(spark: SparkSession, n: int = 64) -> DataFrame:
-    """Deterministic fake corpus for tests/demos."""
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        kind = kinds[i % 3]
-        w, h = (64 + i % 7 * 32, 48 + i % 5 * 32) if kind == "image" else (0, 0)
-        dur = 0 if kind == "image" else 1000 + (i % 10) * 500
-        payload = fake_payload(i, kind, w, h, dur)
-        rows.append(
-            (
-                i,
-                kind,
-                payload,
-                {"format": "fake", "width": w, "height": h, "duration_ms": dur, "size_bytes": len(payload)},
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType(

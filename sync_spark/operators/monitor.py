@@ -188,6 +188,35 @@ def write_apply_stats(batch_dir: str, rows: Sequence[tuple]) -> None:
     _swap_dir(stage, batch_dir)
 
 
+def _fold_stats_dirs(dirs: list[str]) -> dict:
+    """THE reader of the apply-stats format: fold ``batch_id=`` dirs
+    to ``{op: (total, n_batches)}``. total sums ``n`` (None if every
+    ``n`` is null); n_batches adds up the batches each dir stands for —
+    the ``src_batches`` its compacted rows carry, plus 1 for a dir with
+    rows of the op without them (a live dir, however many part files
+    it has). Read with pyarrow on the driver, listing as Spark does:
+    dot- and underscore-prefixed files are skipped."""
+    import pyarrow.parquet as pq
+
+    acc: dict = {}  # op -> [total, n_batches]
+    for bdir in dirs:
+        live = set()
+        for name in sorted(os.listdir(bdir)):
+            if name.startswith((".", "_")):
+                continue
+            for r in pq.read_table(os.path.join(bdir, name)).to_pylist():
+                g = acc.setdefault(r.get("op"), [None, 0])
+                if r.get("n") is not None:
+                    g[0] = (g[0] or 0) + r["n"]
+                if r.get("src_batches") is None:
+                    live.add(r.get("op"))
+                else:
+                    g[1] += r["src_batches"]
+        for op in live:
+            acc[op][1] += 1
+    return {op: tuple(g) for op, g in acc.items()}
+
+
 def apply_stats_totals(spark: SparkSession, stats_path: str) -> DataFrame:
     """A6 rollup over the pipeline's per-batch apply counters
     (CdcPipeline stats_path): totals per table per op across all
@@ -212,8 +241,6 @@ def apply_stats_totals(spark: SparkSession, stats_path: str) -> DataFrame:
     table, op."""
     from urllib.parse import unquote
 
-    import pyarrow.parquet as pq
-
     from sync_spark.operators.localrel import arrow_local_frame
 
     def partitions(path: str, key: str) -> list[tuple[str, str]]:
@@ -229,12 +256,12 @@ def apply_stats_totals(spark: SparkSession, stats_path: str) -> DataFrame:
     def number(text: str) -> int | None:
         return int(text) if text.isdigit() else None
 
-    # (table, op) -> [total, live batch ids, compacted src_batches]
-    groups: dict = {}
+    out = []
     for table, tdir in partitions(stats_path, "table"):
         batches = partitions(tdir, "batch_id")
         cuts = [number(b[1:11]) for b, _ in batches if b.startswith("c")]
         cut = max((c for c in cuts if c is not None), default=None)
+        kept = []
         for bid, bdir in batches:
             # only the NEWEST compacted dir per table counts (a crash
             # between "new compacted dir in" and "old one deleted"
@@ -245,34 +272,16 @@ def apply_stats_totals(spark: SparkSession, stats_path: str) -> DataFrame:
                 keep = cut is not None and number(bid[1:11]) == cut
             else:
                 keep = cut is None or (number(bid) is not None and number(bid) >= cut)
-            if not keep:
-                continue
-            for name in sorted(os.listdir(bdir)):
-                if name.startswith((".", "_")):
-                    continue
-                for r in pq.read_table(os.path.join(bdir, name)).to_pylist():
-                    g = groups.setdefault((table, r.get("op")), [None, set(), 0])
-                    if r.get("n") is not None:
-                        g[0] = (g[0] or 0) + r["n"]
-                    if not compacted:
-                        g[1].add(bid)
-                    elif r.get("src_batches") is not None:
-                        g[2] += r["src_batches"]
-    out = [
-        (table, op, total, len(live) + comp)
-        for (table, op), (total, live, comp) in sorted(
-            groups.items(),
-            key=lambda kv: tuple((v is not None, v or "") for v in kv[0]),
-        )
-    ]
+            if keep:
+                kept.append(bdir)
+        out += [(table, op, *c) for op, c in _fold_stats_dirs(kept).items()]
+    out.sort(key=lambda row: (row[0], row[1] is not None, row[1] or ""))
     return arrow_local_frame(
         spark, out, "table string, op string, total long, n_batches long"
     )
 
 
-def compact_apply_stats(
-    spark: SparkSession, stats_path: str, below_batch_id: int
-) -> dict:
+def compact_apply_stats(stats_path: str, below_batch_id: int) -> dict:
     """Retention for the per-batch apply counters WITHOUT losing
     history: per table, fold every live batch dir with id <
     ``below_batch_id`` plus the NEWEST existing compacted dir into ONE
@@ -287,8 +296,9 @@ def compact_apply_stats(
     renamed in BEFORE the folded dirs are deleted; between those steps
     the reader's newest-compacted-wins filter already ignores the
     superseded dirs, and re-running compaction (same or higher
-    cut-off) finishes the deletion. Returns
-    {table: folded_dir_count}."""
+    cut-off) finishes the deletion. The folded dirs are read with
+    ``_fold_stats_dirs``, the reader ``apply_stats_totals`` uses, so
+    compaction runs no Spark job. Returns {table: folded_dir_count}."""
     import shutil
 
     from sync_spark.sources.bucketed import recover_interrupted_swaps
@@ -341,38 +351,14 @@ def compact_apply_stats(
             # window between delete and rename)
             out[tdir[len("table="):]] = 0
             continue
-        src = (
-            # explicit schema: pre-compaction files lack src_batches
-            # and read NULL by name (no mergeSchema footer storm)
-            spark.read.schema("op string, n long, src_batches long")
-            .parquet(*[os.path.join(troot, e) for e in folded])
-            # the batch DIR, not the file: a dir may hold several part
-            # files and must still count as one contributing batch
-            .withColumn(
-                "__b",
-                F.regexp_extract(F.input_file_name(), r"(batch_id=[^/]+)", 1),
-            )
-        )
-        rows = (
-            src.groupBy("op")
-            .agg(
-                F.sum("n").alias("n"),
-                (
-                    F.countDistinct(
-                        F.when(F.col("src_batches").isNull(), F.col("__b"))
-                    )
-                    + F.coalesce(F.sum("src_batches"), F.lit(0))
-                ).cast("long").alias("src_batches"),
-            )
-            .collect()
-        )
+        counts = _fold_stats_dirs([os.path.join(troot, e) for e in folded])
         final = os.path.join(troot, f"batch_id=c{below_batch_id:010d}")
         # staged, then park-then-replace (never delete-then-rename): an
         # existing target can only arise from unusual manual states
         # given the self-fold skip above, but if it does, a crash
         # mid-replace must not lose the folded history
         write_apply_stats(
-            final, [(r["op"], r["n"], r["src_batches"]) for r in rows]
+            final, [(op, *c) for op, c in counts.items()]
         )
         for entry in folded:
             # a re-run with the SAME cutoff folds the existing c<N>

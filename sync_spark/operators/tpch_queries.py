@@ -1136,21 +1136,6 @@ def _pair_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def synth_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Spark twin of PARTSUPP_CTE — the reference implementation
-    the cross-engine parity test pins (Q2/Q20 inline the same
-    PS_*_EXPR strings into their fused plans). One distinct (=
-    partial-agg shuffle on the pair key — uniform, high-cardinality);
-    the derived columns are key arithmetic, no extra pass."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.select("l_partkey", "l_suppkey").distinct().select(
-        F.col("l_partkey").alias("ps_partkey"),
-        F.col("l_suppkey").alias("ps_suppkey"),
-        F.expr(PS_AVAILQTY_EXPR).cast("long").alias("ps_availqty"),
-        F.expr(PS_COST_EXPR).cast("long").alias("ps_supplycost_c"),
-    )
-
-
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 analog: for small LARGE-type parts, the EUROPE supplier(s)
     offering the minimum supply cost — the classic correlated scalar

@@ -39,9 +39,11 @@ Scale: an export is O(#changed files) link syscalls + one JSON
 append — the add/remove diff touches file NAMES only, no data scan.
 At 100 TB with 4096 buckets and a few files per bucket the log stays
 KB-sized per version; ``write_checkpoint`` compacts it into a Delta
-checkpoint parquet when the version count grows (readers replay from
-the last checkpoint; without one they replay all JSON versions —
-correct, just slower).
+checkpoint parquet when the version count grows. Readers seed from the
+newest checkpoint at or below the version they read and replay only
+the JSON commits after it, and ``vacuum_export`` truncates the log only
+behind such a checkpoint (PROTOCOL.md's metadata cleanup), so a
+vacuumed log stays readable by every Delta reader.
 """
 
 from __future__ import annotations
@@ -76,25 +78,34 @@ def _version_file(delta_dir: str, version: int) -> str:
     return os.path.join(_log_path(delta_dir), f"{version:020d}.json")
 
 
-def log_versions(delta_dir: str) -> list[int]:
-    """Committed log versions, ascending (the reader's listing step)."""
+def _listed(delta_dir: str, suffix: str) -> list[int]:
     lp = _log_path(delta_dir)
-    if not os.path.isdir(lp):
-        return []
-    out = []
-    for e in os.listdir(lp):
-        if e.endswith(".json") and e[:-5].isdigit():
-            out.append(int(e[:-5]))
-    return sorted(out)
+    names = os.listdir(lp) if os.path.isdir(lp) else []
+    return sorted(
+        int(e[: -len(suffix)])
+        for e in names
+        if e.endswith(suffix) and e[: -len(suffix)].isdigit()
+    )
+
+
+def log_versions(delta_dir: str) -> list[int]:
+    """Committed JSON log versions, ascending (the reader's listing step)."""
+    return _listed(delta_dir, ".json")
+
+
+def checkpoint_versions(delta_dir: str) -> list[int]:
+    """Versions with a ``{v:020d}.checkpoint.parquet``, ascending —
+    found by listing the log as Delta readers do, so a checkpoint
+    counts even before ``_last_checkpoint`` points at it."""
+    return _listed(delta_dir, ".checkpoint.parquet")
 
 
 def table_versions(delta_dir: str) -> list[int]:
     """Every version a reader can time-travel to, ascending: the JSON
-    commits plus the ``_last_checkpoint`` version (after
-    ``write_checkpoint(..., clean_log=True)`` that one exists only as
-    the checkpoint parquet)."""
-    lc = read_last_checkpoint(delta_dir)
-    return sorted(set(log_versions(delta_dir)) | ({lc["version"]} if lc else set()))
+    commits plus the checkpoints (after ``vacuum_export`` the lowest
+    version may have its JSON commit only beside its checkpoint, or
+    only the checkpoint)."""
+    return sorted(set(log_versions(delta_dir)) | set(checkpoint_versions(delta_dir)))
 
 
 def _read_actions(delta_dir: str, version: int) -> list[dict]:
@@ -102,48 +113,18 @@ def _read_actions(delta_dir: str, version: int) -> list[dict]:
         return [json.loads(line) for line in fh if line.strip()]
 
 
-def _fold(
-    delta_dir: str,
-    versions: list[int],
-    files: Optional[dict[str, dict]] = None,
-    meta: Optional[dict] = None,
-    proto: Optional[dict] = None,
-) -> dict:
-    """Apply the JSON commits ``versions`` in order on top of a seed
-    state (empty by default): later actions win per path. Returns
-    {'files': {path: add_action}, 'metaData', 'protocol'}."""
-    files = {} if files is None else files
-    for v in versions:
-        for action in _read_actions(delta_dir, v):
-            if "add" in action:
-                files[action["add"]["path"]] = action["add"]
-            elif "remove" in action:
-                files.pop(action["remove"]["path"], None)
-            elif "metaData" in action:
-                meta = action["metaData"]
-            elif "protocol" in action:
-                proto = action["protocol"]
-    return {"files": files, "metaData": meta, "protocol": proto}
-
-
-def replay_log(delta_dir: str) -> dict:
-    """Replay the full JSON log the way a Delta reader does: later
-    actions win per path. Returns {'files': {path: add_action},
-    'metaData': last metaData or None, 'protocol': last protocol or
-    None, 'version': last version or -1}."""
-    versions = log_versions(delta_dir)
-    state = _fold(delta_dir, versions)
-    state["version"] = versions[-1] if versions else -1
-    return state
+def _staged(final: str) -> str:
+    """A dot-tmp name beside ``final``: log listings skip it."""
+    return os.path.join(
+        os.path.dirname(final), f".tmp_{uuid.uuid4().hex[:8]}_{os.path.basename(final)}"
+    )
 
 
 def _replace_lines(final: str, actions: list[dict]) -> None:
-    """Write ``actions`` as JSON lines to a dot-tmp name beside
-    ``final``, then ``os.replace`` it there: a crash leaves the old
-    file (or none), never a torn one."""
-    tmp = os.path.join(
-        os.path.dirname(final), f".tmp_{uuid.uuid4().hex[:8]}_{os.path.basename(final)}"
-    )
+    """Write ``actions`` as JSON lines to a ``_staged`` name, then
+    ``os.replace`` it to ``final``: a crash leaves the old file (or
+    none), never a torn one."""
+    tmp = _staged(final)
     with open(tmp, "w") as fh:
         for action in actions:
             fh.write(json.dumps(action, separators=(",", ":")) + "\n")
@@ -216,10 +197,9 @@ def export_delta(
     when nothing changed (no empty commits). Safe to call after every
     CdcPipeline batch; cost is proportional to the touched buckets.
 
-    The previous-state diff is checkpoint-aware: after a
-    ``write_checkpoint(..., clean_log=True)`` the JSON log may be
-    empty, and diffing against a JSON-only replay would re-add every
-    live file under an already-used version number.
+    The previous-state diff is checkpoint-aware: after a vacuum the
+    log starts at a checkpoint, and diffing against a JSON-only replay
+    would re-add every live file under an already-used version number.
 
     ``metaData`` is (re-)emitted when the schema or the store's bucket
     layout (``.sync_meta.json`` → ``configuration[LAYOUT_KEY]``)
@@ -303,9 +283,9 @@ def export_delta(
 
 def read_export(spark: SparkSession, delta_dir: str, version: Optional[int] = None):
     """Read the exported table AS A DELTA READER WOULD — replay the
-    log up to ``version`` (default: latest) — seeding from the
-    ``_last_checkpoint`` parquet when one applies, exactly like a
-    checkpoint-aware reader — and scan the active file set with
+    log up to ``version`` (default: latest) — seeding from the newest
+    checkpoint at or below it, exactly like a checkpoint-aware
+    reader — and scan the active file set with
     partition values from the log, NOT from directory listing. This is the in-container verification path (no
     delta jar needed) and doubles as time travel over the export."""
     state = replay_with_checkpoint(delta_dir, version)
@@ -327,10 +307,10 @@ def read_export(spark: SparkSession, delta_dir: str, version: Optional[int] = No
 
 
 def vacuum_export(delta_dir: str, keep_versions: int = 2) -> dict:
-    """Delta-style VACUUM for the export: physically delete data files
-    that are NOT referenced by any of the last ``keep_versions`` log
-    versions' active sets, then drop the log files older than the
-    retained window. Time travel remains exact within the window and
+    """Delta-style VACUUM for the export: keep the last
+    ``keep_versions`` versions, truncate the log below them behind a
+    protocol checkpoint, and physically delete the data files none of
+    them references. Time travel remains exact within the window and
     is explicitly surrendered before it — the same contract as Delta's
     ``VACUUM ... RETAIN``. ``keep_versions`` must be >= 1 (``ValueError``
     otherwise), so the latest version always survives — a store's
@@ -343,53 +323,38 @@ def vacuum_export(delta_dir: str, keep_versions: int = 2) -> dict:
     may still hold the inode via its own link — vacuum only releases
     the export's pin). Returns counts for the caller's audit log.
 
-    Log truncation keeps replayability: the oldest retained version's
-    full active state is REWRITTEN as a self-contained base commit
-    (protocol + metaData + every active add) under its own version
-    number before older JSON files are dropped — the same collapsing a
-    Delta checkpoint performs, expressed in the JSON log itself so
-    readers need no checkpoint support. The base commit keeps the
-    replaced commit's ``commitInfo`` (its timestamp and operation are
-    the version's history, e.g. a snapshot's note).
-
-    Checkpoint-aware (ADVICE r5): after ``write_checkpoint(...,
-    clean_log=True)`` the state at/below the checkpoint exists only in
-    the checkpoint parquet — a pure-JSON replay would miss those adds
-    and delete still-active data files. Survivors and per-version
-    actives are therefore built via ``replay_with_checkpoint``, and
-    when the truncation cutoff moves ABOVE an existing checkpoint the
-    now-stale ``_last_checkpoint`` pointer and checkpoint parquet are
-    deleted BEFORE any older JSON is dropped (a reader mid-crash then
-    falls back to the full, still-valid JSON chain rather than seeding
-    from a checkpoint that no longer sees the dropped remove actions).
-    The cutoff REWRITE itself lands before the pointer unlink, so the
-    base commit carries explicit remove actions for every
-    checkpoint-state path absent at cutoff (ADVICE r6): a
-    checkpoint-seeded replay in that crash window reconciles to
-    exactly the cutoff state instead of resurrecting adds whose data
-    files vacuum already unlinked."""
+    Log truncation is PROTOCOL.md's metadata cleanup: when commits or
+    checkpoints lie below the oldest retained version (the cutoff), or
+    the log's first version is a bare commit other than version 0, the
+    cutoff is checkpointed first, then the older commits (newest
+    first) and the older checkpoints are unlinked. The cutoff's own
+    commit stays, so its ``commitInfo`` (e.g. a snapshot's note)
+    survives, and no retained commit is rewritten. Data files go last:
+    at every crash point each version ``table_versions`` lists still
+    reads exactly, and a re-run finishes the job."""
     if keep_versions < 1:
         raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
-    json_versions = log_versions(delta_dir)
-    lc = read_last_checkpoint(delta_dir)
-    cp_version = lc["version"] if lc else None
     all_versions = table_versions(delta_dir)
     if not all_versions:
         return {"deleted_files": 0, "dropped_versions": 0}
     retained = all_versions[-keep_versions:]
     cutoff = retained[0]
-
-    # checkpoint-seeded replay per retained version; union = survivors.
-    # The base commit stands for version `cutoff`, so it carries THAT
-    # version's metaData (schema + bucket layout), not the latest's;
-    # later versions already re-emit metaData where it changed
-    base = replay_with_checkpoint(delta_dir, cutoff)
-    meta, proto = base["metaData"], base["protocol"]
-    survivors = set(base["files"])
-    for v in retained[1:]:
+    survivors: set[str] = set()
+    for v in retained:
         survivors |= set(replay_with_checkpoint(delta_dir, v)["files"])
 
-    # delete unreferenced data files
+    checkpoints = checkpoint_versions(delta_dir)
+    dropped = [v for v in log_versions(delta_dir) if v < cutoff]
+    if all_versions[0] < cutoff or cutoff not in [0, *checkpoints]:
+        write_checkpoint(delta_dir, cutoff)
+        # newest first: every commit still listed keeps its whole
+        # chain back to version 0 or a checkpoint
+        for v in reversed(dropped):
+            os.unlink(_version_file(delta_dir, v))
+        for v in checkpoints:
+            if v < cutoff:
+                os.unlink(_checkpoint_file(delta_dir, v))
+
     deleted = 0
     for b in sorted(os.listdir(delta_dir)):
         if not b.startswith(f"{BUCKET_COL}="):
@@ -402,67 +367,6 @@ def vacuum_export(delta_dir: str, keep_versions: int = 2) -> dict:
                 deleted += 1
         if not os.listdir(bdir):
             os.rmdir(bdir)
-
-    dropped = [v for v in json_versions if v < cutoff]
-    cp_stale = cp_version is not None and cp_version < cutoff
-    if dropped or cp_stale:
-        # rewrite the cutoff version as a self-contained base commit
-        # (staged + os.replace: a crash leaves the old, still-valid
-        # chain in place)
-        prior = (
-            [a for a in _read_actions(delta_dir, cutoff) if "commitInfo" in a]
-            if cutoff in json_versions
-            else []
-        )
-        base_actions: list[dict] = prior[:1] or [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "VACUUM BASE",
-                    "operationParameters": {"keepVersions": keep_versions},
-                    "engineInfo": "sync_spark-delta-export",
-                }
-            }
-        ]
-        if proto:
-            base_actions.append({"protocol": proto})
-        if meta:
-            base_actions.append({"metaData": meta})
-        if cp_stale:
-            # Self-correcting base commit for the crash window between
-            # the os.replace below and the _last_checkpoint unlink: a
-            # checkpoint-seeded reader replays checkpoint state (at
-            # cp_version) + this commit. Adds alone would RESURRECT
-            # files removed between cp_version and cutoff — whose data
-            # files were already physically deleted above — so emit an
-            # explicit remove for every checkpoint-state path absent at
-            # cutoff. For a pure-JSON replay the removes are idempotent
-            # no-ops (those paths were already removed at <= cutoff, or
-            # never added once the older JSON is gone).
-            cp_files = replay_with_checkpoint(delta_dir, cp_version)["files"]
-            now_ms = int(time.time() * 1000)
-            for p in sorted(set(cp_files) - set(base["files"])):
-                base_actions.append(
-                    {
-                        "remove": {
-                            "path": p,
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                        }
-                    }
-                )
-        for p in sorted(base["files"]):
-            base_actions.append({"add": base["files"][p]})
-        _replace_lines(_version_file(delta_dir, cutoff), base_actions)
-        if cp_stale:
-            # pointer first, then the parquet: an orphan checkpoint
-            # file without _last_checkpoint is never consulted
-            os.unlink(os.path.join(_log_path(delta_dir), LAST_CHECKPOINT))
-            cp_file = _checkpoint_file(delta_dir, cp_version)
-            if os.path.exists(cp_file):
-                os.unlink(cp_file)
-        for v in dropped:
-            os.unlink(_version_file(delta_dir, v))
     return {"deleted_files": deleted, "dropped_versions": len(dropped)}
 
 
@@ -477,9 +381,7 @@ def _checkpoint_file(delta_dir: str, version: int) -> str:
     return os.path.join(_log_path(delta_dir), f"{version:020d}.checkpoint.parquet")
 
 
-def write_checkpoint(
-    delta_dir: str, version: Optional[int] = None, clean_log: bool = False
-) -> dict:
+def write_checkpoint(delta_dir: str, version: Optional[int] = None) -> dict:
     """Write the Delta-protocol checkpoint for ``version`` (default:
     latest): one parquet file ``{v:020d}.checkpoint.parquet`` holding
     the replayed state — a `protocol` row, a `metaData` row, and one
@@ -488,37 +390,27 @@ def write_checkpoint(
     ``_last_checkpoint`` pointer JSON {"version", "size"}. External
     readers then replay from the checkpoint and only the JSON versions
     AFTER it, instead of the whole log (PROTOCOL.md's checkpoint
-    contract; delta-rs/Spark+delta/Trino all consume this).
-
-    With ``clean_log=True`` the JSON commits at or below the
-    checkpointed version are deleted afterwards — the protocol's
-    metadata-cleanup step, valid because any reader now starts at the
-    checkpoint. Time travel below the checkpoint is surrendered (the
-    same trade as vacuum's base-commit collapse; this is the
-    protocol-standard variant of it).
+    contract; delta-rs/Spark+delta/Trino all consume this). The
+    pointer never moves backwards: a checkpoint below the one it names
+    (``vacuum_export``'s cutoff under a newer ``--checkpoint``) leaves
+    it alone.
 
     The parquet is written with pyarrow (NOT a Spark write: Spark
     writes a directory of parts, and the protocol demands exactly one
     file at exactly this name), staged and os.replace'd like every
     commit; ``_last_checkpoint`` is replaced only after the checkpoint
-    file is durable, so a crash between the two leaves a valid
-    (checkpoint-less) log. Scale: the checkpoint is O(#active files)
-    rows — file metadata, never data."""
+    file is durable, and readers find checkpoints by listing, so a
+    crash between the two loses nothing. Scale: the checkpoint is
+    O(#active files) rows — file metadata, never data."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    json_versions = log_versions(delta_dir)
-    lc = read_last_checkpoint(delta_dir)
     all_versions = table_versions(delta_dir)
     if not all_versions:
         raise ValueError(f"no log to checkpoint in {delta_dir!r}")
     if version is None:
         version = all_versions[-1]
 
-    # seed from the previous checkpoint + trailing JSON (ADVICE r5):
-    # after a clean_log cycle the protocol/metaData live only in the
-    # prior checkpoint, and a pure-JSON replay would brick the next
-    # checkpoint with 'no metaData/protocol'
     state = replay_with_checkpoint(delta_dir, version)
     files = state["files"]
     meta = state["metaData"]
@@ -574,26 +466,15 @@ def write_checkpoint(
         }
     )
     final = _checkpoint_file(delta_dir, version)
-    tmp = final + f".tmp_{uuid.uuid4().hex[:8]}"
+    tmp = _staged(final)
     pq.write_table(table, tmp)
     os.replace(tmp, final)
 
-    lc_final = os.path.join(_log_path(delta_dir), LAST_CHECKPOINT)
-    _replace_lines(lc_final, [{"version": version, "size": n}])
-
-    dropped = 0
-    if clean_log:
-        for v in json_versions:
-            if v <= version:
-                os.unlink(_version_file(delta_dir, v))
-                dropped += 1
-        # the superseded checkpoint parquet (if any) is no longer
-        # reachable once _last_checkpoint advanced and its JSON is gone
-        if lc and lc["version"] < version:
-            old_cp = _checkpoint_file(delta_dir, lc["version"])
-            if os.path.exists(old_cp):
-                os.unlink(old_cp)
-    return {"version": version, "rows": n, "dropped_versions": dropped}
+    lc = read_last_checkpoint(delta_dir)
+    if lc is None or lc["version"] <= version:
+        lc_final = os.path.join(_log_path(delta_dir), LAST_CHECKPOINT)
+        _replace_lines(lc_final, [{"version": version, "size": n}])
+    return {"version": version, "rows": n}
 
 
 def read_last_checkpoint(delta_dir: str) -> Optional[dict]:
@@ -605,20 +486,20 @@ def read_last_checkpoint(delta_dir: str) -> Optional[dict]:
 
 
 def replay_with_checkpoint(delta_dir: str, version: Optional[int] = None) -> dict:
-    """State replay the way a checkpoint-aware Delta reader does:
-    load ``_last_checkpoint`` (if usable for the requested version),
-    seed the state from the checkpoint parquet's rows, then apply only
-    the JSON commits after it. Falls back to the pure-JSON replay when
-    no checkpoint applies — e.g. time travel BELOW the checkpoint with
-    the JSON still present.
+    """State replay the way a checkpoint-aware Delta reader does: seed
+    from the newest checkpoint at or below ``version`` (found by
+    listing the log), then apply the JSON commits after it in order,
+    later actions winning per path. With no such checkpoint the replay
+    starts at the log's first commit — version 0, or the
+    self-contained first commit an older vacuum left. Returns
+    {'files': {path: add_action}, 'metaData', 'protocol', 'version'}.
 
     ``version=None`` is the latest version (-1 with empty state for a
     missing log). An explicit version the log does not hold — above
-    the latest, or dropped by vacuum or ``clean_log`` — raises
-    ``ValueError`` rather than serving another version's state."""
+    the latest, or dropped by vacuum — raises ``ValueError`` rather
+    than serving another version's state."""
     import pyarrow.parquet as pq
 
-    lc = read_last_checkpoint(delta_dir)
     have = table_versions(delta_dir)
     if version is None:
         version = have[-1] if have else -1
@@ -628,9 +509,8 @@ def replay_with_checkpoint(delta_dir: str, version: Optional[int] = None) -> dic
         )
     files: dict[str, dict] = {}
     meta = proto = None
-    base = -1
-    if lc is not None and lc["version"] <= version:
-        base = lc["version"]
+    base = max((c for c in checkpoint_versions(delta_dir) if c <= version), default=-1)
+    if base >= 0:
         for row in pq.read_table(_checkpoint_file(delta_dir, base)).to_pylist():
             if row.get("protocol"):
                 proto = row["protocol"]
@@ -645,7 +525,16 @@ def replay_with_checkpoint(delta_dir: str, version: Optional[int] = None) -> dic
                 a = dict(row["add"])
                 a["partitionValues"] = dict(a.get("partitionValues") or [])
                 files[a["path"]] = a
-    versions = [v for v in log_versions(delta_dir) if base < v <= version]
-    state = _fold(delta_dir, versions, files, meta, proto)
-    state["version"] = version
-    return state
+    for v in log_versions(delta_dir):
+        if not base < v <= version:
+            continue
+        for action in _read_actions(delta_dir, v):
+            if "add" in action:
+                files[action["add"]["path"]] = action["add"]
+            elif "remove" in action:
+                files.pop(action["remove"]["path"], None)
+            elif "metaData" in action:
+                meta = action["metaData"]
+            elif "protocol" in action:
+                proto = action["protocol"]
+    return {"files": files, "metaData": meta, "protocol": proto, "version": version}

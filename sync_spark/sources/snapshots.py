@@ -13,7 +13,10 @@ link IS a frozen copy. The note is the commit's ``operation``; the
 bucket layout (``.sync_meta.json``) travels in
 ``metaData.configuration``, so rollback restores it. Crash safety,
 retention (``expire_snapshots`` = ``vacuum_export``) and time travel
-are the export's; any Delta reader can read the snapshots.
+are the export's. Expiry writes a protocol checkpoint at the oldest
+kept version and drops the commits below it; that version's commit,
+and with it its note, stays. So any Delta reader can read every kept
+snapshot.
 
 Cost at 100 TB: one snapshot = O(#changed files) link syscalls + one
 JSON commit + the export's footer-merge schema job (none when nothing

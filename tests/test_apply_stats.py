@@ -117,7 +117,7 @@ def test_compaction_preserves_totals_and_batch_counts(spark, tmp_path):
     saved_b3 = str(tmp_path / "saved_b3")
     shutil.copytree(f"{stats}/table=users/batch_id=3", saved_b3)
     before = snap()
-    folded = compact_apply_stats(spark, stats, below_batch_id=4)
+    folded = compact_apply_stats(stats, below_batch_id=4)
     assert folded == {"orders": 3, "users": 3}
     assert snap() == before
     # keep a faithful copy of c4 for the crash simulation below
@@ -125,7 +125,7 @@ def test_compaction_preserves_totals_and_batch_counts(spark, tmp_path):
     saved_c4 = str(tmp_path / "saved_c4")
     shutil.copytree(stale_c4, saved_c4)
     # widening compaction folds the previous compacted dir too
-    folded = compact_apply_stats(spark, stats, below_batch_id=6)
+    folded = compact_apply_stats(stats, below_batch_id=6)
     assert folded["users"] == 3  # c4 + batches 4,5
     assert snap() == before
     # crash simulation: resurrect the superseded c4 dir WITH ITS REAL
@@ -136,7 +136,7 @@ def test_compaction_preserves_totals_and_batch_counts(spark, tmp_path):
     assert snap() == before
     # ...and re-running compaction DELETES it without re-folding it
     # (its content already lives inside c6 — folding would double)
-    compact_apply_stats(spark, stats, below_batch_id=6)
+    compact_apply_stats(stats, below_batch_id=6)
     assert not os.path.isdir(stale_c4)
     assert snap() == before
     # crash simulation 2: a LIVE batch dir below the cut-off survived
@@ -146,12 +146,12 @@ def test_compaction_preserves_totals_and_batch_counts(spark, tmp_path):
     live3 = f"{stats}/table=users/batch_id=3"
     shutil.copytree(saved_b3, live3)
     assert snap() == before  # reader ignores live dirs below the cut-off
-    compact_apply_stats(spark, stats, below_batch_id=6)
+    compact_apply_stats(stats, below_batch_id=6)
     assert not os.path.isdir(live3)
     assert snap() == before
     # same-cutoff re-run with nothing new to fold: a pure self-fold is
     # a no-op (rewriting the target would open a crash window)
-    assert compact_apply_stats(spark, stats, below_batch_id=6) == {
+    assert compact_apply_stats(stats, below_batch_id=6) == {
         "orders": 0,
         "users": 0,
     }
@@ -186,6 +186,36 @@ def test_cli_compact_stats_verb(spark, tmp_path, capsys):
     } == before == {("users", "insert"): (6, 3)}
     entries = sorted(os.listdir(f"{stats}/table=users"))
     assert entries == ["batch_id=3", "batch_id=c0000000003"]
+
+
+def test_compact_stats_verb_runs_no_spark_job(spark, tmp_path, capsys):
+    """compact-stats folds with the same pyarrow reader as the rollup:
+    no Spark job, and a batch dir of several part files still counts
+    as one batch."""
+    import json as _json
+
+    from sync_spark.__main__ import main
+    from sync_spark.operators.monitor import write_apply_stats
+
+    stats = str(tmp_path / "stats")
+    spark.createDataFrame(
+        [("insert", 1), ("insert", 2), ("delete", 4)], "op string, n long"
+    ).repartition(2).write.parquet(f"{stats}/table=users/batch_id=1")
+    write_apply_stats(f"{stats}/table=users/batch_id=2", [("insert", 5)])
+    write_apply_stats(f"{stats}/table=users/batch_id=3", [("insert", 7)])
+    sc = spark.sparkContext
+    group = "compact-stats-jobs"
+    sc.setJobGroup(group, "compact-stats", False)
+    try:
+        assert main(["compact-stats", "--stats", stats, "--below", "3"]) == 0
+    finally:
+        sc.setJobGroup("", "", False)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    payload = _json.loads(capsys.readouterr().out.strip())
+    assert payload["folded_dirs"] == {"users": 2}
+    assert {
+        (t["op"], t["total"], t["n_batches"]) for t in payload["totals"]
+    } == {("insert", 15, 3), ("delete", 4, 1)}
 
 
 def test_one_batch_job_budget_and_stats_readback(spark, tmp_path):

@@ -182,9 +182,14 @@ def test_cli_backup_verb(spark, tmp_path, capsys):
 
 def test_cli_run_export_delta_and_checkpoint(spark, tmp_path, capsys):
     """run --export-delta publishes every bucketed target as a Delta
-    table post-drain; the export-delta verb then checkpoints it and the
-    cleaned-log export still reads back the full table."""
-    from sync_spark.sources.delta_export import log_versions, read_export
+    table post-drain; the export-delta verb then publishes a change
+    and vacuums to the latest version, and the export truncated behind
+    its checkpoint still reads back the full table."""
+    from sync_spark.sources.delta_export import (
+        checkpoint_versions,
+        log_versions,
+        read_export,
+    )
 
     dirs, spec_path = _setup(spark, tmp_path)
     exp = tmp_path / "delta"
@@ -197,24 +202,30 @@ def test_cli_run_export_delta_and_checkpoint(spark, tmp_path, capsys):
     got = {(r.id, r.name) for r in read_export(spark, table).collect()}
     assert got == {(1, "a"), (2, "b")}
 
-    # export-delta verb: idempotent no-change export, then checkpoint
-    # with log cleanup
+    # export-delta verb: a new version, then vacuum to keep only it
+    assert main([
+        "execute", *_task_args(dirs, spec_path), "--apply",
+        "--query", (
+            "MERGE INTO users_t AS t USING (SELECT 3 AS id, 'c' AS name) s "
+            "ON t.id = s.id WHEN NOT MATCHED THEN INSERT *"
+        ),
+    ]) == 0
+    capsys.readouterr()
     tgt = str(dirs["tgt"] / "users_t")
     assert main([
-        "export-delta", "--target", tgt, "--out", table,
-        "--checkpoint", "--clean-log",
+        "export-delta", "--target", tgt, "--out", table, "--vacuum-keep", "1",
     ]) == 0
     payload = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert payload["exported"] is None  # nothing changed since run
-    assert payload["checkpoint"]["version"] == 0
-    assert log_versions(table) == []
+    assert payload["exported"] == 1
+    assert payload["vacuum"]["dropped_versions"] == 1
+    assert log_versions(table) == checkpoint_versions(table) == [1]
     got = {(r.id, r.name) for r in read_export(spark, table).collect()}
-    assert got == {(1, "a"), (2, "b")}
-    # the report reads the checkpoint too: a JSON-only replay of the
-    # cleaned log would say latest -1
+    assert got == {(1, "a"), (2, "b"), (3, "c")}
+    # the report reads the checkpoint too: a replay of the JSON alone
+    # would miss version 0's files
     assert main(["export-delta", "--target", tgt, "--out", table]) == 0
     payload = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert payload["exported"] is None and payload["latest"] == 0
+    assert payload["exported"] is None and payload["latest"] == 1
 
 
 def test_cli_query_verb(spark, sf_small, capsys):

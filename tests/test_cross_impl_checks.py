@@ -5,9 +5,9 @@
    longer catch a shared construction bug (strict-gap boundary,
    cumsum tiebreak). The builtin ``session_window`` is an independent
    implementation — pin batch-kernel == builtin here.
-2. synth_partsupp is the reference implementation of the Q2/Q20
-   partsupp synthesis; PARTSUPP_CTE is its DuckDB twin built from the
-   SAME PS_*_EXPR strings. Pin the cross-engine table equality so a
+2. synth_partsupp (test-local) is the reference implementation of the
+   Q2/Q20 partsupp synthesis; PARTSUPP_CTE is its DuckDB twin built
+   from the SAME PS_*_EXPR strings. Pin the cross-engine table equality so a
    drifted constant can never silently break 'definitionally
    identical'.
 """
@@ -20,7 +20,24 @@ from pyspark.sql import functions as F
 
 from sync_spark.operators.extended_queries import a_session_window_agg
 from sync_spark.operators.relational import _t, dec
-from sync_spark.operators.tpch_queries import PARTSUPP_CTE, synth_partsupp
+from sync_spark.operators.tpch_queries import (
+    PARTSUPP_CTE,
+    PS_AVAILQTY_EXPR,
+    PS_COST_EXPR,
+)
+
+
+def synth_partsupp(spark, sf_dir: str):
+    """The Spark twin of PARTSUPP_CTE (Q2/Q20 inline the same PS_*_EXPR
+    strings into their fused plans): one distinct on the pair key, the
+    derived columns key arithmetic."""
+    li = _t(spark, sf_dir, "lineitem")
+    return li.select("l_partkey", "l_suppkey").distinct().select(
+        F.col("l_partkey").alias("ps_partkey"),
+        F.col("l_suppkey").alias("ps_suppkey"),
+        F.expr(PS_AVAILQTY_EXPR).cast("long").alias("ps_availqty"),
+        F.expr(PS_COST_EXPR).cast("long").alias("ps_supplycost_c"),
+    )
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])

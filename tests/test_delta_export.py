@@ -7,8 +7,11 @@ and no-change exports are idempotent."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
+from typing import Optional
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,10 +26,13 @@ from sync_spark.sources.bucketed import (
     write_bucketed,
 )
 from sync_spark.sources.delta_export import (
+    checkpoint_versions,
     export_delta,
     log_versions,
     read_export,
-    replay_log,
+    replay_with_checkpoint,
+    table_versions,
+    vacuum_export,
 )
 
 SCHEMA = T.StructType(
@@ -102,7 +108,7 @@ def test_incremental_export_touches_only_changed_buckets(spark, tmp_path):
     tgt, dl = str(tmp_path / "t"), str(tmp_path / "delta")
     write_bucketed(_rows(spark, [(i, f"v{i}") for i in range(20)]), tgt, ["id"], N_BUCKETS)
     export_delta(spark, tgt, dl)
-    v0_files = set(replay_log(dl)["files"])
+    v0_files = set(replay_with_checkpoint(dl)["files"])
 
     _merge(spark, tgt, [(3, "CHANGED", "upsert"), (99, "NEW", "upsert")])
     v = export_delta(spark, tgt, dl)
@@ -196,7 +202,7 @@ def test_schema_evolution_reemits_metadata(spark, tmp_path):
 
     v = export_delta(spark, tgt, dl)
     assert v == 1
-    state = replay_log(dl)
+    state = replay_with_checkpoint(dl)
     schema = T.StructType.fromJson(json.loads(state["metaData"]["schemaString"]))
     assert "extra" in [f.name for f in schema.fields]
     # id is stable across metaData re-emissions
@@ -239,7 +245,7 @@ def test_uncommitted_files_invisible(spark, tmp_path, monkeypatch):
         for f in os.listdir(os.path.join(dl, b))
         if f.endswith(".parquet")
     }
-    assert on_disk - set(replay_log(dl)["files"]), "crash left no stray file"
+    assert on_disk - set(replay_with_checkpoint(dl)["files"]), "crash left no stray file"
     assert log_versions(dl) == [0]
     got = {(r.id, r.v) for r in read_export(spark, dl).collect()}
     assert got == before and (999, "GHOST") not in got
@@ -312,9 +318,7 @@ def test_cli_run_with_export_delta(spark, tmp_path, capsys):
 def test_vacuum_deletes_unreferenced_keeps_retained_window(spark, tmp_path):
     """Three versions; vacuum keep_versions=2 must delete only files
     referenced solely by version 0, keep versions 1..2 time-travelable,
-    and collapse version 1 into a self-contained base commit."""
-    from sync_spark.sources.delta_export import vacuum_export
-
+    and checkpoint version 1 before dropping commit 0."""
     tgt, dl = str(tmp_path / "t"), str(tmp_path / "delta")
     base = [(i, f"v{i}") for i in range(20)]
     write_bucketed(_rows(spark, base), tgt, ["id"], N_BUCKETS)
@@ -326,21 +330,19 @@ def test_vacuum_deletes_unreferenced_keeps_retained_window(spark, tmp_path):
 
     state_v1 = {(r.id, r.v) for r in read_export(spark, dl, version=1).collect()}
     state_v2 = {(r.id, r.v) for r in read_export(spark, dl, version=2).collect()}
+    v1_files = set(replay_with_checkpoint(dl, 1)["files"])
+    v2_files = set(replay_with_checkpoint(dl, 2)["files"])
 
     out = vacuum_export(dl, keep_versions=2)
     assert out["dropped_versions"] == 1
     assert out["deleted_files"] >= 1  # v0's replaced bucket file(s)
 
     assert log_versions(dl) == [1, 2]
+    assert checkpoint_versions(dl) == [1]
     # retained versions still read exactly
     assert {(r.id, r.v) for r in read_export(spark, dl, version=1).collect()} == state_v1
     assert {(r.id, r.v) for r in read_export(spark, dl, version=2).collect()} == state_v2
-    # the rewritten v1 is self-contained: protocol + metaData + adds
-    with open(os.path.join(dl, "_delta_log", f"{1:020d}.json")) as fh:
-        kinds = [next(iter(json.loads(l))) for l in fh if l.strip()]
-    assert "protocol" in kinds and "metaData" in kinds and "add" in kinds
-    assert "remove" not in kinds
-    # no orphan data files remain beyond the union of retained actives
+    # every on-disk file is referenced by v1 or v2
     on_disk = {
         f"{b}/{f}"
         for b in os.listdir(dl)
@@ -348,20 +350,6 @@ def test_vacuum_deletes_unreferenced_keeps_retained_window(spark, tmp_path):
         for f in os.listdir(os.path.join(dl, b))
         if f.endswith(".parquet")
     }
-    # every on-disk file is referenced by v1 or v2
-    v1_files = set()
-    files = {}
-    for v in log_versions(dl):
-        with open(os.path.join(dl, "_delta_log", f"{v:020d}.json")) as fh:
-            for l in fh:
-                a = json.loads(l)
-                if "add" in a:
-                    files[a["add"]["path"]] = True
-                elif "remove" in a:
-                    files.pop(a["remove"]["path"], None)
-        if v == 1:
-            v1_files = set(files)
-    v2_files = set(files)
     assert on_disk == (v1_files | v2_files)
 
 
@@ -369,8 +357,6 @@ def test_vacuum_deletes_unreferenced_keeps_retained_window(spark, tmp_path):
 def test_vacuum_rejects_keep_window_below_one(spark, tmp_path, keep):
     """keep_versions < 1 raises and touches nothing: `[-0:]` would keep
     every version and `-1` would act like 2."""
-    from sync_spark.sources.delta_export import vacuum_export
-
     tgt, dl = str(tmp_path / "t"), str(tmp_path / "delta")
     write_bucketed(_rows(spark, [(i, f"v{i}") for i in range(10)]), tgt, ["id"], N_BUCKETS)
     export_delta(spark, tgt, dl)
@@ -384,14 +370,8 @@ def test_vacuum_rejects_keep_window_below_one(spark, tmp_path, keep):
 
 def test_time_travel_to_missing_version_raises(spark, tmp_path):
     """A version the log does not hold — above the latest, or dropped
-    by vacuum or clean_log — raises instead of serving another
-    version's file set under the asked-for number."""
-    from sync_spark.sources.delta_export import (
-        replay_with_checkpoint,
-        vacuum_export,
-        write_checkpoint,
-    )
-
+    by vacuum — raises instead of serving another version's file set
+    under the asked-for number."""
     tgt, dl = str(tmp_path / "t"), str(tmp_path / "delta")
     write_bucketed(_rows(spark, [(i, f"v{i}") for i in range(10)]), tgt, ["id"], N_BUCKETS)
     export_delta(spark, tgt, dl)
@@ -409,7 +389,7 @@ def test_time_travel_to_missing_version_raises(spark, tmp_path):
         missing(v)
     vacuum_export(dl, keep_versions=2)
     missing(0)
-    write_checkpoint(dl, clean_log=True)
+    vacuum_export(dl, keep_versions=1)
     missing(1)
     assert {(r.id, r.v) for r in read_export(spark, dl, version=2).collect()} == _state(
         spark, tgt
@@ -449,8 +429,6 @@ def test_snapshot_log_independent_readback(spark, tmp_path):
 
 
 def test_vacuum_noop_when_everything_retained(spark, tmp_path):
-    from sync_spark.sources.delta_export import vacuum_export
-
     tgt, dl = str(tmp_path / "t"), str(tmp_path / "delta")
     write_bucketed(_rows(spark, [(i, f"v{i}") for i in range(10)]), tgt, ["id"], N_BUCKETS)
     export_delta(spark, tgt, dl)
@@ -476,12 +454,11 @@ class TestCheckpoint:
     def test_checkpoint_matches_json_replay(self, spark, tmp_path):
         from sync_spark.sources.delta_export import (
             read_last_checkpoint,
-            replay_with_checkpoint,
             write_checkpoint,
         )
 
         store, out = self._build(spark, tmp_path)
-        json_state = replay_log(out)
+        json_state = replay_with_checkpoint(out)  # no checkpoint yet: JSON only
         info = write_checkpoint(out)
         assert info["version"] == json_state["version"]
         assert read_last_checkpoint(out)["version"] == info["version"]
@@ -492,27 +469,27 @@ class TestCheckpoint:
             assert ck_state["files"][p]["size"] == a["size"]
             assert ck_state["files"][p]["partitionValues"] == a["partitionValues"]
 
-    def test_read_export_after_clean_log(self, spark, tmp_path):
-        """Delete every JSON commit covered by the checkpoint — the
-        reader must reconstruct the table from the checkpoint alone."""
-        from sync_spark.sources.delta_export import write_checkpoint
-
+    def test_read_export_after_vacuum_keep_one(self, spark, tmp_path):
+        """vacuum keep 1 leaves the latest commit beside its checkpoint;
+        with that commit deleted too, the reader must reconstruct the
+        table from the checkpoint alone."""
         store, out = self._build(spark, tmp_path)
         before = _state(spark, store)
-        write_checkpoint(out, clean_log=True)
-        assert log_versions(out) == []
+        vacuum_export(out, keep_versions=1)
+        assert log_versions(out) == [2] and checkpoint_versions(out) == [2]
+        os.unlink(os.path.join(out, "_delta_log", f"{2:020d}.json"))
+        assert table_versions(out) == [2]
         got = {(r.id, r.v) for r in read_export(spark, out).collect()}
         assert got == before
+        assert _fold_log_jarfree(out) == sorted(replay_with_checkpoint(out)["files"])
 
     def test_incremental_commits_after_checkpoint(self, spark, tmp_path):
         """New JSON versions after the checkpoint apply on top of it."""
-        from sync_spark.sources.delta_export import write_checkpoint
-
         store, out = self._build(spark, tmp_path)
-        write_checkpoint(out, clean_log=True)
+        vacuum_export(out, keep_versions=1)
         _merge(spark, store, [(1, "A2", "u"), (7, "g", "u")])
         v = export_delta(spark, store, out)
-        assert v is not None
+        assert v == 3
         got = {(r.id, r.v) for r in read_export(spark, out).collect()}
         assert got == _state(spark, store)
 
@@ -521,83 +498,34 @@ class TestCheckpoint:
         still replay from JSON (fallback path)."""
         from sync_spark.sources.delta_export import write_checkpoint
 
-        from sync_spark.sources.delta_export import replay_with_checkpoint
-
         store, out = self._build(spark, tmp_path)
         expected_v0 = replay_with_checkpoint(out, version=0)  # JSON path
-        write_checkpoint(out)  # no clean_log
+        write_checkpoint(out)
         st0 = replay_with_checkpoint(out, version=0)
         assert st0["version"] == 0
         assert set(st0["files"]) == set(expected_v0["files"])
 
-    def test_repeat_checkpoint_after_clean_log(self, spark, tmp_path):
-        """ADVICE r5 (medium): a second write_checkpoint after a
-        clean_log cycle must seed protocol/metaData from the previous
-        checkpoint instead of raising 'no metaData/protocol'."""
-        from sync_spark.sources.delta_export import (
-            read_last_checkpoint,
-            write_checkpoint,
-        )
+    def test_repeat_vacuum_advances_checkpoint(self, spark, tmp_path):
+        """A second vacuum after more commits seeds from the first one's
+        checkpoint, checkpoints its own cutoff, advances
+        _last_checkpoint and drops the superseded checkpoint parquet."""
+        from sync_spark.sources.delta_export import read_last_checkpoint
 
         store, out = self._build(spark, tmp_path)
-        write_checkpoint(out, clean_log=True)
+        vacuum_export(out, keep_versions=1)
         _merge(spark, store, [(1, "A2", "u"), (7, "g", "u")])
         v = export_delta(spark, store, out)
-        info = write_checkpoint(out, clean_log=True)  # raised before fix
-        assert info["version"] == v
+        vacuum_export(out, keep_versions=1)
+        assert checkpoint_versions(out) == log_versions(out) == [v]
         assert read_last_checkpoint(out)["version"] == v
-        # superseded checkpoint parquet is gone, new one exists
-        assert not os.path.exists(
-            os.path.join(out, "_delta_log", f"{2:020d}.checkpoint.parquet")
-        )
         got = {(r.id, r.v) for r in read_export(spark, out).collect()}
         assert got == _state(spark, store)
-
-    def test_vacuum_after_checkpoint_keeps_active_files(self, spark, tmp_path):
-        """ADVICE r5 (high): vacuum after write_checkpoint(clean_log=
-        True) + later exports must union checkpoint-referenced actives
-        into survivors — before the fix it unlinked still-active
-        parquet files (data loss) and wrote a base commit with no
-        protocol/metaData."""
-        from sync_spark.sources.delta_export import (
-            read_last_checkpoint,
-            vacuum_export,
-            write_checkpoint,
-        )
-
-        store, out = self._build(spark, tmp_path)           # v0..v2
-        write_checkpoint(out, clean_log=True)               # cp@2, JSON gone
-        _merge(spark, store, [(1, "A2", "u")])
-        export_delta(spark, store, out)                     # v3
-        _merge(spark, store, [(7, "g", "u")])
-        export_delta(spark, store, out)                     # v4
-
-        state_v3 = {(r.id, r.v) for r in read_export(spark, out, version=3).collect()}
-        state_v4 = {(r.id, r.v) for r in read_export(spark, out, version=4).collect()}
-
-        out_info = vacuum_export(out, keep_versions=2)
-        # cutoff=3 > cp=2: the stale checkpoint must be retired
-        assert read_last_checkpoint(out) is None
-        assert not os.path.exists(
-            os.path.join(out, "_delta_log", f"{2:020d}.checkpoint.parquet")
-        )
-        assert log_versions(out) == [3, 4]
-        # the rewritten v3 base commit is self-contained
-        with open(os.path.join(out, "_delta_log", f"{3:020d}.json")) as fh:
-            kinds = [next(iter(json.loads(l))) for l in fh if l.strip()]
-        assert "protocol" in kinds and "metaData" in kinds and "add" in kinds
-        # both retained versions read exactly (no active file was lost)
-        assert {(r.id, r.v) for r in read_export(spark, out, version=3).collect()} == state_v3
-        assert {(r.id, r.v) for r in read_export(spark, out, version=4).collect()} == state_v4
-        assert state_v4 == _state(spark, store)
-        assert out_info["dropped_versions"] == 0  # no JSON below cutoff existed
 
     def test_vacuum_retains_checkpoint_inside_window(self, spark, tmp_path):
         """Vacuum whose cutoff sits at/below the checkpoint keeps the
         checkpoint and _last_checkpoint valid."""
         from sync_spark.sources.delta_export import (
             read_last_checkpoint,
-            vacuum_export,
             write_checkpoint,
         )
 
@@ -613,60 +541,27 @@ class TestCheckpoint:
         assert {(r.id, r.v) for r in read_export(spark, out, version=2).collect()} == state_v2
         assert {(r.id, r.v) for r in read_export(spark, out).collect()} == _state(spark, store)
 
-    def test_vacuum_base_commit_self_corrects_checkpoint_replay(self, spark, tmp_path):
-        """ADVICE r6 (medium): the cutoff base commit is rewritten
-        BEFORE the stale _last_checkpoint pointer is unlinked, and data
-        files are already physically gone — so a crash (or concurrent
-        reader) in that window replays checkpoint state + the base
-        commit. The base commit must therefore carry explicit remove
-        actions for every checkpoint-state path absent at cutoff;
-        otherwise files removed between cp_version and cutoff are
-        resurrected as dangling adds."""
-        import shutil
-
+    def test_checkpoint_pointer_never_moves_backwards(self, spark, tmp_path):
+        """A vacuum whose cutoff lies below a newer checkpoint writes its
+        own checkpoint but leaves _last_checkpoint on the newer one."""
         from sync_spark.sources.delta_export import (
-            LAST_CHECKPOINT,
             read_last_checkpoint,
-            replay_with_checkpoint,
-            vacuum_export,
             write_checkpoint,
         )
 
         store, out = self._build(spark, tmp_path)           # v0..v2
-        write_checkpoint(out, clean_log=True)               # cp@2, JSON gone
-        cp_files = set(replay_with_checkpoint(out, 2)["files"])
-        # delete a row between cp and the future cutoff: its bucket is
-        # rewritten at v3, so some cp-state parquet is removed there
-        _merge(spark, store, [(2, None, "d")])
-        export_delta(spark, store, out)                     # v3 (cutoff)
-        _merge(spark, store, [(5, "E", "u")])
-        export_delta(spark, store, out)                     # v4
-        v3_files = set(replay_with_checkpoint(out, 3)["files"])
-        assert cp_files - v3_files, "fixture must remove a file between cp and cutoff"
-        expect_v4 = {(r.id, r.v) for r in read_export(spark, out, version=4).collect()}
+        write_checkpoint(out)                               # cp@2
+        _merge(spark, store, [(1, "A2", "u")])
+        export_delta(spark, store, out)                     # v3
+        want = {v: _fold_log_jarfree(out, v) for v in (1, 2, 3)}
 
-        # snapshot the pointer + checkpoint parquet = the crash window
-        log_dir = os.path.join(out, "_delta_log")
-        cp_parquet = f"{2:020d}.checkpoint.parquet"
-        shutil.copy(os.path.join(log_dir, LAST_CHECKPOINT), tmp_path / "lc_bak")
-        shutil.copy(os.path.join(log_dir, cp_parquet), tmp_path / "cp_bak")
-
-        vacuum_export(out, keep_versions=2)                 # cutoff=3 > cp=2
-        assert read_last_checkpoint(out) is None
-
-        # the rewritten v3 base must remove exactly the vanished paths
-        with open(os.path.join(log_dir, f"{3:020d}.json")) as fh:
-            actions = [json.loads(l) for l in fh if l.strip()]
-        removes = {a["remove"]["path"] for a in actions if "remove" in a}
-        assert removes == cp_files - v3_files
-
-        # simulate the crash: pointer + checkpoint parquet still there
-        shutil.copy(tmp_path / "lc_bak", os.path.join(log_dir, LAST_CHECKPOINT))
-        shutil.copy(tmp_path / "cp_bak", os.path.join(log_dir, cp_parquet))
-        seeded = replay_with_checkpoint(out)                # cp@2 + v3 + v4
-        for p in seeded["files"]:
-            assert os.path.exists(os.path.join(out, p)), f"dangling add: {p}"
-        assert {(r.id, r.v) for r in read_export(spark, out).collect()} == expect_v4
+        vacuum_export(out, keep_versions=3)                 # cutoff=1
+        assert checkpoint_versions(out) == [1, 2]
+        assert read_last_checkpoint(out)["version"] == 2
+        assert table_versions(out) == [1, 2, 3]
+        for v, files in want.items():
+            assert _fold_log_jarfree(out, v) == files
+            assert sorted(replay_with_checkpoint(out, v)["files"]) == files
 
     def test_checkpoint_is_single_protocol_file(self, spark, tmp_path):
         import pyarrow.parquet as pq
@@ -681,7 +576,7 @@ class TestCheckpoint:
         assert sum(1 for r in rows if r["protocol"]) == 1
         assert sum(1 for r in rows if r["metaData"]) == 1
         n_adds = sum(1 for r in rows if r["add"])
-        assert n_adds == len(replay_log(out)["files"])
+        assert n_adds == len(replay_with_checkpoint(out)["files"])
         lc = json.load(open(os.path.join(out, "_delta_log", "_last_checkpoint")))
         assert lc == {"version": info["version"], "size": len(rows)}
 
@@ -707,42 +602,44 @@ def _delta_reader():
         return None
 
 
-def _fold_log_jarfree(dl: str) -> list[str]:
+def _fold_log_jarfree(dl: str, version: Optional[int] = None) -> list[str]:
     """An INDEPENDENT (test-local) implementation of the public Delta
-    log fold — deliberately NOT sync_spark.sources.delta_export
-    .replay_log, so conformance isn't the exporter checking itself:
-    seed the active-file set from the `_last_checkpoint` parquet's
-    add rows if one exists (checkpoint remove rows are expired-file
-    tombstones, not state), then apply each JSON commit above it in
-    version order, add = activate path / remove = deactivate path,
-    last action per path wins. Uses only json/os/pyarrow."""
+    log fold — deliberately NOT sync_spark.sources.delta_export, so
+    conformance isn't the exporter checking itself. It reads
+    ``version`` (default: the newest listed) as PROTOCOL.md does: list
+    `_delta_log`, seed the active-file set from the add rows of the
+    newest `N.checkpoint.parquet` with N <= version (checkpoint remove
+    rows are expired-file tombstones, not state), then apply every JSON
+    commit N+1..version in order — 0..version with no checkpoint —,
+    add = activate path / remove = deactivate path, last action per
+    path wins. Every one of those commits must exist. Uses only
+    json/os/re/pyarrow."""
     import pyarrow.parquet as _pq
 
     log = os.path.join(dl, "_delta_log")
+    names = os.listdir(log)
+    commits = {int(n[:20]) for n in names if re.fullmatch(r"\d{20}\.json", n)}
+    cps = {int(n[:20]) for n in names if re.fullmatch(r"\d{20}\.checkpoint\.parquet", n)}
+    if version is None:
+        version = max(commits | cps)
+    seed = max((c for c in cps if c <= version), default=-1)
     active: dict[str, bool] = {}
-    start = 0
-    lc = os.path.join(log, "_last_checkpoint")
-    if os.path.exists(lc):
-        info = json.load(open(lc))
-        cp = os.path.join(log, f"{info['version']:020d}.checkpoint.parquet")
-        for r in _pq.read_table(cp).to_pylist():
+    if seed >= 0:
+        for r in _pq.read_table(os.path.join(log, f"{seed:020d}.checkpoint.parquet")).to_pylist():
             if r.get("add"):
                 active[r["add"]["path"]] = True
-        start = info["version"] + 1
-    v = start
-    while True:
-        cf = os.path.join(log, f"{v:020d}.json")
-        if not os.path.exists(cf):
-            break
-        with open(cf) as fh:
+    missing = [v for v in range(seed + 1, version + 1) if v not in commits]
+    assert not missing, (
+        f"no commits found above the checkpoint: version {version} needs {missing}"
+    )
+    for v in range(seed + 1, version + 1):
+        with open(os.path.join(log, f"{v:020d}.json")) as fh:
             for line in fh:
                 a = json.loads(line)
                 if "add" in a:
                     active[a["add"]["path"]] = True
                 elif "remove" in a:
                     active.pop(a["remove"]["path"], None)
-        v += 1
-    assert v > start or active, "no commits found above the checkpoint"
     return sorted(active)
 
 
@@ -806,7 +703,7 @@ def test_independent_delta_readback(spark, tmp_path):
         con.close()
     assert got2 == want
     # and the fold agrees with the exporter's own replay on the file set
-    assert set(files) == set(replay_log(dl)["files"])
+    assert set(files) == set(replay_with_checkpoint(dl)["files"])
 
 
 def test_duckdb_reads_zstd_store_and_export(spark, tmp_path):
@@ -846,3 +743,204 @@ def test_duckdb_reads_zstd_store_and_export(spark, tmp_path):
             assert len(got) == len(want) and set(got) == want
     finally:
         con.close()
+
+
+def _protocol_rows(dl: str, version: int) -> set:
+    """(id, v) rows of ``version`` as another Delta reader would get
+    them: the `_fold_log_jarfree` file set scanned by DuckDB."""
+    import duckdb
+
+    files = [os.path.join(dl, p) for p in _fold_log_jarfree(dl, version)]
+    con = duckdb.connect()
+    try:
+        return set(
+            con.execute(
+                "SELECT id, v FROM read_parquet(?, hive_partitioning = false)", [files]
+            ).fetchall()
+        )
+    finally:
+        con.close()
+
+
+def _commit_hashes(dl: str) -> dict[int, str]:
+    log = os.path.join(dl, "_delta_log")
+    out = {}
+    for v in log_versions(dl):
+        with open(os.path.join(log, f"{v:020d}.json"), "rb") as fh:
+            out[v] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def test_vacuumed_and_expired_logs_read_by_protocol(spark, tmp_path):
+    """After vacuum_export and expire_snapshots the log lists exactly
+    the kept window, no kept commit's bytes change (so a snapshot's
+    note survives), and every kept version reads the same through
+    read_export / read_snapshot and through the test-local protocol
+    fold scanned by DuckDB."""
+    from sync_spark.sources.snapshots import (
+        expire_snapshots,
+        read_snapshot,
+        snapshot_create,
+        snapshot_versions,
+    )
+
+    tgt, dl = str(tmp_path / "t"), str(tmp_path / "delta")
+    write_bucketed(_rows(spark, [(i, f"v{i}") for i in range(20)]), tgt, ["id"], N_BUCKETS)
+    frozen = {}
+    for k, changes in enumerate(
+        ([], [(3, "A", "upsert")], [(3, "B", "upsert"), (99, "NEW", "upsert")],
+         [(7, None, "delete")])
+    ):
+        if changes:
+            _merge(spark, tgt, changes)
+        assert export_delta(spark, tgt, dl) == k
+        assert snapshot_create(spark, tgt, note=f"batch-{k}") == k
+        frozen[k] = _state(spark, tgt)
+
+    snap = os.path.join(tgt, ".snapshots")
+    for log, expire in (
+        (dl, lambda: vacuum_export(dl, keep_versions=2)),
+        (snap, lambda: expire_snapshots(tgt, keep_last=2)),
+    ):
+        before = _commit_hashes(log)
+        expire()
+        assert table_versions(log) == [2, 3]
+        assert _commit_hashes(log) == {v: before[v] for v in (2, 3)}
+    assert [s["note"] for s in snapshot_versions(tgt)] == ["batch-2", "batch-3"]
+    for v in (2, 3):
+        assert {(r.id, r.v) for r in read_export(spark, dl, v).collect()} == frozen[v]
+        assert {(r.id, r.v) for r in read_snapshot(spark, tgt, v).collect()} == frozen[v]
+        assert _protocol_rows(dl, v) == _protocol_rows(snap, v) == frozen[v]
+
+
+def test_vacuum_checkpoints_a_log_without_a_protocol_base(spark, tmp_path):
+    """A log an older vacuum truncated — its first commit above version
+    0 rewritten self-contained (protocol, metaData, every active add),
+    no checkpoint — still reads here, and the next vacuum checkpoints
+    that first commit, after which the protocol fold reads it too."""
+    tgt, dl = str(tmp_path / "t"), str(tmp_path / "delta")
+    write_bucketed(_rows(spark, [(i, f"v{i}") for i in range(20)]), tgt, ["id"], N_BUCKETS)
+    frozen = {}
+    for k, changes in enumerate(([], [(3, "A", "upsert")], [(99, "NEW", "upsert")])):
+        if changes:
+            _merge(spark, tgt, changes)
+        export_delta(spark, tgt, dl)
+        frozen[k] = _state(spark, tgt)
+
+    state = replay_with_checkpoint(dl, 1)
+    log = os.path.join(dl, "_delta_log")
+    with open(os.path.join(log, f"{1:020d}.json")) as fh:
+        info = next(json.loads(l) for l in fh if '"commitInfo"' in l)
+    actions = [info, {"protocol": state["protocol"]}, {"metaData": state["metaData"]}]
+    actions += [{"add": state["files"][p]} for p in sorted(state["files"])]
+    with open(os.path.join(log, f"{1:020d}.json"), "w") as fh:
+        fh.writelines(json.dumps(a) + "\n" for a in actions)
+    os.unlink(os.path.join(log, f"{0:020d}.json"))
+
+    assert table_versions(dl) == [1, 2]
+    for v in (1, 2):
+        assert {(r.id, r.v) for r in read_export(spark, dl, v).collect()} == frozen[v]
+    with pytest.raises(AssertionError, match="no commits found above the checkpoint"):
+        _fold_log_jarfree(dl, 1)
+
+    before = _commit_hashes(dl)
+    assert vacuum_export(dl, keep_versions=2)["dropped_versions"] == 0
+    assert checkpoint_versions(dl) == [1] and table_versions(dl) == [1, 2]
+    assert _commit_hashes(dl) == before
+    for v in (1, 2):
+        assert {(r.id, r.v) for r in read_export(spark, dl, v).collect()} == frozen[v]
+        assert _protocol_rows(dl, v) == frozen[v]
+
+
+class _StopAfter:
+    """Stand-in for the ``os`` module of delta_export: lets ``budget``
+    os.replace / os.unlink calls through, recording each target's
+    basename, then raises on the next — a crash right after the
+    budget-th durable step. Everything else is the real ``os``."""
+
+    def __init__(self, budget: float):
+        self.budget, self.steps = budget, []
+
+    def __getattr__(self, name):
+        return getattr(os, name)
+
+    def _step(self, fn, path, *args):
+        if len(self.steps) == self.budget:
+            raise InterruptedError(f"stopped after {self.budget} steps")
+        self.steps.append(os.path.basename(path if fn is os.unlink else args[0]))
+        return fn(path, *args)
+
+    def replace(self, src, dst):
+        return self._step(os.replace, src, dst)
+
+    def unlink(self, path):
+        return self._step(os.unlink, path)
+
+
+def test_vacuum_crash_points_keep_every_listed_version_readable(
+    spark, tmp_path, monkeypatch
+):
+    """vacuum_export stopped after each durable step — checkpoint
+    parquet replaced in, _last_checkpoint advanced, each older commit
+    unlinked, the older checkpoint unlinked, each data file unlinked:
+    at every stop each version table_versions lists reads exactly
+    through read_export and the protocol fold, and a re-run ends with
+    the log and data files an uninterrupted vacuum leaves."""
+    import shutil
+
+    import sync_spark.sources.delta_export as D
+
+    tgt, pristine = str(tmp_path / "t"), str(tmp_path / "pristine")
+    write_bucketed(_rows(spark, [(i, f"v{i}") for i in range(20)]), tgt, ["id"], N_BUCKETS)
+    for k, changes in enumerate(
+        ([], [(3, "A", "upsert")], [(2, None, "delete")], [(3, "B", "upsert")],
+         [(99, "NEW", "upsert")])
+    ):
+        if changes:
+            _merge(spark, tgt, changes)
+        export_delta(spark, tgt, pristine)
+        if k == 1:
+            D.write_checkpoint(pristine)                    # cp@1, an older one
+    want = {v: {(r.id, r.v) for r in read_export(spark, pristine, v).collect()}
+            for v in table_versions(pristine)}
+
+    def tree(dl):
+        return sorted(
+            os.path.relpath(os.path.join(r, f), dl)
+            for r, _, fs in os.walk(dl) for f in fs if not f.startswith(".tmp_")
+        )
+
+    def vacuum(dl, budget):
+        gate = _StopAfter(budget)
+        monkeypatch.setattr(D, "os", gate)
+        try:
+            D.vacuum_export(dl, keep_versions=2)
+        finally:
+            monkeypatch.setattr(D, "os", os)
+        return gate.steps
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(pristine, clean)
+    steps = vacuum(clean, float("inf"))
+    n_data = len(steps) - 6
+    assert steps[:6] == [
+        f"{3:020d}.checkpoint.parquet", "_last_checkpoint", f"{2:020d}.json",
+        f"{1:020d}.json", f"{0:020d}.json", f"{1:020d}.checkpoint.parquet",
+    ]
+    assert n_data >= 1 and all(s.endswith(".parquet") for s in steps[6:])
+    assert table_versions(clean) == [3, 4]
+
+    for budget in range(len(steps)):
+        dl = str(tmp_path / f"crash{budget}")
+        shutil.copytree(pristine, dl)
+        with pytest.raises(InterruptedError):
+            vacuum(dl, budget)
+        listed = table_versions(dl)
+        assert listed[-2:] == [3, 4], budget
+        for v in listed:
+            got = {(r.id, r.v) for r in read_export(spark, dl, v).collect()}
+            assert got == _protocol_rows(dl, v) == want[v], (budget, v)
+        D.vacuum_export(dl, keep_versions=2)
+        assert tree(dl) == tree(clean), budget
+        for v in (3, 4):
+            assert _protocol_rows(dl, v) == want[v]

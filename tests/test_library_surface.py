@@ -30,7 +30,6 @@ CALLER_DIRS = ("sync_spark", "perfbench", "scripts")
 TEST_ONLY = {
     "functions/multimodal.py:image_stats": ("row", "Multimodal columns"),
     "functions/multimodal.py:resize_meta": ("row", "Multimodal columns"),
-    "functions/multimodal.py:synthetic_media_table": ("row", "Multimodal columns"),
     "functions/schema_utils.py:flatten_schema": ("row", "Schema inference / flatten"),
     "functions/schema_utils.py:infer_json_schema": ("row", "Schema inference / flatten"),
     "functions/schema_utils.py:select_dotted": ("row", "Schema inference / flatten"),
@@ -62,11 +61,9 @@ TEST_ONLY = {
     "operators/skew.py:hot_keys": ("row", "Skew handling"),
     "operators/skew.py:salted_agg": ("row", "Skew handling"),
     "operators/skew.py:skew_broadcast_join": ("row", "Skew handling"),
-    "operators/tpch_queries.py:synth_partsupp": ("reference", "tests/test_cross_impl_checks.py"),
     "sources/cdc.py:KAFKA_RAW_SCHEMA": ("row", "S2"),
     "sources/cdc.py:debezium_envelope": ("row", "S2"),
     "sources/cdc.py:prune_event_log": ("row", "S10"),
-    "sources/delta_export.py:replay_log": ("reference", "tests/test_delta_export.py"),
     "sources/jdbc.py:predicate_partitions": ("row", "JDBC partitioned reads"),
     "sources/jdbc.py:read_jdbc": ("row", "JDBC partitioned reads"),
     "sources/jdbc.py:write_jdbc": ("row", "JDBC partitioned reads"),

@@ -3,6 +3,7 @@ feature / frame-sample pipelines, binaryFile ingestion, stub gating."""
 
 from __future__ import annotations
 
+import hashlib
 import struct
 import zlib
 
@@ -10,15 +11,66 @@ import pytest
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sync_spark.functions.multimodal import (
+    _FAKE_MAGIC,
     _decode_payload,
     decode_media,
-    fake_payload,
     resize_meta,
     sample_frames,
-    synthetic_media_table,
 )
+
+# a media table: the columns the kernels read (media_id, kind,
+# payload) plus the container metadata a catalog would carry
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("kind", T.StringType(), False),  # image | audio | video
+        T.StructField("payload", T.BinaryType(), True),
+        T.StructField(
+            "meta",
+            T.StructType(
+                [
+                    T.StructField("format", T.StringType()),
+                    T.StructField("width", T.IntegerType()),
+                    T.StructField("height", T.IntegerType()),
+                    T.StructField("duration_ms", T.IntegerType()),
+                    T.StructField("size_bytes", T.LongType()),
+                ]
+            ),
+        ),
+    ]
+)
+
+
+def fake_payload(media_id: int, kind: str, width: int, height: int, duration_ms: int) -> bytes:
+    """Deterministic fake media bytes the decoder recognizes: magic +
+    dims header + seeded body, so a test can drive the whole pipeline
+    without a codec."""
+    body = hashlib.sha256(f"{kind}:{media_id}".encode()).digest() * 4
+    return _FAKE_MAGIC + struct.pack("<iii", width, height, duration_ms) + body
+
+
+def synthetic_media_table(spark, n: int = 64):
+    """Deterministic fake corpus of ``n`` rows, kinds image/audio/video
+    in turn."""
+    rows = []
+    kinds = ["image", "audio", "video"]
+    for i in range(n):
+        kind = kinds[i % 3]
+        w, h = (64 + i % 7 * 32, 48 + i % 5 * 32) if kind == "image" else (0, 0)
+        dur = 0 if kind == "image" else 1000 + (i % 10) * 500
+        payload = fake_payload(i, kind, w, h, dur)
+        rows.append(
+            (
+                i,
+                kind,
+                payload,
+                {"format": "fake", "width": w, "height": h, "duration_ms": dur, "size_bytes": len(payload)},
+            )
+        )
+    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def test_decode_media_schema_and_values(spark):
@@ -116,7 +168,7 @@ def test_wav_decode_and_features(spark):
             meta=None),
         Row(media_id=2, kind="audio", payload=None, meta=None),
     ]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
+    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
     dec = {r.media_id: r for r in M.decode_media(df).collect()}
     assert dec[0].duration_ms == 1000 and dec[1].duration_ms == 500
     assert dec[2].duration_ms is None
@@ -135,7 +187,7 @@ def test_ppm_decode_and_stats(spark):
 
     p = M.ppm_payload(3, width=8, height=6)
     df = spark.createDataFrame(
-        [Row(media_id=3, kind="image", payload=p, meta=None)], M.MEDIA_SCHEMA
+        [Row(media_id=3, kind="image", payload=p, meta=None)], MEDIA_SCHEMA
     )
     dec = M.decode_media(df).collect()[0]
     assert (dec.width, dec.height) == (8, 6)
@@ -198,7 +250,7 @@ def test_corrupt_media_yields_null_rows_not_dead_batches(spark):
         Row(media_id=5, kind="image", payload=b"P6\nnot a number\n", meta=None),
         Row(media_id=6, kind="image", payload=b"P6\n100 100\n255\n" + b"\x00" * 10, meta=None),
     ]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
+    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
     af = {r.media_id: r for r in M.audio_features(df).collect()}
     assert af[0].rms is not None
     assert af[1].rms is None and af[2].rms is None and af[3].rms is None
@@ -223,7 +275,7 @@ def test_8bit_wav_silence_has_zero_rms(spark):
     body += b"data" + S.pack("<I", len(data)) + data
     wav = b"RIFF" + S.pack("<I", len(body)) + body
     df = spark.createDataFrame(
-        [Row(media_id=0, kind="audio", payload=wav, meta=None)], M.MEDIA_SCHEMA
+        [Row(media_id=0, kind="audio", payload=wav, meta=None)], MEDIA_SCHEMA
     )
     r = M.audio_features(df).collect()[0]
     assert r.rms == 0.0 and r.peak == 0.0 and r.n_samples == 800
@@ -243,7 +295,7 @@ def test_float32_wav_features(spark):
     body += b"data" + S.pack("<I", len(data)) + data
     wav = b"RIFF" + S.pack("<I", len(body)) + body
     df = spark.createDataFrame(
-        [Row(media_id=0, kind="audio", payload=wav, meta=None)], M.MEDIA_SCHEMA
+        [Row(media_id=0, kind="audio", payload=wav, meta=None)], MEDIA_SCHEMA
     )
     r = M.audio_features(df).collect()[0]
     assert abs(r.rms - 0.5) < 1e-9 and abs(r.peak - 0.5) < 1e-9
@@ -276,7 +328,7 @@ def test_more_malformed_wav_ppm_variants_yield_nulls(spark):
         Row(media_id=3, kind="image", payload=b"P6\n-1 4\n255\n" + b"\x00" * 48, meta=None),
         Row(media_id=4, kind="image", payload=b"P6\n0 0\n255\n", meta=None),
     ]
-    df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
+    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
     af = {r.media_id: r for r in M.audio_features(df).collect()}
     for mid in (0, 1, 2):
         assert af[mid].rms is None, mid

@@ -250,17 +250,13 @@ def test_tz_fmt_converts_aware_datetimes():
 
 
 def test_multimodal_null_payload_rows_survive(spark):
-    from sync_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-        fake_payload,
-    )
+    from sync_spark.functions.multimodal import decode_media, ppm_payload
 
     rows = [
-        Row(media_id=1, kind="image", payload=fake_payload(1, "image", 64, 48, 0), meta=None),
+        Row(media_id=1, kind="image", payload=ppm_payload(1, 64, 48), meta=None),
         Row(media_id=2, kind="image", payload=None, meta=None),
     ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    df = spark.createDataFrame(rows, "media_id long, kind string, payload binary, meta string")
     dec = {r.media_id: r for r in decode_media(df).collect()}
     assert dec[1].width == 64
     assert dec[2].width is None and dec[2].size_bytes is None

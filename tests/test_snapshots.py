@@ -312,9 +312,8 @@ def test_rollback_restores_bucket_layout(spark, tmp_path):
 
 
 def test_rollback_after_expiry_keeps_version_layout(spark, tmp_path):
-    """Expiry collapses the oldest retained version into a base commit;
-    that commit must carry the version's OWN bucket layout, not the
-    latest one. Two versions under 8 buckets, re-bucketize to 4, a
+    """Expiry checkpoints the oldest retained version; that version
+    must keep its OWN bucket layout, not the latest one. Two versions under 8 buckets, re-bucketize to 4, a
     third version, expire to 2, roll back to the oldest retained: the
     layout is 8 and point lookups find every key."""
     tgt = str(tmp_path / "t")
